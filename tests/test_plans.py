@@ -23,6 +23,7 @@ Two gates enforce this:
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -144,6 +145,100 @@ def test_no_hard_broadcast_on_linear_growth_tables():
     )
 
 
+# Materialization policy: the engine materializes one way only —
+# localCheckpoint — and only where a measurement (or lineage truncation
+# in an iterative loop) says it pays. persist()/cache() leak a cache
+# entry past the call (a builder returns a lazy frame, so nothing
+# unpersists it and later identical plans time as cache hits);
+# StorageLevel choices and join hints are knobs Catalyst and AQE get
+# right without. Keys: file -> {outermost enclosing def: (sites, reason)}.
+# The source carries the same reason beside each call.
+CHECKPOINTS = {
+    "functions/text.py": {
+        "x_cooccur_pairs": (1, "measured: explode+distinct feeds census and self-join"),
+        "x_topk_sketch": (1, "measured: Arrow Misra-Gries pass feeds two consumers"),
+    },
+    "functions/vector.py": {
+        "x_embed_outliers": (1, "measured: unit fold feeds centroid fold and scoring"),
+        "_lsh_bands": (1, "structural: the _lsh_bands_sized frame, fixed constants"),
+        "_lsh_bands_sized": (1, "measured: band keys feed census and both join sides"),
+        "_apply_bucket_cap": (1, "structural: split-key frame feeds both join sides"),
+    },
+    "operators/dedup.py": {
+        "x_dedup_minhash_lsh": (1, "measured: Arrow index feeds banding and verification"),
+        "incremental_dedup_verdicts": (1, "measured: capped postings feed four consumers"),
+    },
+    "operators/graph.py": {
+        "pagerank": (4, "structural: iterative state, lineage truncated per round"),
+        "triangle_counts": (1, "measured: edge feed backs three self-joins"),
+    },
+    "operators/tpch_extra.py": {
+        "q11_important_parts": (1, "measured: per-part agg feeds threshold and mean"),
+        "q15_top_supplier": (1, "measured: per-supplier agg feeds filter and max"),
+    },
+    "operators/pipeline.py": {
+        "x_mixture_plan": (1, "measured: census feeds total and rate frame"),
+        "x_crosstab_chi2": (1, "measured: cells feed four consumers"),
+        "x_mixture_sample": (1, "measured: census feeds total and rate frame"),
+    },
+}
+
+# attribute calls that create a session-level cache entry or pin a plan
+_BANNED_CALLS = {"persist", "cache", "cacheTable", "hint"}
+# the field holding an identifier, per node type that can name StorageLevel
+_IDENT = {ast.Name: "id", ast.Attribute: "attr", ast.alias: "name"}
+
+
+def _materialization_sites(tree):
+    """Yield (outermost enclosing def, kind) for every localCheckpoint
+    call, banned call and StorageLevel reference in a module AST."""
+
+    def walk(node, fn):
+        for child in ast.iter_child_nodes(node):
+            owner = fn
+            if fn is None and isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                owner = child.name
+            if isinstance(child, ast.Call) and isinstance(child.func, ast.Attribute):
+                if child.func.attr == "localCheckpoint" or child.func.attr in _BANNED_CALLS:
+                    yield owner, child.func.attr
+            field = _IDENT.get(type(child))
+            if field and getattr(child, field) == "StorageLevel":
+                yield owner, "StorageLevel"
+            yield from walk(child, owner)
+
+    yield from walk(tree, None)
+
+
+def test_one_materialization_idiom():
+    banned, unlisted, seen = [], [], {}
+    for py in sorted(PKG.rglob("*.py")):
+        rel = py.relative_to(PKG).as_posix()
+        for fn, kind in _materialization_sites(ast.parse(py.read_text())):
+            if kind == "localCheckpoint":
+                seen[(rel, fn)] = seen.get((rel, fn), 0) + 1
+            else:
+                banned.append(f"{rel}:{fn}: {kind}")
+    for (rel, fn), n in seen.items():
+        want = CHECKPOINTS.get(rel, {}).get(fn, (0, ""))[0]
+        if n != want:
+            unlisted.append(f"{rel}:{fn}: {n} localCheckpoint(s), allowlisted {want}")
+    stale = [
+        f"{rel}:{fn}"
+        for rel, sites in CHECKPOINTS.items()
+        for fn in sites
+        if (rel, fn) not in seen
+    ]
+    assert not banned, (
+        "persist/cache/StorageLevel/hint in the engine — materialize with "
+        f"a measured localCheckpoint or not at all: {banned}"
+    )
+    assert not unlisted, (
+        "localCheckpoint site(s) not in tests/test_plans.py CHECKPOINTS — "
+        f"measure it against the plain plan and record the reason: {unlisted}"
+    )
+    assert not stale, f"CHECKPOINTS lists sites that no longer exist: {stale}"
+
+
 @pytest.fixture(scope="module")
 def sf_correct():
     from tests.conftest import SF_CORRECT
@@ -227,3 +322,76 @@ def test_bounded_dim_hints_survive_threshold_off(spark, sf_correct):
     n_bhj = len(re.findall(r"\(\d+\) BroadcastHashJoin", plan))
     assert n_bhj == 2  # nation + region hints
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan  # customer
+
+
+@pytest.mark.parametrize(
+    "qname", ["x_dedup_minhash_lsh", "q11_important_parts", "q15_top_supplier"]
+)
+def test_builders_leave_no_cache_behind(spark, sf_correct, qname):
+    """A builder returns a lazy frame, so nothing would ever unpersist a
+    cache it registered: the entry outlives the call and every later
+    identical plan reads it (a benchmark repeat then times a cache hit).
+    After a run the session's cache manager must be empty."""
+    from tutorial_iceberg_spark.registry import all_queries
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    assert all_queries()[qname].builder(spark, sf_correct).collect()
+    assert cache_manager.isEmpty(), f"{qname} left a cached plan behind"
+
+
+def _executed_nodes(df) -> list:
+    """Every node of the executed (post-AQE) physical plan, descending
+    into adaptive plans and query stages."""
+    nodes, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        nodes.append(node)
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif kind.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        else:
+            children = node.children()
+            stack.extend(children.apply(i) for i in range(children.size()))
+    return nodes
+
+
+def _below_codegen(node):
+    while node.getClass().getSimpleName() in (
+        "WholeStageCodegenExec", "InputAdapter", "AQEShuffleReadExec"
+    ):
+        node = node.children().apply(0)
+    return node
+
+
+@pytest.mark.parametrize("qname", ["x_tfidf_terms", "x_keyword_extract"])
+def test_term_census_is_partial_aggregated(spark, sf_correct, qname):
+    """The df census over a natural-language key stays skew-safe: no
+    materialized-RDD scan, no window partitioned by term (no map-side
+    partial; a stopword's postings land in one task), and the exchange
+    keyed on term alone carries map-side partial_count rows."""
+    from tutorial_iceberg_spark.registry import all_queries
+
+    df = all_queries()[qname].builder(spark, sf_correct)
+    assert df.collect()
+    nodes = _executed_nodes(df)
+    kinds = {n.getClass().getSimpleName() for n in nodes}
+    assert "RDDScanExec" not in kinds, f"{qname}: scans a materialized RDD"
+    assert "LogicalRDD" not in df._jdf.queryExecution().optimizedPlan().toString()
+    for n in nodes:
+        if n.getClass().getSimpleName() == "WindowExec":
+            spec = n.partitionSpec().toString()
+            assert not re.search(r"\bterm#", spec), f"{qname}: Window by term"
+    census = [
+        _below_codegen(n.child())
+        for n in nodes
+        if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+        and re.fullmatch(r"hashpartitioning\(term#\d+, \d+\)",
+                         n.outputPartitioning().toString())
+    ]
+    assert census, f"{qname}: no exchange keyed on term alone"
+    for below in census:
+        assert below.getClass().getSimpleName() == "HashAggregateExec"
+        assert "partial_count" in below.toString(), below.toString()

@@ -240,3 +240,36 @@ def test_scratch_dir_touches_heartbeat(tmp_path):
         assert hb.exists()
     finally:
         scratch.set_scratch_root(None)
+
+
+@pytest.mark.parametrize(
+    "var, module, attr, default",
+    [
+        ("TIS_STREAM_SHUFFLE_PARTITIONS", "tutorial_iceberg_spark.streaming.events_stream",
+         "STREAM_SHUFFLE_PARTITIONS", 4),
+        ("TIS_MANIFEST_CACHE_ENTRIES", "tutorial_iceberg_spark.lakehouse.metadata",
+         "_MANIFEST_CACHE_MAX_ENTRIES", 2_000_000),
+    ],
+)
+@pytest.mark.parametrize("raw", ["x", "0"])
+def test_bad_import_time_env_falls_back(var, module, attr, default, raw):
+    """A malformed or non-positive import-time env var must not crash the
+    package import: it warns and keeps the default."""
+    import subprocess
+    import sys
+
+    code = (
+        "import importlib\n"
+        "from tutorial_iceberg_spark.registry import all_queries\n"
+        "all_queries()\n"
+        f"print(getattr(importlib.import_module({module!r}), {attr!r}))\n"
+    )
+    env = {**os.environ, var: raw}
+    proc = subprocess.run(
+        [sys.executable, "-c", code], env=env, capture_output=True, text=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr
+    assert proc.stdout.strip().splitlines()[-1] == str(default)
+    assert f"ignoring malformed {var}={raw!r}" in proc.stderr

@@ -1,10 +1,14 @@
-"""Dump .explain('formatted') for headline queries into plans/r16/.
+"""Dump .explain('formatted') of registered queries into a directory.
 
-Usage: python tools/dump_r16_plans.py <suffix> [names...]
-  suffix: 'before' or 'after'
-  names: query names (default: the bench HEADLINE set)
+Usage: python tools/dump_query_plans.py <out_dir> <suffix> [names...]
+  out_dir: where to write, e.g. plans/r17 (created if missing)
+  suffix:  file-name tag, e.g. 'before' or 'after'
+  names:   query names (default: the bench HEADLINE set)
 
-The judge checks plan claims in OPTIMIZATION_r16.md against these files.
+Writes <out_dir>/<name>_<suffix>.txt per query, so a plan change is
+recorded as a before/after pair that a reader can diff. Reads the tables
+from $SPARK_GRAFT_SF_DIR (default: the committed sf0.1 copy under
+perfbench/data).
 """
 
 from __future__ import annotations
@@ -14,27 +18,26 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from tutorial_iceberg_spark.registry import all_queries  # noqa: E402
 from tutorial_iceberg_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    out_dir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     if not names:
         import bench
 
         names = list(bench.HEADLINE)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r16",
+    sf_dir = os.environ.get(
+        "SPARK_GRAFT_SF_DIR", os.path.join(ROOT, "perfbench", "data", "sf0.1")
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(app_name="dump-r16-plans")
+    spark = get_spark(app_name="dump-query-plans")
     specs = all_queries()
     for name in names:
         try:

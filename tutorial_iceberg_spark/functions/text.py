@@ -10,7 +10,6 @@ vectorized at 100 TB: each operator is a single scan + narrow projection
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -23,6 +22,18 @@ from tutorial_iceberg_spark.registry import register
 
 def tokens(col: str = "text") -> Column:
     return F.split(F.trim(F.col(col)), r"\s+")
+
+
+def doc_term_tf(docs: DataFrame) -> DataFrame:
+    r"""(doc_id, term, dl, tf) over the lower-cased whitespace tokens, dl
+    being the document length. One hash agg with map-side partials (DuckDB
+    mirror: unnest(string_split_regex(trim(lower(text)), '\s+')) grouped
+    by doc_id, term). Column pruning drops dl for callers that ignore it."""
+    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    tok = docs.select("doc_id", F.size(toks).alias("dl"), F.explode(toks).alias("term"))
+    return tok.groupBy("doc_id", "term").agg(
+        F.max("dl").alias("dl"), F.count("*").alias("tf")
+    )
 
 
 @register(
@@ -362,12 +373,14 @@ def x_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Keyword extraction (SURVEY §2.11 text): per-doc top-3 terms by "
     "term frequency, with corpus-frequent terms (document frequency > 50% "
     "of docs) dropped as stopwords. Integer-only tf/df ranking — the "
-    "tf-idf ordering without cross-engine float log. Scale: ONE explode -> "
-    "tf hash agg (map-side partial); df derives from the tf table (rows "
-    "there are unique per (doc,term), so df = COUNT(*) per term) instead "
-    "of a second explode pass; the vocabulary-sized df table joins with NO "
-    "forced broadcast (AQE decides from real size); the exploded token "
-    "stream never sorts globally",
+    "tf-idf ordering without cross-engine float log. Scale: explode -> "
+    "tf hash agg (map-side partial); df = COUNT(*) per term over the tf "
+    "rows (unique per (doc,term)), itself map-side partial-aggregated, so "
+    "a hot term never funnels its postings into one task; Catalyst "
+    "re-derives the explode for the df census above a reused scan "
+    "exchange; the vocabulary-sized df table joins with NO hint (AQE "
+    "picks the strategy from real sizes); the exploded token stream never "
+    "sorts globally",
     tags=("text", "extension"),
 )
 def x_keyword_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -376,24 +389,10 @@ def x_keyword_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus size as a broadcast 1-row aggregate, not a .count() driver
     # job: the whole query stays ONE plan (one submission per run)
     n_docs = docs.agg(F.count("*").alias("n_docs"))
-    tok = docs.select(
-        "doc_id",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("term"),
-    )
-    # tf materialized ONCE (localCheckpoint), df derived from it by
-    # groupBy — tf rows are unique per (doc, term), so COUNT(*) per term
-    # IS the document frequency — then joined back. One corpus tokenize
-    # pass (the checkpoint stops Catalyst re-deriving the explode+agg
-    # subtree for the census), WITH map-side partial aggregation for the
-    # df census — the r16 COUNT(*) OVER (PARTITION BY term) form funneled
-    # every posting of a hot term into one window task (guide §2.5; r16
-    # VERDICT item 2 — same fix as x_tfidf_terms). The stopword filter
-    # (df > 50% of docs) is applied to the vocabulary-sized df frame
-    # BEFORE the join, so the hottest keys never reach the join at all
-    # and stopword tf rows drop via the inner join — identical keep set.
-    tf = tok.groupBy("doc_id", "term").agg(
-        F.count("*").alias("tf")
-    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    tf = doc_term_tf(docs)
+    # The stopword filter (df > 50% of docs) runs on the vocabulary-sized
+    # df frame BEFORE the join, so the hottest keys never reach the join
+    # and stopword tf rows drop via the inner join.
     keep_terms = (
         tf.groupBy("term")
         .agg(F.count("*").alias("df"))
@@ -401,11 +400,9 @@ def x_keyword_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("df") * 2 <= F.col("n_docs"))
         .select("term", "df")
     )
-    # merge hint: same stats-less-LogicalRDD reason as x_tfidf_terms —
-    # unhinted, the static planner BROADCAST the corpus-sized tf side.
     wr = Window.partitionBy("doc_id").orderBy(F.desc("tf"), "term")
     return (
-        tf.join(keep_terms.hint("merge"), "term")
+        tf.join(keep_terms, "term")
         .withColumn("rk", F.row_number().over(wr))
         .filter(F.col("rk") <= 3)
         .select("doc_id", "term", "tf", "df")
@@ -758,50 +755,32 @@ TFIDF_TOP = 3
     "the log-free probabilistic idf (N-df+0.5)/(df+0.5) — same trick as "
     "x_bm25_search: JVM Math.log and DuckDB ln differ by 1 ulp on ~7% of "
     "inputs (measured), so the weight is kept an exact IEEE chain and the "
-    "whole result stays hash-checkable. Scale shape: one explode pass, tf "
-    "hash agg (map-side partials), df re-aggregated FROM tf (O(vocab) "
-    "rows) and joined back on term — a shuffle equi-join, NOT broadcast: "
-    "vocabulary is unbounded at 100 TB. The 1-row doc count broadcasts; "
+    "whole result stays hash-checkable. Scale shape: explode -> tf hash "
+    "agg (map-side partials), df re-aggregated FROM tf (O(vocab) rows, "
+    "map-side partials, so a hot term never funnels into one task; "
+    "Catalyst re-derives the explode for this census above a reused scan "
+    "exchange) and joined back on term with NO hint — AQE picks the "
+    "strategy from real sizes (broadcast at sf0.1, a skew-splittable "
+    "shuffle join once the vocabulary outgrows the threshold). The 1-row "
+    "doc count broadcasts; "
     "the final top-k window partitions by doc_id, whose size is bounded "
     "by document length, never corpus size",
     tags=("text", "extension"),
 )
 def x_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    tok = docs.select(
-        "doc_id",
-        F.size(toks).alias("dl"),
-        F.explode(toks).alias("term"),
-    )
-    # tf materialized ONCE (localCheckpoint — the x_cooccur_pairs /
-    # x_dedup_incremental idiom), then df derived from it by groupBy+join.
-    # History: the r15 groupBy+join form built the scan->explode->tf
-    # subtree TWICE (Catalyst re-derives unmaterialized subtrees, column
-    # pruning specializes each copy — plans/r16/x_tfidf_terms_before.txt);
-    # the r16 fix used COUNT(*) OVER (PARTITION BY term), which keeps one
-    # tokenize pass but is a skew trap at 100 TB: a window partitioned on
-    # a natural-language key has NO map-side partial aggregation and
-    # forces every posting of a hot term (stopwords) into ONE task (guide
-    # §2.5; r16 VERDICT item 2). The materialize+groupBy+join form keeps
-    # both properties: one tokenize pass AND partial aggregation for the
-    # df census; the term join is AQE-skew-splittable where the window
-    # was not. Still no broadcast of the vocabulary — unbounded at 100 TB.
-    tf = tok.groupBy("doc_id", "term").agg(
-        F.max("dl").alias("dl"), F.count("*").alias("tf")
-    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    tf = doc_term_tf(docs)
+    # df by groupBy, never COUNT(*) OVER (PARTITION BY term): a window has
+    # no map-side partial, so a stopword's postings would land in one task
+    # (tests/test_plans.py gates the executed plan)
     term_df = tf.groupBy("term").agg(F.count("*").alias("df"))
     n = docs.agg(F.count("*").alias("n_docs"))
     score = (F.col("tf").cast("double") / F.col("dl").cast("double")) * (
         ((F.col("n_docs").cast("double") - F.col("df").cast("double")) + 0.5)
         / (F.col("df").cast("double") + 0.5)
     )
-    # merge hint: the checkpointed tf is a stats-less LogicalRDD, so the
-    # static planner's size estimates here are garbage — unhinted it chose
-    # to BROADCAST the vocabulary-sized df frame (unbounded at 100 TB).
-    # SMJ is the scale-safe strategy and AQE can skew-split it.
     scored = (
-        tf.join(term_df.hint("merge"), "term")
+        tf.join(term_df, "term")
         .crossJoin(F.broadcast(n))
         .select("doc_id", "term", "tf", "df", score.alias("score"))
     )
@@ -861,11 +840,10 @@ def x_cooccur_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.lower("t").alias("tok"))
         .distinct()
     )
-    # tok feeds BOTH the df census and the self-join; without a
-    # materialization the explode+distinct runs twice (VERDICT r6 nit).
-    # localCheckpoint truncates the lineage and reuses the shuffle files;
-    # eager=False defers it to the first action.
-    tok = tok.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    # tok feeds BOTH the df census and the self-join. Checkpointed, the
+    # explode+distinct runs once: sf0.1, 10 A/B pairs, 1.00 s vs 1.39 s
+    # plain (slower in 10 of 10).
+    tok = tok.localCheckpoint(eager=False)
     dfreq = tok.groupBy("tok").agg(F.count("*").alias("df"))
     vocab = dfreq.orderBy(F.desc("df"), "tok").limit(COOCCUR_VOCAB).select("tok")
     tv = tok.join(vocab, "tok")
@@ -960,7 +938,8 @@ def x_topk_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     partials = docs.mapInPandas(mg_partial, "token string, cnt long, decr long")
     # the partials frame is O(partitions * capacity) — tiny; materialize
-    # once so the two consumers below don't re-run the corpus pass
+    # once so the two consumers below don't re-run the corpus pass:
+    # sf0.1, 10 A/B pairs, 0.51 s vs 0.75 s plain (slower in 10 of 10)
     partials = partials.localCheckpoint(eager=True)
     decr_tot = partials.agg(F.sum("decr").alias("err_bound"))
     merged = (

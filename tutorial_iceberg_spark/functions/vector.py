@@ -251,7 +251,8 @@ def x_embed_outliers(
     # partition-invariant by construction.
     emb = load_table(spark, sf_dir, "embeddings", spread=True)
     # u feeds BOTH the centroid fold and the scoring pass; materialize it
-    # once (the per-row unit fold is interpreted HOF work worth reusing)
+    # once (the per-row unit fold is interpreted HOF work worth reusing):
+    # sf0.1, 10 A/B pairs, 0.99 s vs 2.04 s plain (slower in 10 of 10)
     u = emb.select(
         "vec_id", "label", _unit(F.col("embedding")).alias("u")
     ).localCheckpoint(eager=False)
@@ -736,7 +737,8 @@ def _lsh_bands(
     # realized by the first downstream job): the bucket census and BOTH
     # sides of the candidate self-join read this frame, so without a
     # barrier the Arrow signature matmul re-runs 3+ times per call
-    # (round-9 ADVICE low). Two checkpoint generations — far under this
+    # (round-9 ADVICE low; the same frame in _lsh_bands_sized measured
+    # 3.16 s vs 4.21 s plain). Two checkpoint generations — far under this
     # build's measured ~16-generation localCheckpoint cliff.
     bands = bands.localCheckpoint(eager=False)
     if not bucket_cap:
@@ -758,7 +760,9 @@ def _apply_bucket_cap(bands: DataFrame, rb: int, bucket_cap: int) -> DataFrame:
     # reserve width, so the WORST-CASE residual bound is 2^rb * cap rows
     # in one sub-bucket (a bucket denser than that cannot split further
     # on rb reserve bits). The clamp binding is surfaced, never silent —
-    # see the census check below.
+    # see the census check below. Not checkpointed: the clamp check and
+    # the join each re-aggregate it from the checkpointed bands (sf0.01
+    # x_sim_join_lsh_auto, 10 A/B pairs: 2.76 s vs 2.80 s checkpointed).
     sizes = (
         bands.groupBy("band", "key")
         .agg(F.count("*").alias("cnt"))
@@ -783,7 +787,7 @@ def _apply_bucket_cap(bands: DataFrame, rb: int, bucket_cap: int) -> DataFrame:
             .otherwise(F.lit(0))
             .alias("extra"),
         )
-    ).localCheckpoint(eager=False)  # tiny; read by clamp check + join
+    )
     # No silent caps (repo convention): if any bucket exceeds
     # 2^rb * cap, the reserve width cannot fully split it and the
     # O(n_bands * n * cap) candidate bound quietly degrades toward the
@@ -835,6 +839,8 @@ def _apply_bucket_cap(bands: DataFrame, rb: int, bucket_cap: int) -> DataFrame:
         )
         # both sides of the downstream self-join alias this frame;
         # checkpoint so the split-key join computes once, not per alias
+        # (structural: only reached when a bucket exceeds the cap, which
+        # no fixture does, so not A/B-measured)
         .localCheckpoint(eager=False)
     )
 
@@ -1048,7 +1054,10 @@ def _lsh_bands_sized(
             F.col("kr.keys").alias("key"),
             F.col("kr.rkeys").alias("rkey"),
         )
-        .localCheckpoint(eager=False)  # census + both self-join sides read this
+        # census + both self-join sides read this: sf0.01
+        # x_sim_join_lsh_auto, 10 A/B pairs, 3.16 s vs 4.21 s plain
+        # (slower in 10 of 10)
+        .localCheckpoint(eager=False)
     )
     if not bucket_cap:
         return bands.drop("rkey")

@@ -30,6 +30,8 @@ from collections import OrderedDict
 from dataclasses import asdict, dataclass, field, fields
 from typing import Any
 
+from tutorial_iceberg_spark.scratch import env_number
+
 # Format 2 (r14): snapshots carry manifest REFERENCES — each manifest's
 # entries live in an immutable content-addressed sidecar file
 # (metadata/manifest-{sha1}.json) written once and carried by reference
@@ -332,9 +334,7 @@ def manifest_summary(md: TableMetadata, entries: list[DataFile]) -> dict:
 # via TIS_MANIFEST_CACHE_ENTRIES for memory-tight deployments
 # (r14 review: the previous 4M ceiling read as a leak in long-lived
 # drivers).
-_MANIFEST_CACHE_MAX_ENTRIES = int(
-    os.environ.get("TIS_MANIFEST_CACHE_ENTRIES", 2_000_000)
-)
+_MANIFEST_CACHE_MAX_ENTRIES = env_number("TIS_MANIFEST_CACHE_ENTRIES", 2_000_000, int)
 _manifest_cache: OrderedDict[str, tuple] = OrderedDict()
 _manifest_cache_entries = 0
 _manifest_cache_lock = threading.Lock()

@@ -20,7 +20,6 @@ the LSH index uses crc32 (deterministic, C-speed in the Arrow batch path).
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -358,19 +357,13 @@ def x_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Jaccard over 31-bit hashed shingles equals string Jaccard up to
     # hash collisions — and bigint arrays intersect far cheaper than the
     # original string shingles.
-    # The signature+set table is consumed twice (banding, verification).
-    # Persist it rather than re-tokenize the corpus: it is the INDEX (one
-    # row per doc: 16 ints + the hash set), orders of magnitude smaller
-    # than the corpus text; MEMORY_AND_DISK spills gracefully — at extreme
-    # scale you would materialize it to a temp parquet instead, which is
-    # the same trade expressed durably.
-    from pyspark import StorageLevel
-
-    agg = (
-        doc_index(docs)
-        .withColumnRenamed("hs", "hset")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    # The index (one row per doc: 16 ints + the hash set) feeds banding
+    # AND both verification lookups; checkpointed, the Arrow pass runs
+    # once: sf0.1, 10 A/B pairs, 1.09 s vs 1.94 s plain and 1.38 s for a
+    # persist() with the cache cleared per call (slower in 10/10 each).
+    # Unlike persist(), the checkpoint's blocks go with the returned frame:
+    # no cache entry outlives the call for a later identical plan to hit.
+    agg = doc_index(docs).withColumnRenamed("hs", "hset").localCheckpoint(eager=False)
     sig = agg.select("doc_id", "sig")
     cand = lsh_candidate_pairs(sig)
     sets = agg.select("doc_id", "hset")
@@ -676,20 +669,21 @@ def incremental_dedup_verdicts(spark: SparkSession, docs: DataFrame) -> DataFram
     # posting list just to share one pass (tools/noop_pair_probe.py).
     # Downstream keeps its bounds: every surviving shingle has <= CAP
     # postings per side, so the b|><|c pair join stays skew-bounded by
-    # construction, and capped inherits post's doc_id partitioning so
-    # the sizes groupBy needs no exchange.
+    # construction. The sizes groupBy still pays a doc_id exchange over
+    # the capped frame: its checkpoint scan reports no doc_id partitioning
+    # (Exchange (22) in plans/r18/x_dedup_incremental_after.txt).
     hot = (
         post.groupBy("s")
         .agg(F.count("*").alias("df"))
         .filter(F.col("df") > SHINGLE_DF_CAP)
         .select("s")
     )
-    # capped is materialized ONCE (localCheckpoint): it feeds FOUR
-    # consumers below (sizes, batch side, corpus side via sizes x2), and
-    # without materialization Catalyst re-derived each one from the scan
-    # — the r16-before plan shows the 3-gram tokenize Generate running 8x
-    # per query (plans/r16/x_dedup_incremental_before.txt).
-    capped = post.join(hot, "s", "left_anti").localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    # capped is materialized ONCE: it feeds FOUR consumers below (sizes,
+    # batch side, corpus side via sizes x2), and without materialization
+    # Catalyst re-derives each one from the scan (the 3-gram tokenize
+    # Generate ran 8x per query, plans/r16/x_dedup_incremental_before.txt).
+    # sf0.1, 10 A/B pairs: 3.54 s vs 4.69 s plain (slower in 10 of 10).
+    capped = post.join(hot, "s", "left_anti").localCheckpoint(eager=False)
     sz = capped.groupBy("doc_id").agg(F.count("*").alias("n"))
     b = capped.filter(F.col("is_batch")).select(
         F.col("doc_id").alias("batch_id"), "s"
@@ -834,8 +828,7 @@ def lake_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is_batch", F.lit(True)
     )
     corpus = t.read(snapshot_id=first).withColumn("is_batch", F.lit(False))
-    # the verdict pipeline fans the doc frame into 4 consumers (posting
-    # lists, df cap, sizes, batch spine); materialize the snapshot reads
-    # once instead of re-planning the lakehouse scan per consumer
-    tagged = batch.unionByName(corpus).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-    return incremental_dedup_verdicts(spark, tagged)
+    # no checkpoint of the snapshot reads: the verdict pipeline already
+    # checkpoints its capped postings (sf0.1, 10 A/B pairs: 3.61 s plain
+    # vs 3.55 s checkpointed, faster in 4 of 10, bit-exact)
+    return incremental_dedup_verdicts(spark, batch.unionByName(corpus))

@@ -652,9 +652,11 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = PR_ITERS) -> DataF
     # would otherwise re-run per round — 10 rounds re-scoring the corpus.
     # O(edges) executor-local blocks; durable checkpoint on a cluster.
     edges = edges.localCheckpoint(eager=True)
+    # joined by every round: computed once
     out_deg = edges.groupBy(F.col("src").alias("id")).agg(
         F.count("*").alias("deg")
     ).localCheckpoint(eager=True)
+    # round-0 state; every round's state is checkpointed (loop below)
     ranks = nodes.select("id", F.lit(1.0 / n_row).alias("rank")).localCheckpoint(
         eager=True
     )
@@ -766,8 +768,8 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     extension, grouped with the dedup/graph operators).
     """
     # The edge feed (a similarity self-join) backs THREE self-joins plus
-    # the degree aggregation — materialize once, same reasoning as CC and
-    # PageRank above. O(edges) executor-local blocks.
+    # the degree aggregation — materialize once: sf0.01 x_triangle_count,
+    # 10 A/B pairs, 2.33 s vs 4.33 s plain (slower in 10 of 10).
     e = edges.select("left_id", "right_id").localCheckpoint(eager=True)
     wedge = (
         e.select(F.col("left_id").alias("a"), F.col("right_id").alias("b"))

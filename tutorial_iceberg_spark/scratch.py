@@ -79,23 +79,27 @@ def set_scratch_root(path: str | None) -> None:
         pass  # unreadable root: resolution itself will surface it
 
 
-def _grace_from_env() -> float:
-    """$TIS_SCRATCH_GRACE_SEC, falling back (with a warning) on garbage —
-    a malformed env var must not crash every session start (r10 ADVICE)."""
-    raw = os.environ.get(GRACE_ENV)
+def env_number(name: str, default: float, kind: type = float) -> float:
+    """``$name`` parsed as ``kind`` (``int`` or ``float``), falling back
+    (with a warning) to ``default`` when it is unset, malformed or not
+    positive — a bad env var must not crash the package import or a
+    session start."""
+    raw = os.environ.get(name)
     if raw is None:
-        return DEFAULT_GRACE_SEC
+        return default
     try:
-        return float(raw)
+        value = kind(raw)
     except ValueError:
+        value = None
+    if value is None or not value > 0:  # `not >` also rejects NaN
         import warnings
 
         warnings.warn(
-            f"ignoring malformed {GRACE_ENV}={raw!r}; "
-            f"using default {DEFAULT_GRACE_SEC}s",
-            stacklevel=3,
+            f"ignoring malformed {name}={raw!r}; using default {default}",
+            stacklevel=2,
         )
-        return DEFAULT_GRACE_SEC
+        return default
+    return value
 
 
 def _is_fresh(path: str, now: float, grace_sec: float) -> bool:
@@ -137,7 +141,7 @@ def reap_orphans(grace_sec: float | None = None) -> int:
     import time
 
     if grace_sec is None:
-        grace_sec = _grace_from_env()
+        grace_sec = env_number(GRACE_ENV, DEFAULT_GRACE_SEC)
     explicit = _override is not None or bool(os.environ.get(ENV_VAR))
     prefixes = _SCRATCH_PREFIXES if explicit else _UNAMBIGUOUS_PREFIXES
     root = scratch_root()

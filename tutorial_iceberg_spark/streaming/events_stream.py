@@ -28,6 +28,7 @@ from pyspark.sql.window import Window
 from tutorial_iceberg_spark.functions.numeric import dsum, o_dsum
 from tutorial_iceberg_spark.io import load_table, table_path
 from tutorial_iceberg_spark.registry import register
+from tutorial_iceberg_spark.scratch import env_number
 
 SESSION_GAP_MIN = 30
 
@@ -85,9 +86,7 @@ def read_events_stream(
 # rows this small). A long-lived production stream with real state volume
 # would instead size this to total executor cores: env-parameterized so
 # clusters can do exactly that without touching code.
-STREAM_SHUFFLE_PARTITIONS = int(
-    os.environ.get("TIS_STREAM_SHUFFLE_PARTITIONS", "4")
-)
+STREAM_SHUFFLE_PARTITIONS = env_number("TIS_STREAM_SHUFFLE_PARTITIONS", 4, int)
 
 # Observability: run_stream records the completed query's state-store
 # footprint here (max across micro-batches / operators). The 10x scale
