@@ -395,3 +395,103 @@ def test_term_census_is_partial_aggregated(spark, sf_correct, qname):
     for below in census:
         assert below.getClass().getSimpleName() == "HashAggregateExec"
         assert "partial_count" in below.toString(), below.toString()
+
+
+@pytest.mark.parametrize("qname", ["x_tfidf_terms", "x_keyword_extract"])
+def test_tf_splits_each_document_once(spark, sf_correct, qname):
+    """doc_term_tf tokenizes each document once. With size() and explode()
+    over the same split in one select, Catalyst carries ``text`` through
+    the Generate and re-splits it in a Project above, once per exploded
+    token (quadratic in document length). The executed plan must explode
+    a token array computed below the Generate, with no Project above it
+    reading ``text``, and no Filter splitting the text again (Catalyst
+    infers one from an explode of a bare column and pushes it to the
+    scan)."""
+    from tutorial_iceberg_spark.registry import all_queries
+
+    df = all_queries()[qname].builder(spark, sf_correct)
+    assert df.collect()
+    text = re.compile(r"\btext#\d+")
+    generates = []
+
+    def project_checks(node) -> bool:
+        """Check the subtree; True when it holds a Generate (so a Project
+        at this node is above one)."""
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            return project_checks(node.executedPlan())
+        if kind.endswith("QueryStageExec"):
+            return project_checks(node.plan())
+        children = node.children()
+        below = False
+        for i in range(children.size()):
+            below |= project_checks(children.apply(i))
+        if kind == "ProjectExec" and below:
+            assert not text.search(node.projectList().toString()), (
+                f"{qname}: Project above a Generate reads text: {node}"
+            )
+        if kind == "FilterExec":
+            assert "split(" not in node.condition().toString(), (
+                f"{qname}: a Filter splits the text again: {node}"
+            )
+        if kind == "GenerateExec":
+            generates.append(node)
+        return below or kind == "GenerateExec"
+
+    project_checks(df._jdf.queryExecution().executedPlan())
+    assert generates, f"{qname}: no Generate in the executed plan"
+    for g in generates:
+        assert not text.search(g.child().output().toString()), (
+            f"{qname}: the Generate carries text in its child output: {g}"
+        )
+
+
+# Schema policy for lakehouse reads: table metadata records the schema
+# every data file was written with, and delete files have fixed or
+# per-file schemas, so a lakehouse read passes its schema and never runs
+# Spark's one-task schema-inference job. Keys: file -> {enclosing def:
+# reason}; the source carries the same reason beside the call.
+UNSCHEMATIZED_READS = {
+    "lakehouse/table.py": {
+        "_write_files": "pyarrow cannot parse the footer (VARIANT); this "
+        "read counts the rows for the metadata entry being built",
+    },
+}
+
+
+def _unschematized_parquet_reads(tree):
+    """Yield the outermost enclosing def of every ``<x>.read.parquet(``
+    call — a parquet read with no ``.schema(`` between ``read`` and
+    ``parquet``."""
+
+    def walk(node, fn):
+        for child in ast.iter_child_nodes(node):
+            owner = fn
+            if fn is None and isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                owner = child.name
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "parquet"
+                and isinstance(child.func.value, ast.Attribute)
+                and child.func.value.attr == "read"
+            ):
+                yield owner
+            yield from walk(child, owner)
+
+    yield from walk(tree, None)
+
+
+def test_lakehouse_reads_pass_their_schema():
+    found = set()
+    for py in sorted((PKG / "lakehouse").rglob("*.py")):
+        rel = py.relative_to(PKG).as_posix()
+        for fn in _unschematized_parquet_reads(ast.parse(py.read_text())):
+            found.add((rel, fn))
+    allowed = {(rel, fn) for rel, fns in UNSCHEMATIZED_READS.items() for fn in fns}
+    assert not found - allowed, (
+        "lakehouse parquet read(s) without .schema( — pass the schema the "
+        "table metadata holds, or allowlist the site in "
+        f"UNSCHEMATIZED_READS with its reason: {sorted(found - allowed)}"
+    )
+    assert not allowed - found, f"stale UNSCHEMATIZED_READS: {sorted(allowed - found)}"

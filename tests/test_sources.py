@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from tutorial_iceberg_spark.io import load_table
@@ -149,3 +151,72 @@ def test_shard_corpus_is_deterministic(spark, sf_dir):
     a = [tuple(r) for r in x_shard_corpus(spark, sf_dir).collect()]
     b = [tuple(r) for r in x_shard_corpus(spark, sf_dir).collect()]
     assert a == b
+
+
+def _jobs_started(spark, fn):
+    """(number of Spark jobs ``fn()`` started, its result) — jobs are
+    numbered in submission order, so the difference between two reads of
+    the scheduler's next job id counts them."""
+
+    def next_job_id():
+        counter = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+        return counter if isinstance(counter, int) else int(counter.get())
+
+    before = next_job_id()
+    out = fn()
+    return next_job_id() - before, out
+
+
+def test_repeated_reads_start_no_schema_job(spark, sf_dir, tmp_path):
+    """Schema inference is a one-task Spark job per parquet read. A file
+    read before, and a lake table whose metadata holds its schema, must
+    plan with no Spark job at all; a file rewritten in place must be
+    inferred again."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tutorial_iceberg_spark.lakehouse.table import LakeTable
+
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    shutil.copyfile(table_path(sf_dir, "region"), table_path(sf, "region"))
+    load_table(spark, sf, "region")
+    n, again = _jobs_started(spark, lambda: load_table(spark, sf, "region"))
+    assert n == 0, f"second load_table of an unchanged file started {n} job(s)"
+    assert again.count() == 5
+
+    # same path, new content: the cached schema must not be served
+    pq.write_table(
+        pa.table({"r_regionkey": pa.array([7], pa.int64()), "extra": ["x"]}),
+        table_path(sf, "region"),
+    )
+    n, fresh = _jobs_started(spark, lambda: load_table(spark, sf, "region"))
+    assert n >= 1
+    assert fresh.columns == ["r_regionkey", "extra"]
+    assert [tuple(r) for r in fresh.collect()] == [(7, "x")]
+
+    t = LakeTable.create(spark, str(tmp_path / "lake"), "k bigint, v string")
+    t.append(spark.createDataFrame([(i, f"v{i}") for i in range(20)], "k bigint, v string"))
+    t.set_property("write.delete.mode", "merge-on-read")
+
+    def plans_without_jobs(kind, gone):
+        n, df = _jobs_started(spark, t.read)
+        assert n == 0, f"{kind}: LakeTable.read() started {n} job(s) before collect"
+        n, hi = _jobs_started(spark, lambda: t.scan("k >= 10"))
+        assert n == 0, f"{kind}: LakeTable.scan() started {n} job(s) before collect"
+        assert sorted(r.k for r in df.collect()) == [k for k in range(20) if k not in gone]
+        assert sorted(r.k for r in hi.collect()) == list(range(10, 20))
+
+    plans_without_jobs("no deletes", ())
+    t.set_property("write.delete.flavor", "position")
+    t.delete("k = 3")
+    plans_without_jobs("position delete", (3,))
+    t.compact()
+    t.set_property("write.delete.flavor", "equality")
+    t.delete("k = 4")
+    # an equality-delete file is read with its own schema: the first read
+    # after the delete may infer it, no later one does
+    t.read()
+    plans_without_jobs("equality delete", (3, 4))

@@ -28,9 +28,27 @@ def doc_term_tf(docs: DataFrame) -> DataFrame:
     r"""(doc_id, term, dl, tf) over the lower-cased whitespace tokens, dl
     being the document length. One hash agg with map-side partials (DuckDB
     mirror: unnest(string_split_regex(trim(lower(text)), '\s+')) grouped
-    by doc_id, term). Column pruning drops dl for callers that ignore it."""
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    tok = docs.select("doc_id", F.size(toks).alias("dl"), F.explode(toks).alias("term"))
+    by doc_id, term). Column pruning drops dl for callers that ignore it.
+
+    Each document is split once: the token array is aliased in one select
+    and exploded in the next, so dl is size() of the carried array. With
+    size() and explode() over the same split in one select, Catalyst
+    evaluates size(split(...)) in a Project above the Generate, once per
+    exploded token — quadratic in document length. The explode input is
+    guarded, not the bare column: for a bare attribute Catalyst infers
+    ``size(toks) > 0 AND toks IS NOT NULL`` and pushes it, alias
+    substituted, below the spread repartition, which splits every document
+    a second time in the lone scan task (x_keyword_extract at sf0.1, 16
+    interleaved runs on 4 cores: 0.745 s one-select, 0.866 s bare, 0.714 s
+    guarded). tests/test_plans.py gates the executed plan."""
+    toks = F.col("toks")
+    tok = docs.select(
+        "doc_id", F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("toks")
+    ).select(
+        "doc_id",
+        F.size(toks).alias("dl"),
+        F.explode(F.when(toks.isNotNull(), toks)).alias("term"),
+    )
     return tok.groupBy("doc_id", "term").agg(
         F.max("dl").alias("dl"), F.count("*").alias("tf")
     )
@@ -755,9 +773,11 @@ TFIDF_TOP = 3
     "the log-free probabilistic idf (N-df+0.5)/(df+0.5) — same trick as "
     "x_bm25_search: JVM Math.log and DuckDB ln differ by 1 ulp on ~7% of "
     "inputs (measured), so the weight is kept an exact IEEE chain and the "
-    "whole result stays hash-checkable. Scale shape: explode -> tf hash "
-    "agg (map-side partials), df re-aggregated FROM tf (O(vocab) rows, "
-    "map-side partials, so a hot term never funnels into one task; "
+    "whole result stays hash-checkable. Scale shape: each document split "
+    "once (doc_term_tf explodes the token array in its own select, so the "
+    "length dl is the size of that array, not a re-split per token) -> "
+    "tf hash agg (map-side partials), df re-aggregated FROM tf (O(vocab) "
+    "rows, map-side partials, so a hot term never funnels into one task; "
     "Catalyst re-derives the explode for this census above a reused scan "
     "exchange) and joined back on term with NO hint — AQE picks the "
     "strategy from real sizes (broadcast at sf0.1, a skew-splittable "

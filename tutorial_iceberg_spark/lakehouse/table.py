@@ -32,6 +32,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tutorial_iceberg_spark.io import parquet_schema
 from tutorial_iceberg_spark.lakehouse import metadata as M
 from tutorial_iceberg_spark.lakehouse import transforms as T
 
@@ -84,6 +85,24 @@ def footer_stats(fpath: str) -> tuple[int, dict[str, list]]:
                     min(cur[0], lo), max(cur[1], hi),
                 ]
     return nrows, stats
+
+
+def _written_parquet(dir_path: str) -> tuple[list[str], int]:
+    """(sorted part-file names, total rows) of a directory a Spark write
+    just produced, the rows summed from the parquet FOOTERS — no Spark job
+    and no data IO."""
+    names = sorted(n for n in os.listdir(dir_path) if n.endswith(".parquet"))
+    rows = sum(
+        pq.ParquetFile(os.path.join(dir_path, n)).metadata.num_rows for n in names
+    )
+    return names, rows
+
+
+# On-disk schemas of the fixed-shape delete files, by DeleteFile.content
+_DELETE_DDL = {
+    "position": "file_path string, pos bigint",
+    "vector": "file_path string, words array<bigint>, offset int, cardinality bigint",
+}
 
 
 class MergeConflictError(Exception):
@@ -195,7 +214,9 @@ class LakeTable:
                     # pyarrow rejects footers with logical types it doesn't
                     # know (Spark's VARIANT); count via Spark instead and
                     # carry no column stats — the file is still fully
-                    # readable, it just never prunes
+                    # readable, it just never prunes. The one read with
+                    # no known schema: the file's metadata entry is being
+                    # built here
                     nrows, stats = self.spark.read.parquet(fpath).count(), {}
                 if nrows == 0:
                     # Spark emits an empty schema-carrier part file when a
@@ -722,7 +743,11 @@ class LakeTable:
         for sid, group in by_schema.items():
             written = md.schema(sid)
             wnames = written.by_id()
-            raw = self.spark.read.parquet(*[self._abs(f.path) for f in group])
+            # the metadata holds the schema these files were written
+            # with, so the read starts no schema-inference job
+            raw = self.spark.read.schema(written.ddl()).parquet(
+                *[self._abs(f.path) for f in group]
+            )
             cols = []
             if with_pos:
                 # Spark's per-file metadata column supplies the (file, row)
@@ -731,7 +756,7 @@ class LakeTable:
                 cols.append(F.col("_metadata.row_index").alias("__pos"))
             for f in current.fields:
                 old = wnames.get(f.id)
-                if old is not None and old.name in raw.columns:
+                if old is not None:
                     cols.append(F.col(old.name).cast(f.type).alias(f.name))
                 else:
                     # D7: read-time default for columns added after these
@@ -783,7 +808,12 @@ class LakeTable:
         )
         df = self._read_files(md, files, with_pos=has_pos)
         for dfi in snap.delete_files:
-            dels = self.spark.read.parquet(self._abs(dfi.path))
+            path = self._abs(dfi.path)
+            # equality keys carry the types of the schema they were deleted
+            # under, which a later promotion may have changed: read with
+            # the file's own schema, inferred once per file
+            ddl = _DELETE_DDL.get(dfi.content) or parquet_schema(self.spark, path)
+            dels = self.spark.read.schema(ddl).parquet(path)
             if dfi.content == "position":
                 coords = dels.select(
                     F.col("file_path").alias("__fp"), F.col("pos").alias("__pos")
@@ -1203,7 +1233,7 @@ class LakeTable:
         matches = self.read().filter(F.expr(pred_sql)).select(*eq_cols).distinct()
         rel = os.path.join("data", f"delete-{uuid.uuid4().hex[:12]}")
         matches.write.mode("overwrite").parquet(self._abs(rel))
-        nrows = self.spark.read.parquet(self._abs(rel)).count()
+        names, nrows = _written_parquet(self._abs(rel))
         dels = list(snap.delete_files)
         if nrows == 0:
             # nothing matched: no delete file, or every later read pays an
@@ -1212,12 +1242,8 @@ class LakeTable:
             shutil.rmtree(self._abs(rel), ignore_errors=True)
         else:
             dels += [
-                M.DeleteFile(path=p, rows=nrows, equality_columns=eq_cols)
-                for p in (
-                    os.path.join(rel, n)
-                    for n in sorted(os.listdir(self._abs(rel)))
-                    if n.endswith(".parquet")
-                )
+                M.DeleteFile(path=os.path.join(rel, n), rows=nrows, equality_columns=eq_cols)
+                for n in names
             ]
         self._new_snapshot(md, "delete", list(snap.files), dels, {"mode": "merge-on-read"})
 
@@ -1241,12 +1267,15 @@ class LakeTable:
             by_schema.setdefault(f.schema_id, []).append(f)
         parts: list[DataFrame] = []
         for sid, group in by_schema.items():
-            wnames = md.schema(sid).by_id()
-            raw = self.spark.read.parquet(*[self._abs(f.path) for f in group])
+            written = md.schema(sid)
+            wnames = written.by_id()
+            raw = self.spark.read.schema(written.ddl()).parquet(
+                *[self._abs(f.path) for f in group]
+            )
             cols = []
             for f in current.fields:
                 old = wnames.get(f.id)
-                if old is not None and old.name in raw.columns:
+                if old is not None:
                     cols.append(F.col(old.name).cast(f.type).alias(f.name))
                 else:
                     cols.append(F.lit(f.initial_default).cast(f.type).alias(f.name))
@@ -1276,16 +1305,11 @@ class LakeTable:
         )
         rel = os.path.join("data", f"pos-delete-{uuid.uuid4().hex[:12]}")
         matches.write.mode("overwrite").parquet(self._abs(rel))
-        nrows = self.spark.read.parquet(self._abs(rel)).count()
+        names, nrows = _written_parquet(self._abs(rel))
         if nrows == 0:
             shutil.rmtree(self._abs(rel), ignore_errors=True)
             return [], 0
-        paths = [
-            os.path.join(rel, n)
-            for n in sorted(os.listdir(self._abs(rel)))
-            if n.endswith(".parquet")
-        ]
-        return paths, nrows
+        return [os.path.join(rel, n) for n in names], nrows
 
     def _delete_mor_position(
         self, md: M.TableMetadata, snap: M.Snapshot, pred_sql: str
@@ -1378,15 +1402,11 @@ class LakeTable:
                         columns=["file_path", "words", "offset", "cardinality"],
                     )
 
-            vectors = matches.repartition("file_path").mapInPandas(
-                _pack,
-                "file_path string, words array<bigint>, offset int, "
-                "cardinality bigint",
-            )
+            vectors = matches.repartition("file_path").mapInPandas(_pack, _DELETE_DDL["vector"])
             rel = os.path.join("data", f"dv-{uuid.uuid4().hex[:12]}")
             vectors.write.mode("overwrite").parquet(self._abs(rel))
             nrows = int(
-                self.spark.read.parquet(self._abs(rel))
+                self.spark.read.schema(_DELETE_DDL["vector"]).parquet(self._abs(rel))
                 .agg(F.coalesce(F.sum("cardinality"), F.lit(0)))
                 .first()[0]
             )

@@ -26,9 +26,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from tutorial_iceberg_spark.functions.numeric import dsum, o_dsum
-from tutorial_iceberg_spark.io import load_table, table_path
+from tutorial_iceberg_spark.io import (
+    load_table, normalize_table, parquet_schema, table_path,
+)
 from tutorial_iceberg_spark.registry import register
 from tutorial_iceberg_spark.scratch import env_number
+from tutorial_iceberg_spark.session import apply_engine_conf
 
 SESSION_GAP_MIN = 30
 
@@ -36,8 +39,10 @@ SESSION_GAP_MIN = 30
 def read_events_stream(
     spark: SparkSession, sf_dir: str, one_batch: bool = False
 ) -> DataFrame:
-    """File-source stream over the events parquet (schema from the batch
-    reader, including the ns->us timestamp normalization in io.load_table).
+    """File-source stream over the events parquet, with the batch
+    reader's schema and types: the raw schema from io.parquet_schema (one
+    inference per call at most, none for a single file already read) and
+    the ns->us timestamp normalization of io.load_table.
 
     ``one_batch=True`` pins ``maxFilesPerTrigger`` far above any fixture
     layout so the availableNow replay admits EVERY source file in one
@@ -47,9 +52,7 @@ def read_events_stream(
     respects source rate limits, so a multi-file layout under the default
     maxFilesPerTrigger=1000 (or any explicit lower limit) would split the
     replay and make admission batch-order-dependent."""
-    import os
-
-    batch = load_table(spark, sf_dir, "events")
+    apply_engine_conf(spark)
     # Layout-robust source: Spark's file stream needs a DIRECTORY path,
     # so a real multi-file events table streams directly, while the
     # single-file fixture streams its parent dir with a glob filter
@@ -58,7 +61,7 @@ def read_events_stream(
     # layout streamed ZERO rows; caught by the partition-invariance
     # sweep.)
     path = table_path(sf_dir, "events")
-    reader = spark.readStream.schema(spark.read.parquet(path).schema)
+    reader = spark.readStream.schema(parquet_schema(spark, path))
     if one_batch:
         reader = reader.option("maxFilesPerTrigger", 10_000_000)
     if os.path.isdir(path):
@@ -67,12 +70,7 @@ def read_events_stream(
         raw = reader.option(
             "pathGlobFilter", os.path.basename(path)
         ).parquet(os.path.dirname(path))
-    if dict(raw.dtypes).get("ts") == "bigint":
-        raw = raw.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
-        )
-    assert raw.schema == batch.schema
-    return raw
+    return normalize_table("events", raw)
 
 
 # State-store instances are one per shuffle partition, fixed at the query's
