@@ -1339,24 +1339,19 @@ def test_manifest_agg_stats_decimal_strings_not_lexicographic():
     group = [df("a", "99.00", "99.90"), df("b", "100.00", "250.00")]
     # price 99.5 lives inside file a; the lexicographic aggregate
     # ['100.00', '99.90'] coerces to [100.0, 99.9] and wrongly prunes it
-    keep = LakeTable._manifest_may_match(
-        md, group, T.parse_conjuncts("price = 99.5")
-    )
+    summary = M.manifest_summary(md, group)
+
+    def may_match(pred):
+        return LakeTable._summary_may_match(md, summary, T.parse_conjuncts(pred))
+
+    keep = may_match("price = 99.5")
     assert keep, "manifest with a matching file must not be pruned"
     # the aggregate still prunes what the per-file checks all prune
-    assert not LakeTable._manifest_may_match(
-        md, group, T.parse_conjuncts("price > 300")
-    )
-    assert not LakeTable._manifest_may_match(
-        md, group, T.parse_conjuncts("price < 98")
-    )
+    assert not may_match("price > 300")
+    assert not may_match("price < 98")
     # string columns keep their (correct) lexicographic aggregate
-    assert not LakeTable._manifest_may_match(
-        md, group, T.parse_conjuncts("label = 'zzz'")
-    )
-    assert LakeTable._manifest_may_match(
-        md, group, T.parse_conjuncts("label = 'delta'")
-    )
+    assert not may_match("label = 'zzz'")
+    assert may_match("label = 'delta'")
 
 
 def test_cas_retry_restamps_manifest_ids(cat, spark, monkeypatch):
@@ -1863,7 +1858,7 @@ def test_rest_overwrite_and_delete_files_front_door(cat, spark):
         try:
             client.commit_table(
                 "od", "t",
-                updates=[{"action": "delete-files", "removed_paths": []}],
+                updates=[{"action": "delete-files", "removed_by_manifest": {}}],
                 requirements=[
                     {"type": "assert-ref-snapshot-id", "snapshot-id": stale_sid}
                 ],
@@ -1877,7 +1872,10 @@ def test_rest_overwrite_and_delete_files_front_door(cat, spark):
                 "od", "t",
                 updates=[{
                     "action": "delete-files",
-                    "removed_paths": ["data/does-not-exist.parquet"],
+                    "removed_by_manifest": {
+                        str(md.snapshot().files[0].manifest_id):
+                            ["data/does-not-exist.parquet"],
+                    },
                 }],
             )
             raise AssertionError("expected 409 for stale removed path")
@@ -1894,15 +1892,14 @@ def test_rest_overwrite_and_delete_files_front_door(cat, spark):
             spark.createDataFrame([(5, "e")], "k bigint, v string"),
         )
         md = t.meta
-        doomed = [
-            f.path
-            for f in md.snapshot().files
-            if str(f.stats.get("k", ["", ""])[0]) == "5"
-        ]
+        doomed: dict[str, list[str]] = {}
+        for f in md.snapshot().files:
+            if str(f.stats.get("k", ["", ""])[0]) == "5":
+                doomed.setdefault(str(f.manifest_id), []).append(f.path)
         assert doomed
         client.commit_table(
             "od", "t",
-            updates=[{"action": "delete-files", "removed_paths": doomed}],
+            updates=[{"action": "delete-files", "removed_by_manifest": doomed}],
             requirements=[{
                 "type": "assert-ref-snapshot-id",
                 "snapshot-id": md.current_snapshot_id,
@@ -2417,6 +2414,57 @@ def test_rest_row_level_commit_is_rec_driven(cat, spark):
                 raise AssertionError("expected 409 for stale rec claim")
             except urllib.error.HTTPError as e:
                 assert e.code == 409
+
+
+def test_rest_row_level_commit_needs_committed_list_records(cat, spark):
+    """delete-files/overwrite-files name removed files by the current
+    snapshot's list records only: a request without
+    ``removed_by_manifest`` is malformed, and one that follows another
+    snapshot update in the same commit (a snapshot with no list on disk
+    yet) is refused — both 400, and the table is left as it was."""
+    import urllib.error
+
+    from tutorial_iceberg_spark.lakehouse import metadata as M_
+    from tutorial_iceberg_spark.lakehouse.rest_catalog import (
+        RestCatalogClient,
+        RestCatalogServer,
+    )
+
+    with RestCatalogServer(cat) as srv:
+        client = RestCatalogClient(srv.base_url)
+        client.create_namespace("rl")
+        client.create_table(
+            "rl", "t",
+            [{"name": "k", "type": "bigint"}, {"name": "v", "type": "string"}],
+        )
+        t = cat.load_table("rl.t")
+        t.append(spark.createDataFrame([(1, "a")], "k bigint, v string"))
+        before = t.meta.current_snapshot_id
+        md = t.meta
+        staged = M_.write_manifest(
+            M_.metadata_dir(t.location), 0,
+            t._write_files(
+                t._align(
+                    spark.createDataFrame([(2, "b")], "k bigint, v string"),
+                    md.schema(),
+                ),
+                md,
+            ),
+        )
+        for updates in (
+            [{"action": "delete-files", "removed_paths": []}],
+            [
+                {"action": "append-files", "manifest": staged},
+                {"action": "delete-files", "removed_by_manifest": {}},
+            ],
+        ):
+            try:
+                client.commit_table("rl", "t", updates=updates)
+                raise AssertionError("expected 400")
+            except urllib.error.HTTPError as e:
+                assert e.code == 400
+        assert t.meta.current_snapshot_id == before
+        assert [r["k"] for r in t.read().collect()] == [1]
 
 
 def test_datasource_writer_rest_409_rebase(cat, spark, monkeypatch):

@@ -12,8 +12,9 @@ Invariants under test:
   snapshot headers), not with how many files the table already has;
 - sidecars are immutable, content-addressed, shared across snapshots,
   and never rewritten by carries;
-- legacy format-1 (inline "files") tables stay readable and upgrade on
-  their next commit;
+- every version file names one manifest list per snapshot, and every
+  list record carries a nonzero manifest id and a write-time summary that
+  equals the summary recomputed from the manifest's own entries;
 - expiry/orphan maintenance collects dead sidecars without touching
   live or pending ones (the no-unlink discipline only covers VERSION
   files — manifests are content-addressed and never re-claimed by path,
@@ -181,34 +182,6 @@ def test_manifest_sidecars_are_content_addressed_and_immutable(cat):
     ) == 1
 
 
-def test_legacy_inline_metadata_reads_and_upgrades(cat):
-    """A format-1 version file (inline "files") must read back exactly
-    and convert to sharded form on its next commit."""
-    loc = _mk_meta_table(cat.warehouse, "meta_legacy")
-    _append_commit(loc, 5)
-    md = M.read_metadata(loc)
-    v = md.loaded_version
-    mdir = M.metadata_dir(loc)
-    # rewrite the current version file in the legacy inline format
-    legacy = M._to_json(md, None)
-    assert '"files"' in legacy and '"manifests"' not in legacy
-    vpath = os.path.join(mdir, f"v{v}.metadata.json")
-    tmp = vpath + ".legacy"
-    with open(tmp, "w") as f:
-        f.write(legacy)
-    os.replace(tmp, vpath)
-    md2 = M.read_metadata(loc)
-    assert [f.path for s in md2.snapshots for f in s.files] == [
-        f.path for s in md.snapshots for f in s.files
-    ]
-    # next commit upgrades: the new version file carries manifest-list refs
-    _append_commit(loc, 3)
-    with open(os.path.join(mdir, f"v{v + 1}.metadata.json")) as f:
-        d = json.load(f)
-    assert all("manifest_list" in s for s in d["snapshots"])
-    assert len(M.read_metadata(loc).snapshot().files) == 8
-
-
 def test_expire_collects_exclusive_manifests_keeps_shared(cat, spark):
     t = cat.create_table("db.meta_exp", "k bigint, v string")
     for i in range(4):
@@ -268,10 +241,10 @@ def test_orphan_sweep_collects_dead_manifests_not_live_or_pending(cat, spark):
 
 def test_manifest_summaries_prune_equivalently_to_dynamic(cat):
     """Two-tier planning (r14): manifest-list recs carry a write-time
-    pruning summary; the summary check must agree with (or be strictly
-    more conservative than) the dynamic per-entry aggregation on the
-    same manifests, and scan candidates must be identical on full
-    manifests. Randomized across stats ranges, partitions, ops."""
+    pruning summary; it must equal the summary recomputed from the
+    manifest's own entries and prune exactly like it, and scan
+    candidates must never drop a per-file match. Randomized across
+    stats ranges and ops."""
     import random
 
     from tutorial_iceberg_spark.lakehouse.table import LakeTable
@@ -308,7 +281,12 @@ def test_manifest_summaries_prune_equivalently_to_dynamic(cat):
     snap = md.snapshot()
     recs = t._snapshot_manifest_recs(md, snap)
     assert recs and all("summary" in r for r in recs.values())
-    groups = t.manifest_groups(snap)
+    mdir = M.metadata_dir(loc)
+    recomputed = {
+        mid: M.manifest_summary(md, M._load_manifest(mdir, r["ref"]))
+        for mid, r in recs.items()
+    }
+    assert all(recs[mid]["summary"] == s for mid, s in recomputed.items())
     checked = 0
     for pred in (
         "k = 1500", "k < 50", "k >= 5900", "k > 2000 AND k < 2500",
@@ -317,11 +295,11 @@ def test_manifest_summaries_prune_equivalently_to_dynamic(cat):
         from tutorial_iceberg_spark.lakehouse import transforms as T
 
         conjuncts = T.parse_conjuncts(pred)
-        for mid, g in groups.items():
-            dyn = t._manifest_may_match(md, g, conjuncts)
-            summ = t._summary_may_match(md, recs[mid]["summary"], conjuncts)
+        for mid, rec in recs.items():
+            fresh = t._summary_may_match(md, recomputed[mid], conjuncts)
+            summ = t._summary_may_match(md, rec["summary"], conjuncts)
             # full manifests: the two checks must agree exactly
-            assert summ == dyn, (pred, mid, summ, dyn)
+            assert summ == fresh, (pred, mid, summ, fresh)
             checked += 1
         # and the end-to-end candidate set matches the per-file truth
         cands = {f.path for f in t._candidates(md, snap, pred)}
@@ -512,42 +490,6 @@ def test_rollback_plus_delete_never_resurrects_via_ref_collision(cat, spark):
     assert ["a", "b"] in by_op and ["a", "c"] in by_op
 
 
-def test_orphan_sweep_protects_legacy_id0_manifest(cat, spark):
-    """r14 review (CONFIRMED repro): a format-1 table upgraded by any
-    format-2 commit serializes its legacy manifest_id-0 group into a
-    sidecar the current snapshot's manifest list references; the live
-    set must include it (the old (mid,count) bookkeeping skipped id 0,
-    so the sweep deleted a LIVE manifest and broke the read)."""
-    t = cat.create_table("db.leg0", "k bigint, v string")
-    t.append(spark.createDataFrame([(1, "x"), (2, "y")], "k bigint, v string"))
-    # rewrite current metadata as legacy inline format with id-0 entries
-    md = t.meta
-    for s in md.snapshots:
-        for f in s.files:
-            f.manifest_id = 0
-    md.last_manifest_id = 0
-    legacy = M._to_json(md, None)
-    vpath = os.path.join(
-        M.metadata_dir(t.location), f"v{md.loaded_version}.metadata.json"
-    )
-    tmp = vpath + ".legacy"
-    with open(tmp, "w") as f:
-        f.write(legacy)
-    os.replace(tmp, vpath)
-    # any metadata-only commit upgrades to format 2 (id-0 sidecar)
-    t.set_property("owner", "legacy")
-    mdir = M.metadata_dir(t.location)
-    assert any(
-        n.startswith("manifest-") and not n.startswith("manifest-list-")
-        for n in os.listdir(mdir)
-    )
-    # age everything; the zero-grace sweep must keep the live sidecars
-    for n in os.listdir(mdir):
-        os.utime(os.path.join(mdir, n), (1, 1))
-    t.remove_orphan_files(grace_s=0.0)
-    assert sorted(r["k"] for r in cat.load_table("db.leg0").read().collect()) == [1, 2]
-
-
 def test_warm_append_loads_zero_manifest_entry_files(cat, spark, monkeypatch):
     """r14 verdict Next #1 (rec-driven append): a warm append carries the
     parent's manifests via its manifest-list records, so NO manifest
@@ -702,3 +644,91 @@ def test_merge_clusters_by_partition_keeps_pruning_without_maintenance(cat):
     # grouping is metadata-only: the entry set is byte-identical
     md2 = M.read_metadata(loc)
     assert M.entry_count(md2.snapshot().files) == 2000
+
+
+def test_every_write_verb_writes_only_stamped_summarized_lists(cat, spark):
+    """The metadata layer reads exactly one shape, so every write verb
+    must produce it: each snapshot of each version file names a manifest
+    list, and every record of every list has a nonzero manifest id and a
+    write-time summary. Runs each verb once on one table — row-level,
+    maintenance, branch, transaction, REST and streaming-sink commits."""
+    from tutorial_iceberg_spark.lakehouse.rest_catalog import (
+        RestCatalogClient,
+        RestCatalogServer,
+        rest_append,
+        rest_merge,
+    )
+    from tutorial_iceberg_spark.streaming.events_stream import (
+        make_idempotent_ingest,
+    )
+
+    ddl = "k bigint, v string"
+
+    def rows(*ks):
+        return spark.createDataFrame([(k, f"v{k}") for k in ks], ddl)
+
+    t = cat.create_table("db.verbs", ddl)
+    t.append(rows(*range(10)))
+    t.merge(spark.createDataFrame([(1, "one"), (10, "v10")], ddl), on="k")
+    t.delete("k = 2")  # copy-on-write
+    t.set_property("write.delete.mode", "merge-on-read")
+    for k, flavor in ((3, "equality"), (4, "position"), (5, "vector")):
+        t.set_property("write.delete.flavor", flavor)
+        t.delete(f"k = {k}")
+        t.compact(target_files=1)
+    t.set_property("write.update.mode", "merge-on-read")
+    t.update("k = 6", {"v": "'six'"})
+    t.compact(target_files=1)
+    t.rewrite_manifests(target_manifests=2)
+    t.create_branch("ff")
+    t.append_to_branch("ff", rows(11))
+    t.fast_forward("ff")
+    t.create_branch("dv")
+    t.append_to_branch("dv", rows(12))
+    t.append(rows(13))
+    t.merge_branch("dv")
+    txn = cat.transaction()
+    txn.append("db.verbs", rows(14))
+    txn.commit()
+    with RestCatalogServer(cat) as srv:
+        client = RestCatalogClient(srv.base_url)
+        rest_append(client, t, "db", "verbs", rows(15))
+        rest_merge(
+            client, t, "db", "verbs",
+            spark.createDataFrame([(7, "seven"), (16, "v16")], ddl), on="k",
+        )
+    src = os.path.join(cat.warehouse, "_stream_src")
+    rows(17, 18).write.parquet(src)
+    chk = os.path.join(cat.warehouse, "_stream_chk")
+    (
+        spark.readStream.schema(ddl)
+        .parquet(src)
+        .writeStream.foreachBatch(make_idempotent_ingest(t))
+        .option("checkpointLocation", chk)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    mdir = M.metadata_dir(t.location)
+
+    def check_metadata_dir():
+        names = sorted(os.listdir(mdir))
+        lists = [n for n in names if n.startswith("manifest-list-")]
+        versions = [n for n in names if n.endswith(".metadata.json")]
+        assert lists and len(versions) > 20
+        for n in lists:
+            with open(os.path.join(mdir, n)) as f:
+                for rec in json.load(f):
+                    assert rec["manifest_id"] > 0 and "summary" in rec, (n, rec)
+        for n in versions:
+            with open(os.path.join(mdir, n)) as f:
+                snaps = json.load(f)["snapshots"]
+            assert all("manifest_list" in s for s in snaps), n
+
+    # before expiry too: it collects the lists of the snapshots it drops
+    check_metadata_dir()
+    t.expire_snapshots(keep_last=3)
+    check_metadata_dir()
+    assert sorted(r["k"] for r in t.read().collect()) == [
+        0, 1, *range(6, 19)
+    ]

@@ -175,10 +175,10 @@ def probe_burned_slots() -> dict:
 
 
 def probe_plan_cost() -> dict:
-    """Two-tier planning (r14): per-scan planning cost with write-time
-    manifest summaries vs the dynamic per-entry aggregation, on a
-    30k-file table. The summary path is O(manifests x conjuncts); the
-    dynamic path re-aggregates every member entry per scan."""
+    """Two-tier planning (r14): per-scan planning cost from the
+    write-time manifest summaries on a 30k-file table —
+    O(manifests x conjuncts), no manifest entry read — plus one cold
+    read + plan + scan-candidate pass."""
     with tempfile.TemporaryDirectory() as wh:
         loc = _mk(wh, "plan")
         done = 0
@@ -204,23 +204,11 @@ def probe_plan_cost() -> dict:
         for _ in range(20):
             touched, total = t.plan_manifests(pred)
         summary_s = (time.perf_counter() - t0) / 20
-        orig = LakeTable._snapshot_manifest_recs
-        LakeTable._snapshot_manifest_recs = lambda self, md, snap: {}
-        try:
-            t0 = time.perf_counter()
-            for _ in range(20):
-                touched_d, total_d = t.plan_manifests(pred)
-            dynamic_s = (time.perf_counter() - t0) / 20
-        finally:
-            LakeTable._snapshot_manifest_recs = orig
-        assert (touched, total) == (touched_d, total_d)
         return {
             "table_files": 30_000,
             "manifests": total,
             "touched": touched,
             "plan_s_summary": round(summary_s, 5),
-            "plan_s_dynamic": round(dynamic_s, 5),
-            "speedup": round(dynamic_s / summary_s, 1),
             "cold_read_plan_scan_s": round(cold_s, 4),
             "cold_manifest_entry_files_parsed": cold_reads,
             "cold_scan_candidate_files": len(cands),
@@ -337,10 +325,7 @@ def probe_rest_row_level() -> list[dict]:
     """r15 verdict Next #1 measurement: a row-level commit through the
     REST front door, named BY MANIFEST, must be O(touched manifests) —
     flat wall and flat entry reads as table size ladders 100k -> 10^6
-    entries. The legacy flat removed_paths form at the same sizes shows
-    the cost class the rec-driven protocol removed (it materializes
-    every entry server-side, the ~14 s class the r15 probe measured for
-    the pre-rec append)."""
+    entries."""
     from tutorial_iceberg_spark.lakehouse.catalog import LakeCatalog
     from tutorial_iceberg_spark.lakehouse.rest_catalog import (
         RestCatalogClient,
@@ -355,7 +340,7 @@ def probe_rest_row_level() -> list[dict]:
             # the one touched manifest); wall is bounded by the touched
             # manifest's entry count (loaded, subtracted, rewritten) —
             # recorded explicitly so the bound is visible, never by the
-            # table's total entry count (the legacy contrast pays that)
+            # table's total entry count
             loc = _build_big(wh, "r", total)
             mdir = M.metadata_dir(loc)
             cat = LakeCatalog(None, wh)
@@ -384,34 +369,11 @@ def probe_rest_row_level() -> list[dict]:
                 )
                 rec_wall = time.perf_counter() - t0
                 rec_reads = M.manifest_file_reads - reads0
-                # legacy flat-path contrast on the SAME table state
-                md = M.read_metadata(loc)
-                removed2 = [f"data/fake/{i:09d}.parquet" for i in range(3, 6)]
-                ref2 = M.write_manifest(mdir, 0, _fake(md, 2, 11_000_000))
-                M._manifest_cache.clear()
-                reads0 = M.manifest_file_reads
-                t0 = time.perf_counter()
-                client.commit_table(
-                    "db", "r",
-                    updates=[{
-                        "action": "overwrite-files",
-                        "manifest": ref2,
-                        "removed_paths": removed2,
-                    }],
-                    requirements=[{
-                        "type": "assert-ref-snapshot-id",
-                        "snapshot-id": md.current_snapshot_id,
-                    }],
-                )
-                legacy_wall = time.perf_counter() - t0
-                legacy_reads = M.manifest_file_reads - reads0
             m = {
                 "table_files": total,
                 "touched_manifest_entries": total // 20,
                 "rec_commit_wall_s": round(rec_wall, 4),
                 "rec_manifest_entry_files_parsed": rec_reads,
-                "legacy_commit_wall_s": round(legacy_wall, 4),
-                "legacy_manifest_entry_files_parsed": legacy_reads,
             }
             out.append(m)
             print("rest-row-level:", m, flush=True)

@@ -427,9 +427,7 @@ def _appended_files(t, md, from_sid: int, to_sid: int) -> list:
     manifest contributes identical path sets to both sides; a
     commit-time merge round moves old entries into a fresh manifest,
     and diffing the changed manifests' paths cancels them out), so a
-    micro-batch plans in O(delta manifests), not O(table). Legacy
-    metadata without clean list records falls back to the full path
-    diff."""
+    micro-batch plans in O(delta manifests), not O(table)."""
     to_snap = md.snapshot(to_sid)
     if to_snap is None:
         raise ValueError(f"tis_lake: offset snapshot {to_sid} does not exist")
@@ -468,37 +466,25 @@ def _appended_files(t, md, from_sid: int, to_sid: int) -> list:
         else:
             srecs = t._snapshot_manifest_recs(md, snap)
             precs = t._snapshot_manifest_recs(md, parent)
-            clean = (
-                srecs
-                and precs
-                and all(m != 0 for m in srecs)
-                and all(m != 0 for m in precs)
-            )
-            if clean:
-                changed = [
-                    r
-                    for mid, r in srecs.items()
-                    if precs.get(mid, {}).get("ref") != r["ref"]
-                ]
-                gone = [
-                    r
-                    for mid, r in precs.items()
-                    if srecs.get(mid, {}).get("ref") != r["ref"]
-                ]
-                old_paths = {
-                    e.path
-                    for r in gone
-                    for e in M._load_manifest(mdir, r["ref"])
-                }
-                added = [
-                    e
-                    for r in changed
-                    for e in M._load_manifest(mdir, r["ref"])
-                    if e.path not in old_paths
-                ]
-            else:  # legacy metadata: full path diff
-                parent_paths = {f.path for f in parent.files}
-                added = [f for f in snap.files if f.path not in parent_paths]
+            changed = [
+                r
+                for mid, r in srecs.items()
+                if precs.get(mid, {}).get("ref") != r["ref"]
+            ]
+            gone = [
+                r
+                for mid, r in precs.items()
+                if srecs.get(mid, {}).get("ref") != r["ref"]
+            ]
+            old_paths = {
+                e.path for r in gone for e in M._load_manifest(mdir, r["ref"])
+            }
+            added = [
+                e
+                for r in changed
+                for e in M._load_manifest(mdir, r["ref"])
+                if e.path not in old_paths
+            ]
         for f in added:
             if f.path not in seen:
                 seen.add(f.path)

@@ -39,7 +39,9 @@ from tutorial_iceberg_spark.scratch import env_number
 # of re-serializing every retained snapshot's full file list (real
 # Iceberg's manifest-list design, README.md:921-1028 — the one place the
 # previous emulation's commit cost scaled with table size instead of
-# delta size). Format-1 metadata (inline "files") stays readable.
+# delta size). This is the only shape the engine reads or writes: every
+# snapshot names one manifest list, and every list record carries a
+# nonzero manifest id plus its write-time pruning summary.
 FORMAT_VERSION = 2
 
 
@@ -149,9 +151,8 @@ class TableMetadata:
     last_field_id: int
     last_snapshot_id: int
     # Named branch refs: branch name -> head snapshot id. The implicit
-    # "main" branch is current_snapshot_id (kept separate so every
-    # pre-branch metadata file stays readable). Branch snapshots live in
-    # the same `snapshots` list — refs are just extra roots into the DAG.
+    # "main" branch is current_snapshot_id. Branch snapshots live in the
+    # same `snapshots` list — refs are just extra roots into the DAG.
     refs: dict[str, int] = field(default_factory=dict)
     # Immutable tag refs (Iceberg tags): name -> snapshot id. Unlike
     # branches, tags never advance; they pin a snapshot (and its files)
@@ -161,8 +162,8 @@ class TableMetadata:
     # Commits are CAS'd against loaded_version, not the current hint: a
     # writer holding stale metadata must conflict, not silently clobber.
     loaded_version: int = 0
-    # Monotone manifest-id counter (see DataFile.manifest_id). Default 0
-    # keeps every pre-manifest metadata file readable.
+    # Monotone manifest-id counter (see DataFile.manifest_id); 0 until
+    # the first snapshot stamps its entries.
     last_manifest_id: int = 0
     # Multi-table transaction gate: when set, this version file is a
     # PREPARED (2PC phase-1) commit and is visible only once the decision
@@ -182,11 +183,6 @@ class TableMetadata:
         # at serialize; snapshots are immutable once committed, so a
         # known list ref is carried without recomputation.
         self.manifest_list_refs: dict[int, str] = {}
-        # manifest ref -> write-time pruning summary (see
-        # manifest_summary). Carried so building a NEW snapshot's list
-        # reuses carried manifests' summaries in O(1) instead of
-        # re-aggregating O(table) entries per commit.
-        self.manifest_summaries: dict[str, dict] = {}
 
     # -- convenience -------------------------------------------------
     def schema(self, schema_id: int | None = None) -> Schema:
@@ -377,9 +373,10 @@ def _load_manifest(mdir: str, fname: str) -> tuple:
     """Entries of one manifest sidecar, cached process-wide (immutable
     content-addressed files). Returns a shared tuple — callers must copy
     an entry before mutating it (every engine mutation site already
-    does). Legacy manifest-id-0 groups are NEVER shared: pre-manifest
-    metadata stamped 0 on entries from many commits, and _new_snapshot
-    restamps id-0 entries in place, so sharing would corrupt the cache."""
+    does). Manifest-id-0 sidecars are NEVER shared: they are staged REST
+    uploads (``append-files``/``overwrite-files``, rest_append and
+    rest_merge write them unstamped), and _new_snapshot stamps id-0
+    entries in place, so sharing them would corrupt the cache."""
     global _manifest_cache_entries
     fpath = os.path.join(mdir, fname)
     with _manifest_cache_lock:
@@ -583,16 +580,37 @@ def entry_rows(files) -> int:
     return sum(f.rows for f in files)
 
 
-def _to_json(md: TableMetadata, mdir: str | None = None) -> str:
-    """Serialize table metadata. With ``mdir`` (the commit path): format
-    2 — each snapshot's entry groups land in content-addressed manifest
-    sidecars (written only if absent; groups known from load are carried
-    by reference without touching their entries), each snapshot's
+def _group_by_manifest(entries) -> dict[int, list[DataFile]]:
+    groups: dict[int, list[DataFile]] = {}
+    for f in entries:
+        groups.setdefault(f.manifest_id, []).append(f)
+    return groups
+
+
+def _manifest_rec(
+    md: TableMetadata, mid: int, ref: str, entries: list[DataFile]
+) -> dict:
+    """The manifest-list record of one freshly written manifest: its id,
+    sidecar ref, entry/row/byte totals and write-time pruning summary."""
+    return {
+        "manifest_id": mid,
+        "ref": ref,
+        "count": len(entries),
+        "rows": sum(e.rows for e in entries),
+        "bytes": sum(e.bytes for e in entries),
+        "summary": manifest_summary(md, entries),
+    }
+
+
+def _to_json(md: TableMetadata, mdir: str) -> str:
+    """Serialize table metadata (format 2): each snapshot's entry groups
+    land in content-addressed manifest sidecars (written only if absent;
+    groups carried from the parent are referenced by their parent's
+    list record without touching their entries), each snapshot's
     manifest-ref list lands in a manifest-list sidecar, and the version
     JSON holds snapshot headers + one list ref each. The bytes a commit
     writes are therefore O(new entries + retained snapshot headers), not
-    O(retained file entries). Without ``mdir`` (tests/debug only):
-    legacy inline format."""
+    O(retained file entries)."""
     d: dict[str, Any] = {"format_version": FORMAT_VERSION}
     for fld in fields(TableMetadata):
         if fld.name == "snapshots":
@@ -603,157 +621,98 @@ def _to_json(md: TableMetadata, mdir: str | None = None) -> str:
         d[fld.name] = v
     snaps_out = []
     for s in md.snapshots:
-        sd: dict[str, Any] = {
-            "snapshot_id": s.snapshot_id,
-            "parent_id": s.parent_id,
-            "timestamp_ms": s.timestamp_ms,
-            "operation": s.operation,
-            "schema_id": s.schema_id,
-            "spec_id": s.spec_id,
-            "delete_files": [asdict(df) for df in s.delete_files],
-            "summary": s.summary,
-        }
-        if mdir is None:
-            sd["files"] = [asdict(f) for f in s.files]
-        else:
-            list_ref = md.manifest_list_refs.get(s.snapshot_id)
-            if list_ref is None:
-                # Carried-manifest reuse is keyed on the PARENT snapshot's
-                # own manifest-list record for the same manifest id — the
-                # only sound source. A new snapshot's mid-group is always
-                # a subset of its parent's (fresh entries get a NEW id,
-                # carries only drop members), so parent count == group
-                # count implies the same set. The earlier scheme keyed
-                # reuse on a metadata-global (manifest_id, count) map,
-                # which COLLIDES across non-chain histories: rollback_to
-                # then delete creates two different same-size subsets of
-                # one manifest, and the second snapshot silently
-                # serialized the first one's file list (r14 review,
-                # confirmed repro: a deleted file resurrected).
-                parent_recs: dict[int, dict] = {}
-                plref = (
-                    md.manifest_list_refs.get(s.parent_id)
-                    if s.parent_id is not None
-                    else None
-                )
-                if plref is not None:
-                    try:
-                        parent_recs = {
-                            r["manifest_id"]: r
-                            for r in _load_manifest_list(mdir, plref)
-                        }
-                    except OSError:
-                        parent_recs = {}
-                # Rec-driven fast path (r15): a snapshot built by the
-                # O(new-files) append carries (parent manifest recs,
-                # fresh tail) unmaterialized. Reuse is sound iff every
-                # carried rec is IDENTICALLY present in the parent's own
-                # manifest-list record (same id, ref, count) — the same
-                # soundness rule as the generic path below, checked
-                # directly against the parent record rather than via
-                # entry grouping, so serializing the snapshot costs
-                # O(manifests + fresh entries) with ZERO entry reads.
-                # Any mismatch (legacy id-0 group, rec not from this
-                # parent, tail colliding with a carried id) falls
-                # through to the generic materializing path.
-                lazy = s.files if isinstance(s.files, _LazyEntryList) else None
-                if lazy is not None and not lazy._materialized:
-                    carried_ids = {r["manifest_id"] for r in lazy._recs}
-                    sound = (
-                        all(
-                            r["manifest_id"] != 0
-                            and parent_recs.get(r["manifest_id"]) is not None
-                            and parent_recs[r["manifest_id"]]["ref"] == r["ref"]
-                            and parent_recs[r["manifest_id"]]["count"] == r["count"]
-                            for r in lazy._recs
-                        )
-                        and all(
-                            f.manifest_id != 0
-                            and f.manifest_id not in carried_ids
-                            for f in lazy._tail
-                        )
-                    )
-                    if sound:
-                        recs = []
-                        for r in lazy._recs:
-                            summ = r.get("summary")
-                            if summ is None:
-                                summ = md.manifest_summaries.get(r["ref"])
-                            if summ is None:  # pre-summary legacy rec
-                                summ = manifest_summary(
-                                    md, _load_manifest(mdir, r["ref"])
-                                )
-                            md.manifest_summaries[r["ref"]] = summ
-                            recs.append({**r, "summary": summ})
-                        tail_groups: dict[int, list[DataFile]] = {}
-                        for f in lazy._tail:
-                            tail_groups.setdefault(f.manifest_id, []).append(f)
-                        for mid in sorted(tail_groups):
-                            entries = tail_groups[mid]
-                            ref = write_manifest(mdir, mid, entries)
-                            summ = manifest_summary(md, entries)
-                            md.manifest_summaries[ref] = summ
-                            recs.append(
-                                {
-                                    "manifest_id": mid,
-                                    "ref": ref,
-                                    "count": len(entries),
-                                    "rows": sum(e.rows for e in entries),
-                                    "bytes": sum(e.bytes for e in entries),
-                                    "summary": summ,
-                                }
-                            )
-                        recs.sort(key=lambda r: r["manifest_id"])
-                        list_ref = write_manifest_list(mdir, recs)
-                        md.manifest_list_refs[s.snapshot_id] = list_ref
-                        sd["manifest_list"] = list_ref
-                        sd["count"] = entry_count(s.files)
-                        snaps_out.append(sd)
-                        continue
-                groups: dict[int, list[DataFile]] = {}
-                for f in s.files:
-                    groups.setdefault(f.manifest_id, []).append(f)
-                recs = []
-                for mid in sorted(groups):
-                    entries = groups[mid]
-                    prec = parent_recs.get(mid) if mid != 0 else None
-                    if prec is not None and prec["count"] == len(entries):
-                        ref = prec["ref"]
-                        summ = prec.get("summary")
-                        if summ is None:
-                            summ = md.manifest_summaries.get(ref)
-                    else:
-                        ref = write_manifest(mdir, mid, entries)
-                        summ = None
-                    if summ is None:
-                        summ = manifest_summary(md, entries)
-                    md.manifest_summaries[ref] = summ
-                    recs.append(
-                        {
-                            "manifest_id": mid,
-                            "ref": ref,
-                            "count": len(entries),
-                            "rows": sum(e.rows for e in entries),
-                            "bytes": sum(e.bytes for e in entries),
-                            "summary": summ,
-                        }
-                    )
-                list_ref = write_manifest_list(mdir, recs)
-                md.manifest_list_refs[s.snapshot_id] = list_ref
-            sd["manifest_list"] = list_ref
-            # entry_count, NOT len(): len() on a lazy list materializes,
-            # so the old form loaded EVERY retained snapshot's manifest
-            # entries on EVERY commit — O(table) read IO per commit, and
-            # an uncaught FileNotFoundError if a racing expire_snapshots
-            # collected a historical manifest between this writer's load
-            # and its commit (ADVICE r14 medium).
-            sd["count"] = entry_count(s.files)
-        snaps_out.append(sd)
+        list_ref = md.manifest_list_refs.get(s.snapshot_id)
+        if list_ref is None:
+            list_ref = _write_snapshot_list(md, mdir, s)
+            md.manifest_list_refs[s.snapshot_id] = list_ref
+        snaps_out.append(
+            {
+                "snapshot_id": s.snapshot_id,
+                "parent_id": s.parent_id,
+                "timestamp_ms": s.timestamp_ms,
+                "operation": s.operation,
+                "schema_id": s.schema_id,
+                "spec_id": s.spec_id,
+                "delete_files": [asdict(df) for df in s.delete_files],
+                "summary": s.summary,
+                "manifest_list": list_ref,
+                # entry_count, NOT len(): len() on a lazy list
+                # materializes — O(table) read IO per commit, and a
+                # FileNotFoundError if a racing expire_snapshots
+                # collected a historical manifest since this writer's
+                # load (ADVICE r14 medium).
+                "count": entry_count(s.files),
+            }
+        )
     d["snapshots"] = snaps_out
     return json.dumps(d, indent=1)
 
 
-def _from_json(text: str, mdir: str | None = None) -> TableMetadata:
+def _write_snapshot_list(md: TableMetadata, mdir: str, s: Snapshot) -> str:
+    """Write the manifest list of a snapshot not yet on disk; returns its
+    filename.
+
+    Carried-manifest reuse is keyed on the PARENT snapshot's own
+    manifest-list record for the same manifest id — the only sound
+    source. A new snapshot's mid-group is always a subset of its
+    parent's (fresh entries get a NEW id, carries only drop members), so
+    parent count == group count implies the same set. The earlier scheme
+    keyed reuse on a metadata-global (manifest_id, count) map, which
+    COLLIDES across non-chain histories: rollback_to then delete creates
+    two different same-size subsets of one manifest, and the second
+    snapshot silently serialized the first one's file list (r14 review,
+    confirmed repro: a deleted file resurrected)."""
+    parent_recs: dict[int, dict] = {}
+    plref = (
+        md.manifest_list_refs.get(s.parent_id) if s.parent_id is not None else None
+    )
+    if plref is not None:
+        try:
+            parent_recs = {
+                r["manifest_id"]: r for r in _load_manifest_list(mdir, plref)
+            }
+        except OSError:
+            parent_recs = {}
+    # Rec-driven fast path (r15): a snapshot built by the O(new-files)
+    # append carries (parent manifest recs, fresh tail) unmaterialized.
+    # Reuse is sound iff every carried rec is IDENTICALLY present in the
+    # parent's own list (same id, ref, count) and no tail entry shares a
+    # carried id — checked against the parent records directly, so
+    # serializing the snapshot costs O(manifests + fresh entries) with
+    # ZERO entry reads. Any mismatch falls through to grouping the
+    # materialized entries.
+    lazy = s.files
+    if (
+        isinstance(lazy, _LazyEntryList)
+        and not lazy._materialized
+        and all(
+            (p := parent_recs.get(r["manifest_id"])) is not None
+            and p["ref"] == r["ref"]
+            and p["count"] == r["count"]
+            for r in lazy._recs
+        )
+        and not {f.manifest_id for f in lazy._tail}
+        & {r["manifest_id"] for r in lazy._recs}
+    ):
+        carried = list(lazy._recs)
+        fresh = _group_by_manifest(lazy._tail)
+    else:
+        carried = []
+        fresh = _group_by_manifest(s.files)
+        for mid in list(fresh):
+            prec = parent_recs.get(mid)
+            if prec is not None and prec["count"] == len(fresh[mid]):
+                carried.append(prec)
+                del fresh[mid]
+    recs = carried + [
+        _manifest_rec(md, mid, write_manifest(mdir, mid, g), g)
+        for mid, g in fresh.items()
+    ]
+    recs.sort(key=lambda r: r["manifest_id"])
+    return write_manifest_list(mdir, recs)
+
+
+def _from_json(text: str, mdir: str) -> TableMetadata:
     d = json.loads(text)
     d.pop("format_version", None)
     d["schemas"] = [
@@ -764,51 +723,29 @@ def _from_json(text: str, mdir: str | None = None) -> TableMetadata:
         PartitionSpec(spec_id=s["spec_id"], fields=[PartitionField(**f) for f in s["fields"]])
         for s in d["partition_specs"]
     ]
-    d.setdefault("refs", {})
-    d.setdefault("tags", {})
     loaded_lists: dict[int, str] = {}
-    loaded_summaries: dict[str, dict] = {}
     snaps = []
     for s in d["snapshots"]:
-        recs = None
-        if "manifest_list" in s or "manifests" in s:
-            if mdir is None:
-                raise ValueError(
-                    "format-2 metadata (manifest refs) needs its metadata dir"
-                )
-            if "manifest_list" in s:
-                recs = _load_manifest_list(mdir, s["manifest_list"])
-                loaded_lists[s["snapshot_id"]] = s["manifest_list"]
-            else:  # transitional shape: inline ref records
-                recs = s["manifests"]
-            # LAZY: entries load on first access (refs/summaries come
-            # from the recs, so bookkeeping needs no entry IO) — reading
-            # metadata is O(headers + lists), and a summary-pruned scan
-            # loads only surviving manifests
-            files: list[DataFile] = _LazyEntryList(mdir, recs)
-            for rec in recs:
-                if "summary" in rec:
-                    loaded_summaries[rec["ref"]] = rec["summary"]
-        else:
-            files = [DataFile(**f) for f in s["files"]]
-        keep = {
-            k: v
-            for k, v in s.items()
-            if k not in ("files", "manifests", "manifest_list", "count")
-        }
+        list_ref = s.pop("manifest_list")
+        s.pop("count")
+        loaded_lists[s["snapshot_id"]] = list_ref
+        # LAZY: entries load on first access (counts and summaries come
+        # from the list records, so bookkeeping needs no entry IO) —
+        # reading metadata is O(headers + lists), and a summary-pruned
+        # scan loads only surviving manifests
+        files = _LazyEntryList(mdir, _load_manifest_list(mdir, list_ref))
         snaps.append(
             Snapshot(
                 **{
-                    **keep,
+                    **s,
                     "files": files,
-                    "delete_files": [DeleteFile(**f) for f in s.get("delete_files", [])],
+                    "delete_files": [DeleteFile(**f) for f in s["delete_files"]],
                 }
             )
         )
     d["snapshots"] = snaps
     md = TableMetadata(**d)
     md.manifest_list_refs.update(loaded_lists)
-    md.manifest_summaries.update(loaded_summaries)
     return md
 
 

@@ -269,9 +269,7 @@ class _Handler(BaseHTTPRequestHandler):
                         # become the in-memory tail. Commit IO is
                         # O(touched manifests + staged entries), never
                         # O(table) — the same cost class the rec-driven
-                        # append achieved. The flat ``removed_paths``
-                        # form stays accepted (legacy clients) and pays
-                        # the old full materialization.
+                        # append achieved.
                         import re
 
                         from tutorial_iceberg_spark.lakehouse.table import (
@@ -279,30 +277,21 @@ class _Handler(BaseHTTPRequestHandler):
                         )
 
                         removed_bm = upd.get("removed_by_manifest")
-                        removed = upd.get("removed_paths", [])
-                        if removed_bm is not None:
-                            if not (
-                                isinstance(removed_bm, dict)
-                                and all(
-                                    isinstance(k, str)
-                                    and k.isdigit()
-                                    and int(k) > 0
-                                    and isinstance(v, list)
-                                    and all(isinstance(p, str) for p in v)
-                                    for k, v in removed_bm.items()
-                                )
-                            ):
-                                self._send(400, {
-                                    "error": "removed_by_manifest must map "
-                                    "positive manifest ids to path lists"
-                                })
-                                return
-                        elif not isinstance(removed, list) or not all(
-                            isinstance(p, str) for p in removed
-                        ):
-                            self._send(
-                                400, {"error": "removed_paths must be a list of strings"}
+                        if not (
+                            isinstance(removed_bm, dict)
+                            and all(
+                                isinstance(k, str)
+                                and k.isdigit()
+                                and int(k) > 0
+                                and isinstance(v, list)
+                                and all(isinstance(p, str) for p in v)
+                                for k, v in removed_bm.items()
                             )
+                        ):
+                            self._send(400, {
+                                "error": "removed_by_manifest must map "
+                                "positive manifest ids to path lists"
+                            })
                             return
                         entries: tuple = ()
                         if action == "overwrite-files":
@@ -342,74 +331,50 @@ class _Handler(BaseHTTPRequestHandler):
                                  "committing file-level overwrites"},
                             )
                             return
+                        if cur.snapshot_id not in md.manifest_list_refs:
+                            # staged by an earlier update of this request:
+                            # it has no list records to name removals by
+                            self._send(400, {
+                                "error": f"{action} must not follow another "
+                                "snapshot update in the same commit"
+                            })
+                            return
                         t = LakeTable.__new__(LakeTable)
                         t.spark = None
                         t.location = loc
-                        files = None
-                        if removed_bm is not None:
-                            touched = {
-                                int(k): set(v) for k, v in removed_bm.items()
-                            }
-                            recs = t._snapshot_manifest_recs(md, cur)
-                            if recs and all(m != 0 for m in recs):
-                                if not set(touched) <= set(recs):
-                                    self._send(409, {
-                                        "error": "removed manifest not in "
-                                        "current snapshot (stale client "
-                                        "view — re-read and retry)"
-                                    })
-                                    return
-                                mdir = M.metadata_dir(loc)
-                                untouched_recs: list[dict] = []
-                                kept_tail: list = []
-                                stale = False
-                                for mid, rec in recs.items():
-                                    if mid not in touched:
-                                        untouched_recs.append(rec)
-                                        continue
-                                    # only TOUCHED manifests pay entry IO
-                                    ment = M._load_manifest(mdir, rec["ref"])
-                                    if not touched[mid] <= {
-                                        e.path for e in ment
-                                    }:
-                                        stale = True
-                                        break
-                                    kept_tail.extend(
-                                        e
-                                        for e in ment
-                                        if e.path not in touched[mid]
-                                    )
-                                if stale:
-                                    self._send(409, {
-                                        "error": "removed file not in its "
-                                        "named manifest (stale client view "
-                                        "— re-read and retry)"
-                                    })
-                                    return
-                                files = M._LazyEntryList(
-                                    mdir,
-                                    tuple(untouched_recs),
-                                    tail=kept_tail + list(entries),
-                                )
-                            else:
-                                # legacy metadata (no clean list recs):
-                                # flatten and fall through
-                                removed = [
-                                    p for ps in removed_bm.values() for p in ps
-                                ]
-                        if files is None:
-                            removed_set = set(removed)
-                            cur_paths = {f.path for f in cur.files}
-                            if not removed_set <= cur_paths:
-                                self._send(
-                                    409,
-                                    {"error": "removed file not in current snapshot "
-                                     "(stale client view — re-read and retry)"},
-                                )
+                        touched = {int(k): set(v) for k, v in removed_bm.items()}
+                        recs = t._snapshot_manifest_recs(md, cur)
+                        if not set(touched) <= set(recs):
+                            self._send(409, {
+                                "error": "removed manifest not in current "
+                                "snapshot (stale client view — re-read and "
+                                "retry)"
+                            })
+                            return
+                        mdir = M.metadata_dir(loc)
+                        untouched_recs: list[dict] = []
+                        kept_tail: list = []
+                        for mid, rec in recs.items():
+                            if mid not in touched:
+                                untouched_recs.append(rec)
+                                continue
+                            # only TOUCHED manifests pay entry IO
+                            ment = M._load_manifest(mdir, rec["ref"])
+                            if not touched[mid] <= {e.path for e in ment}:
+                                self._send(409, {
+                                    "error": "removed file not in its named "
+                                    "manifest (stale client view — re-read "
+                                    "and retry)"
+                                })
                                 return
-                            files = [
-                                f for f in cur.files if f.path not in removed_set
-                            ] + list(entries)
+                            kept_tail.extend(
+                                e for e in ment if e.path not in touched[mid]
+                            )
+                        files = M._LazyEntryList(
+                            mdir,
+                            tuple(untouched_recs),
+                            tail=kept_tail + list(entries),
+                        )
                         t._new_snapshot(
                             md,
                             "overwrite" if action == "overwrite-files" else "delete",
@@ -712,25 +677,16 @@ def rest_merge(
             # file's manifest id is in hand — the server then parses only
             # the touched manifests and carries the rest by record,
             # keeping the front-door commit O(touched), not O(table).
-            # Legacy id-0 entries (pre-sharding metadata) fall back to
-            # the flat path list the server materializes for.
             untouched_paths = {f.path for f in untouched}
-            removed = [f for f in snap.files if f.path not in untouched_paths]
-            if any(f.manifest_id == 0 for f in removed):
-                update = {
-                    "action": "overwrite-files",
-                    "manifest": ref,
-                    "removed_paths": [f.path for f in removed],
-                }
-            else:
-                by_manifest: dict[str, list[str]] = {}
-                for f in removed:
+            by_manifest: dict[str, list[str]] = {}
+            for f in snap.files:
+                if f.path not in untouched_paths:
                     by_manifest.setdefault(str(f.manifest_id), []).append(f.path)
-                update = {
-                    "action": "overwrite-files",
-                    "manifest": ref,
-                    "removed_by_manifest": by_manifest,
-                }
+            update = {
+                "action": "overwrite-files",
+                "manifest": ref,
+                "removed_by_manifest": by_manifest,
+            }
         try:
             return client.commit_table(
                 namespace,

@@ -37,13 +37,6 @@ from tutorial_iceberg_spark.lakehouse import metadata as M
 from tutorial_iceberg_spark.lakehouse import transforms as T
 
 
-# Canonical definitions live in metadata.py (shared with write-time
-# manifest-summary computation); aliased here for the dynamic planning
-# path and existing importers.
-_NUMERIC_SQL_TYPES = M._NUMERIC_SQL_TYPES
-_stat_agg_key = M._stat_agg_key
-
-
 def _json_safe(v: Any):
     if isinstance(v, (datetime, date)):
         return v.isoformat(sep=" ") if isinstance(v, datetime) else v.isoformat()
@@ -293,60 +286,37 @@ class LakeTable:
         # (COPIES — the originals stay aliased in prior snapshots).
         # LSM-style amortization: each entry is rewritten O(log) times
         # over the table's life, and the list stays O(MANIFEST_MERGE_MIN)
-        # so commit bytes stay O(new files).
+        # so commit bytes stay O(new files). Carried list records count
+        # toward the policy by their record alone; only the groups a
+        # merge round picks load their entries.
         if lazy is not None:
-            recs_by_id = {r["manifest_id"]: dict(r) for r in lazy._recs}
-            tail_groups: dict[int, list[M.DataFile]] = {}
-            for f in lazy._tail:
-                tail_groups.setdefault(f.manifest_id, []).append(f)
-            sizes: dict[int, int] = {
-                **{m: r["count"] for m, r in recs_by_id.items()},
-                **{m: len(g) for m, g in tail_groups.items()},
-            }
-            if len(sizes) > self.MANIFEST_MERGE_MIN:
-                mdir = M.metadata_dir(self.location)
-                while len(sizes) > self.MANIFEST_MERGE_MIN:
-                    smallest = sorted(sizes, key=sizes.get)[
-                        : self.MANIFEST_MERGE_BATCH
-                    ]
-                    merged_src: list[M.DataFile] = []
-                    for mid in smallest:
-                        merged_src.extend(
-                            tail_groups.pop(mid)
-                            if mid in tail_groups
-                            # only the groups being merged pay entry IO
-                            else M._load_manifest(
-                                mdir, recs_by_id.pop(mid)["ref"]
-                            )
-                        )
-                        del sizes[mid]
-                    for nid, g in self._clustered_merge_groups(md, merged_src):
-                        tail_groups[nid] = g
-                        sizes[nid] = len(g)
-                files = M._LazyEntryList(
-                    M.metadata_dir(self.location),
-                    tuple(recs_by_id.values()),
-                    tail=[f for g in tail_groups.values() for f in g],
-                )
-            total_files = M.entry_count(files)
-            total_rows = M.entry_rows(files)
+            recs_by_id = {r["manifest_id"]: r for r in lazy._recs}
+            groups = M._group_by_manifest(lazy._tail)
         else:
-            groups: dict[int, list[M.DataFile]] = {}
-            for f in files:
-                groups.setdefault(f.manifest_id, []).append(f)
-            if len(groups) > self.MANIFEST_MERGE_MIN:
-                while len(groups) > self.MANIFEST_MERGE_MIN:
-                    smallest = sorted(groups, key=lambda m: len(groups[m]))[
-                        : self.MANIFEST_MERGE_BATCH
-                    ]
-                    merged_src = []
-                    for mid in smallest:
-                        merged_src.extend(groups.pop(mid))
-                    for nid, g in self._clustered_merge_groups(md, merged_src):
-                        groups[nid] = g
-                files = [f for g in groups.values() for f in g]
-            total_files = len(files)
-            total_rows = sum(f.rows for f in files)
+            recs_by_id = {}
+            groups = M._group_by_manifest(files)
+        sizes: dict[int, int] = {
+            **{m: r["count"] for m, r in recs_by_id.items()},
+            **{m: len(g) for m, g in groups.items()},
+        }
+        if len(sizes) > self.MANIFEST_MERGE_MIN:
+            mdir = M.metadata_dir(self.location)
+            while len(sizes) > self.MANIFEST_MERGE_MIN:
+                smallest = sorted(sizes, key=sizes.get)[: self.MANIFEST_MERGE_BATCH]
+                merged_src: list[M.DataFile] = []
+                for mid in smallest:
+                    merged_src.extend(
+                        groups.pop(mid)
+                        if mid in groups
+                        else M._load_manifest(mdir, recs_by_id.pop(mid)["ref"])
+                    )
+                    del sizes[mid]
+                for nid, g in self._clustered_merge_groups(md, merged_src):
+                    groups[nid] = g
+                    sizes[nid] = len(g)
+            files = [f for g in groups.values() for f in g]
+            if lazy is not None:
+                files = M._LazyEntryList(mdir, tuple(recs_by_id.values()), tail=files)
         parent = md.refs.get(ref) if ref is not None else md.current_snapshot_id
         snap = M.Snapshot(
             snapshot_id=md.last_snapshot_id,
@@ -357,7 +327,11 @@ class LakeTable:
             spec_id=md.current_spec_id,
             files=files,
             delete_files=list(delete_files or []),
-            summary={"total-files": total_files, "total-rows": total_rows, **(summary or {})},
+            summary={
+                "total-files": M.entry_count(files),
+                "total-rows": M.entry_rows(files),
+                **(summary or {}),
+            },
         )
         md.snapshots.append(snap)
         if ref is not None:
@@ -465,21 +439,18 @@ class LakeTable:
         _to_json both consume the recs directly, so no manifest entry
         file is read or parsed on the append path (r14 verdict Next #1;
         SCALE_PROBE r14 measured 0.47 s warm at 10^6 entries from the old
-        ``list(cur.files)`` materialization). Falls back to materializing
-        when the parent has no list record (legacy metadata) or still
-        references a legacy id-0 manifest group (those restamp in place,
-        so carrying them by ref would corrupt the shared cache)."""
+        ``list(cur.files)`` materialization). A parent with no list on
+        disk yet (staged in this process with ``commit=False``) is
+        carried by its materialized entries."""
         if parent is None:
             return list(new_files)
-        lref = md.manifest_list_refs.get(parent.snapshot_id)
-        if lref is not None:
-            mdir = M.metadata_dir(self.location)
-            try:
-                recs = M._load_manifest_list(mdir, lref)
-            except OSError:
-                recs = None
-            if recs is not None and all(r["manifest_id"] != 0 for r in recs):
-                return M._LazyEntryList(mdir, recs, tail=list(new_files))
+        recs = self._snapshot_manifest_recs(md, parent)
+        if recs:
+            return M._LazyEntryList(
+                M.metadata_dir(self.location),
+                tuple(recs.values()),
+                tail=list(new_files),
+            )
         return list(parent.files) + list(new_files)
 
     def append(self, df: DataFrame, properties: dict[str, str] | None = None) -> None:
@@ -934,18 +905,15 @@ class LakeTable:
     ) -> dict[int, list[M.DataFile]]:
         """Snapshot entries grouped by manifest file (planning unit)."""
         snap = snap or self.meta.snapshot()
-        groups: dict[int, list[M.DataFile]] = {}
-        for f in snap.files:
-            groups.setdefault(f.manifest_id, []).append(f)
-        return groups
+        return M._group_by_manifest(snap.files)
 
     def _snapshot_manifest_recs(
         self, md: M.TableMetadata, snap: M.Snapshot
     ) -> dict[int, dict]:
         """manifest_id -> manifest-list record (with its write-time
-        pruning summary) for this snapshot; {} when the snapshot predates
-        summaries (legacy list) — planning then falls back to the
-        dynamic per-entry aggregation."""
+        pruning summary) for this snapshot; {} for a snapshot whose list
+        is not on disk (staged with ``commit=False``, or collected by a
+        racing expiry) — callers then take its entries as they are."""
         lref = md.manifest_list_refs.get(snap.snapshot_id)
         if not lref:
             return {}
@@ -961,13 +929,13 @@ class LakeTable:
     def _summary_may_match(md, summary, conjuncts) -> bool:
         """Manifest pruning from the WRITE-TIME summary (metadata.
         manifest_summary) — O(conjuncts) per manifest instead of
-        O(member entries). Strictly MORE conservative than the dynamic
-        check: bounds cover the full original manifest (valid for any
-        carried subset), partition combos are the write-time superset,
-        and both sides compare under the same _stat_agg_key /
-        stats_may_match value order. Field-id keys survive renames; a
-        column added after the summary was written has no bound and
-        never prunes."""
+        O(member entries). Never prunes a manifest the per-file check
+        would keep: bounds cover the full original manifest (valid for
+        any carried subset), partition combos are the write-time
+        superset, and bounds aggregate under the same value order
+        (metadata._stat_agg_key) stats_may_match compares with.
+        Field-id keys survive renames; a column added after the summary
+        was written has no bound and never prunes."""
         current_by_name = {f.name: f.id for f in md.schema().fields}
         bounds = summary.get("b") or {}
         parts = summary.get("p")
@@ -1007,27 +975,13 @@ class LakeTable:
         md = self.meta
         snap = snap or md.snapshot()
         conjuncts = T.parse_conjuncts(pred_sql)
-        recs = self._snapshot_manifest_recs(md, snap)
-        if recs and all("summary" in r for r in recs.values()):
-            # summary-only planning: zero manifest-entry IO
-            if conjuncts is None:
-                return len(recs), len(recs)
-            touched = sum(
-                self._summary_may_match(md, r["summary"], conjuncts)
-                for r in recs.values()
-            )
-            return touched, len(recs)
-        groups = self.manifest_groups(snap)
+        recs = self._snapshot_manifest_recs(md, snap).values()
         if conjuncts is None:
-            return len(groups), len(groups)
-        touched = 0
-        for mid, g in groups.items():
-            summ = (recs.get(mid) or {}).get("summary")
-            if summ is not None:
-                touched += self._summary_may_match(md, summ, conjuncts)
-            else:
-                touched += self._manifest_may_match(md, g, conjuncts)
-        return touched, len(groups)
+            return len(recs), len(recs)
+        touched = sum(
+            self._summary_may_match(md, r["summary"], conjuncts) for r in recs
+        )
+        return touched, len(recs)
 
     @staticmethod
     def _written_source_types(
@@ -1047,77 +1001,6 @@ class LakeTable:
             if pf.source_id in by_id
         }
 
-    @staticmethod
-    def _manifest_may_match(md, group, conjuncts) -> bool:
-        """Aggregate (manifest-level) pruning check: a manifest whose
-        per-column aggregate min/max and partition-value summary exclude a
-        conjunct cannot contain a matching file. Conservative: any column
-        missing stats in ANY member file has no aggregate bound. O(distinct
-        partitions + columns) per manifest, vs O(files) per-file checks."""
-        current_by_name = {f.name: f.id for f in md.schema().fields}
-        source_types = {f.name: f.type for f in md.schema().fields}
-        # aggregate column stats: elementwise min/max where every file
-        # reports the column under the same written name
-        agg: dict[str, list] = {}
-        complete: dict[str, bool] = {}
-        for f in group:
-            written = md.schema(f.schema_id).by_id()
-            for cur, fid in current_by_name.items():
-                if fid not in written:
-                    # file predates the column: its rows materialize the
-                    # read-time default, which no footer stat bounds
-                    complete[cur] = False
-                    continue
-                wname = written[fid].name
-                st = f.stats.get(wname)
-                if st is None:
-                    complete[cur] = False
-                    continue
-                # aggregate under the value order stats_may_match compares
-                # with — NOT raw min()/max(), which is lexicographic for
-                # Decimal-as-string stats and would invert the bound
-                lo = _stat_agg_key(st[0], source_types.get(cur))
-                hi = _stat_agg_key(st[1], source_types.get(cur))
-                if lo is None or hi is None:
-                    complete[cur] = False
-                    continue
-                complete.setdefault(cur, True)
-                cur_agg = agg.get(cur)
-                if cur_agg is None:
-                    agg[cur] = [lo, hi]
-                else:
-                    try:
-                        agg[cur] = [
-                            min(cur_agg[0], lo),
-                            max(cur_agg[1], hi),
-                        ]
-                    except TypeError:  # mixed key types across files
-                        complete[cur] = False
-        # partition summary: distinct (spec, written-schema, partition-tuple)
-        # combos — schema_id rides along so the bucket gate sees the type
-        # the writer hashed under, not the (possibly promoted) current one
-        combos = {
-            (f.spec_id, f.schema_id, tuple(sorted(f.partition.items())))
-            for f in group
-        }
-        wtypes = {
-            (sid, schid): LakeTable._written_source_types(md, md.spec(sid), schid)
-            for sid, schid, _ in combos
-        }
-        for col, op, val in conjuncts:
-            if complete.get(col) and not T.stats_may_match(agg[col], op, val):
-                return False
-            # the manifest matches only if SOME member partition may match
-            if not any(
-                T.partition_may_match(
-                    md.spec(sid).fields, dict(pv), col, op, val,
-                    wtypes[(sid, schid)],
-                )
-                for sid, schid, pv in combos
-            ):
-                return False
-        return True
-
     def _candidates(
         self, md: M.TableMetadata, snap: M.Snapshot, pred_sql: str
     ) -> list[M.DataFile]:
@@ -1126,37 +1009,23 @@ class LakeTable:
             return list(snap.files)
         # manifest-level short-circuit first (Iceberg's two-tier plan:
         # manifest list summaries -> manifest entries): a pruned manifest
-        # skips ALL its per-file checks. Behavior-neutral — per-file
-        # pruning below would reject the same files — but the planning
-        # cost drops from O(files) to O(surviving files + manifests)
-        # when manifests are selective (see rewrite_manifests). The
-        # write-time summary stored in the manifest-list rec makes the
-        # per-manifest check O(conjuncts) (r14); legacy snapshots
-        # without summaries fall back to the dynamic aggregation.
-        scan_files: list[M.DataFile] = []
+        # skips ALL its per-file checks, and its ENTRIES are never parsed.
+        # Behavior-neutral — per-file pruning below would reject the same
+        # files — but planning IO drops from O(table) to O(surviving
+        # manifests) when manifests are selective (see
+        # rewrite_manifests). A snapshot with no list on disk yet is
+        # checked file by file.
         recs = self._snapshot_manifest_recs(md, snap)
-        if len(recs) > 1 and all("summary" in r for r in recs.values()):
-            # lazy two-tier path: the recs fully describe this snapshot's
-            # manifests, so pruned manifests' ENTRIES are never parsed —
-            # planning IO is O(surviving manifests), not O(table)
+        if recs:
             mdir = M.metadata_dir(self.location)
-            for rec in recs.values():
-                if self._summary_may_match(md, rec["summary"], conjuncts):
-                    scan_files.extend(M._load_manifest(mdir, rec["ref"]))
+            scan_files: list[M.DataFile] = [
+                f
+                for rec in recs.values()
+                if self._summary_may_match(md, rec["summary"], conjuncts)
+                for f in M._load_manifest(mdir, rec["ref"])
+            ]
         else:
-            groups = self.manifest_groups(snap)
-            if len(groups) > 1:
-                for mid, g in groups.items():
-                    summ = (recs.get(mid) or {}).get("summary")
-                    keep = (
-                        self._summary_may_match(md, summ, conjuncts)
-                        if summ is not None
-                        else self._manifest_may_match(md, g, conjuncts)
-                    )
-                    if keep:
-                        scan_files.extend(g)
-            else:
-                scan_files = list(snap.files)
+            scan_files = list(snap.files)
         # predicate references current names; map back to write-time names
         current_by_name = {f.name: f.id for f in md.schema().fields}
         # written-time partition-source types per (spec, schema) generation —
@@ -2130,7 +1999,7 @@ class LakeTable:
         rewrite_data_files. After N commits a snapshot references N
         manifests, each an append's worth of entries spanning the whole
         partition/key space, so manifest-level planning
-        (_manifest_may_match) can skip nothing and every scan pays
+        (_summary_may_match) can skip nothing and every scan pays
         O(all entries). This op rewrites the manifest layer only: entries
         are re-sorted by partition values (falling back to the first
         schema column's min stat for unpartitioned tables) and packed
@@ -2191,23 +2060,15 @@ class LakeTable:
     ) -> set[str]:
         """Manifest sidecar filenames these snapshots reference — EXACT,
         from each snapshot's own manifest-list records (r14 review: the
-        earlier (manifest_id, count) bookkeeping both collided across
-        non-chain histories and omitted legacy id-0 groups, so GC could
-        classify a live manifest as dead). Zero entry IO: only the
-        (cached) list sidecars are read. Snapshots without a list ref
-        (legacy inline format) reference no sidecars."""
-        mdir = M.metadata_dir(self.location)
-        refs: set[str] = set()
-        for s in snaps:
-            lref = md.manifest_list_refs.get(s.snapshot_id)
-            if not lref:
-                continue
-            try:
-                recs = M._load_manifest_list(mdir, lref)
-            except OSError:
-                continue  # list already collected: nothing to protect
-            refs.update(r["ref"] for r in recs)
-        return refs
+        earlier (manifest_id, count) bookkeeping collided across
+        non-chain histories, so GC could classify a live manifest as
+        dead). Zero entry IO: only the (cached) list sidecars are read.
+        A snapshot whose list is already collected protects nothing."""
+        return {
+            r["ref"]
+            for s in snaps
+            for r in self._snapshot_manifest_recs(md, s).values()
+        }
 
     def expire_snapshots(self, older_than_ms: int | None = None, keep_last: int = 1) -> list[str]:
         """D13 CALL expire_snapshots — README.md:1025. Removes expired
