@@ -118,9 +118,9 @@ def test_lsh_candidate_edges_equal_all_pairs_edges(spark):
 
 def test_lsh_candidate_path_has_no_nested_loop_join(spark, sf_dir):
     """Scale-path plan gate: the candidate route must be pure equi-joins —
-    no BroadcastNestedLoopJoin, no CartesianProduct, and no broadcast of
-    the full embeddings table (query-set/centroid broadcasts don't appear
-    in this plan at all)."""
+    no BroadcastNestedLoopJoin and no CartesianProduct (the embedding
+    verification sides may still pin broadcast under lsh_route's bytes
+    budget)."""
     df = G.cosine_edges(spark, sf_dir, candidates="lsh")
     plan = _plan(df)
     assert "BroadcastNestedLoopJoin" not in plan

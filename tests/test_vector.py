@@ -67,7 +67,8 @@ def test_hyperplane_lsh_identical_vectors_always_collide(spark, sf_dir):
         "vec_id", F.col("vec_id") + 10_000_000
     )
     both = u.unionByName(twins)
-    sigs = {r["vec_id"]: r["sig"] for r in V.hyperplane_signatures(both, dim).collect()}
+    kk = V.hyperplane_band_keys(both, dim, V.N_PLANES // V.PLANE_BANDS, V.PLANE_BANDS, 0)
+    sigs = {r["vec_id"]: r["keys"] for r in kk.collect()}
     for i in range(3):
         assert sigs[i] == sigs[i + 10_000_000]
 
@@ -101,7 +102,7 @@ def test_hyperplane_signature_build_is_single_pass(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     dim = emb.select(F.size("embedding")).first()[0]
     u = emb.select("vec_id", V._unit(F.col("embedding")).alias("u"))
-    plan = plan_of(V.hyperplane_signatures(u, dim))
+    plan = plan_of(V.hyperplane_band_keys(u, dim, 2, 16, 6))
     assert "MapInPandas" in plan
     assert "Generate" not in plan
     assert "Exchange" not in plan
@@ -115,10 +116,8 @@ def test_hyperplane_lsh_candidates_are_selective(spark, sf_dir):
     dim = emb.select(F.size("embedding")).first()[0]
     u = emb.select("vec_id", V._unit(F.col("embedding")).alias("u"))
     bpb = V.N_PLANES // V.PLANE_BANDS
-    bands = (
-        V.hyperplane_signatures(u, dim)
-        .select("vec_id", F.explode(F.array(*V._band_cols(bpb))).alias("bk"))
-        .select("vec_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    bands = V.hyperplane_band_keys(u, dim, bpb, V.PLANE_BANDS, 0).select(
+        "vec_id", F.posexplode("keys").alias("band", "key")
     )
     a, b = bands.alias("a"), bands.alias("b")
     nc = (
@@ -496,17 +495,42 @@ def test_lsh_auto_candidates_recall_and_subset(spark, sf_dir):
     assert len(auto) / len(truth) >= 0.70, (len(auto), len(truth))
 
 
-def test_lsh_sized_path_equals_fixed_when_config_matches(spark, sf_dir):
-    """hyperplane_band_keys packs per-band keys from its own plane
-    layout, so pair sets differ from the packed-int64 path in general —
-    but the SAME census/cap/split machinery applies (shared
-    _apply_bucket_cap); with no cap, every vector appears in every band
-    exactly once in both paths."""
+def test_lsh_routes_share_one_plane_layout(spark, sf_dir):
+    """Every LSH route (the ANN query's 4x4-bit bands, FIXED_LSH_SIZING,
+    an lsh_auto_size config) reads ONE plane layout of the seeded sign
+    matrix: band bi's key packs planes [bi*b, (bi+1)*b), least
+    significant bit first, and its reserve key packs planes
+    [L*b + bi*rb, L*b + (bi+1)*rb). Recomputed with numpy for a handful
+    of vectors; with no cap, every vector appears once per band."""
+    import numpy as np
+
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
     dim = emb.select(F.size("embedding")).first()[0]
-    sizing = {"bits_per_band": 2, "n_bands": 16, "rb": 6}
-    bands = V._lsh_bands_sized(emb, dim, sizing, bucket_cap=None)
+    u = emb.select("vec_id", V._unit(F.col("embedding")).alias("u"))
+    few = {r["vec_id"]: np.asarray(r["u"]) for r in u.filter("vec_id < 8").collect()}
+    assert len(few) == 8
+
+    def packed(bits):  # least significant bit first
+        return int(sum(int(x) << j for j, x in enumerate(bits)))
+
+    ann = {"bits_per_band": V.N_PLANES // V.PLANE_BANDS, "n_bands": V.PLANE_BANDS, "rb": 0}
+    for sizing in (ann, V.FIXED_LSH_SIZING, V.lsh_auto_size(n)):
+        b, L, rb = sizing["bits_per_band"], sizing["n_bands"], sizing["rb"]
+        signs = V._sign_matrix(dim, L * (b + rb))
+        want_k, want_r = {}, {}
+        for vid, vec in few.items():
+            bits = (signs @ vec) > 0
+            for bi in range(L):
+                want_k[vid, bi] = packed(bits[bi * b : (bi + 1) * b])
+                want_r[vid, bi] = packed(bits[L * b + bi * rb : L * b + (bi + 1) * rb])
+        kk = V.hyperplane_band_keys(u.filter("vec_id < 8"), dim, b, L, rb).collect()
+        assert {(r.vec_id, bi): k for r in kk for bi, k in enumerate(r["keys"])} == want_k
+        assert {(r.vec_id, bi): k for r in kk for bi, k in enumerate(r["rkeys"])} == want_r
+        bands = V._lsh_bands(emb, dim, sizing, bucket_cap=None)
+        got = {(r.vec_id, r.band): r.key for r in bands.filter("vec_id < 8").collect()}
+        assert got == want_k, sizing
+    bands = V._lsh_bands(emb, dim, bucket_cap=None)
     per_vec = bands.groupBy("vec_id").count().agg(F.min("count"), F.max("count")).first()
     assert per_vec[0] == per_vec[1] == 16
     assert bands.count() == 16 * n
@@ -587,7 +611,7 @@ def test_first_collision_dedup_equals_distinct(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     dim = emb.select(F.size("embedding")).first()[0]
     sizing = V.lsh_auto_size(emb.count())
-    bands = V._lsh_bands_sized(emb, dim, sizing)
+    bands = V._lsh_bands(emb, dim, sizing)
     x, y = bands.alias("x"), bands.alias("y")
     pairs = x.join(
         y,

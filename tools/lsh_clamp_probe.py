@@ -24,7 +24,7 @@ transfers — only the absolute numbers are probe-scale.
 Three regimes, same code path:
   A  split-active, below clamp   (K=400:  max census < 1,024)
   B  CLAMP                       (K=6,000: max census >> 1,024)
-  C  B + the warning's mitigation (_LSH_RESERVE_BITS_PER_BAND 6 -> 12:
+  C  B + the warning's mitigation (the sizing's rb 6 -> 12:
      clamp threshold rises to cap<<12 = 65,536, the dense bucket splits
      fully; recall pays for the deeper split — that tradeoff is the
      point of measuring)
@@ -89,7 +89,6 @@ def main() -> None:
         ("B_clamp", 6000, 6),
         ("C_clamp_mitigated_rb12", 6000, 12),
     ]
-    rb_default = V._LSH_RESERVE_BITS_PER_BAND
     rows = []
     for name, k, rb in regimes:
         pdf, vecs = _cluster(k, dim)
@@ -107,14 +106,13 @@ def main() -> None:
         )
 
         V._LSH_CLAMP_EVENTS.clear()
-        V._LSH_RESERVE_BITS_PER_BAND = rb
         t0 = time.perf_counter()
-        try:
-            cands = V.lsh_candidate_pairs(
-                emb, dim, bucket_cap=PROBE_CAP
-            ).persist()
-        finally:
-            V._LSH_RESERVE_BITS_PER_BAND = rb_default
+        cands = V.lsh_candidate_pairs(
+            emb,
+            dim,
+            bucket_cap=PROBE_CAP,
+            sizing=dict(V.FIXED_LSH_SIZING, rb=rb),
+        ).persist()
         n_cands = cands.count()
         wall = time.perf_counter() - t0
         clamped = len(V._LSH_CLAMP_EVENTS)

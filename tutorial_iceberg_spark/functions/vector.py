@@ -575,82 +575,56 @@ def _sign_matrix(dim: int, n_planes: int = N_PLANES, seed: int = _PLANE_SEED):
     )
 
 
-# Reserve words pack this many planes each (48 = 8 bands x 6 bits with
-# the _lsh_bands defaults; <= 63 so a word fits a signed int64).
-_RESERVE_WORD_BITS = 48
-
-
-def hyperplane_signatures(
-    emb_u: DataFrame,
-    dim: int,
-    n_planes: int = N_PLANES,
-    seed: int = _PLANE_SEED,
-    reserve_planes: int = 0,
+def hyperplane_band_keys(
+    emb_u: DataFrame, dim: int, bits_per_band: int, n_bands: int, rb: int
 ) -> DataFrame:
-    """vec_id -> n_planes-bit signature: ONE Arrow batch pass, ZERO shuffle.
+    """vec_id -> per-band key/reserve-key ARRAYS: ONE Arrow batch pass,
+    ZERO shuffle.
 
     Each batch is a single numpy matmul ``vecs @ signs.T`` followed by a
-    sign-bit pack — the same build pattern as dedup._index_batches. This
-    replaces the old posexplode -> sign-table join -> two keyed
-    aggregations, which exploded every vector to dim rows and shuffled
-    them twice before banding; embarrassingly parallel, scales linearly
-    with corpus bytes. n_planes is capped at 63 so the packed signature
-    fits a signed int64 without touching the sign bit.
-
-    ``reserve_planes`` > 0 appends extra hyperplane bits for the
-    bucket-cap sub-split (see _lsh_bands), packed _RESERVE_WORD_BITS per
-    additional ``rk{i}`` int64 column — drawn from the SAME seeded plane
-    matrix (rows n_planes..), so the primary signature is bit-identical
-    with or without reserves."""
-    if not 0 < n_planes < 64:
-        raise ValueError(f"n_planes must be in [1, 63], got {n_planes}")
-
-    n_words = -(-reserve_planes // _RESERVE_WORD_BITS) if reserve_planes else 0
+    per-band sign-bit pack — the same build pattern as
+    dedup._index_batches. The one plane layout every LSH route shares:
+    band bi's key packs planes [bi*b, (bi+1)*b) of the seeded sign
+    matrix, least significant bit first; its reserve key (the bucket-cap
+    sub-split, see _lsh_bands) packs planes [L*b + bi*rb, L*b +
+    (bi+1)*rb). Each key is packed on its own, so the plane count is
+    unbounded while every key still fits an int64 (bits_per_band, rb <=
+    62). Embarrassingly parallel; linear in corpus bytes."""
+    if not 0 < bits_per_band < 63 or not 0 <= rb < 63:
+        raise ValueError(f"bits out of range: {bits_per_band=} {rb=}")
 
     def batches(it):
         import numpy as np
         import pandas as pd
 
-        total = n_planes + reserve_planes
-        signs_t = _sign_matrix(dim, total, seed).T  # (dim, total)
-        w_sig = (np.int64(1) << np.arange(n_planes, dtype=np.int64))
+        total = n_bands * (bits_per_band + rb)
+        signs_t = _sign_matrix(dim, total).T  # (dim, total)
+        w_prim = np.int64(1) << np.arange(bits_per_band, dtype=np.int64)
+        w_res = np.int64(1) << np.arange(rb, dtype=np.int64)
+        prim_w = n_bands * bits_per_band
         for pdf in it:
-            if len(pdf):
+            rows = len(pdf)
+            if rows:
                 vecs = np.vstack(pdf["u"].to_numpy())  # (rows, dim)
                 bits = (vecs @ signs_t) > 0  # (rows, total)
-                sig = bits[:, :n_planes] @ w_sig
+                keys = bits[:, :prim_w].reshape(rows, n_bands, bits_per_band) @ w_prim
+                if rb:
+                    rkeys = bits[:, prim_w:].reshape(rows, n_bands, rb) @ w_res
+                else:
+                    rkeys = np.zeros((rows, n_bands), dtype=np.int64)
             else:
-                bits = np.zeros((0, n_planes + reserve_planes), dtype=bool)
-                sig = np.empty(0, dtype=np.int64)
-            out = {"vec_id": pdf["vec_id"], "sig": sig}
-            for w in range(n_words):
-                lo = n_planes + w * _RESERVE_WORD_BITS
-                hi = min(lo + _RESERVE_WORD_BITS, n_planes + reserve_planes)
-                ww = (np.int64(1) << np.arange(hi - lo, dtype=np.int64))
-                out[f"rk{w}"] = (
-                    bits[:, lo:hi] @ ww
-                    if len(pdf)
-                    else np.empty(0, dtype=np.int64)
-                )
-            yield pd.DataFrame(out)
+                keys = rkeys = np.zeros((0, n_bands), dtype=np.int64)
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf["vec_id"],
+                    "keys": list(keys),
+                    "rkeys": list(rkeys),
+                }
+            )
 
-    schema = "vec_id bigint, sig bigint" + "".join(
-        f", rk{w} bigint" for w in range(n_words)
+    return emb_u.mapInPandas(
+        batches, "vec_id bigint, keys array<bigint>, rkeys array<bigint>"
     )
-    return emb_u.mapInPandas(batches, schema)
-
-
-def _band_cols(bits_per_band: int, n_bands: int = PLANE_BANDS):
-    mask = (1 << bits_per_band) - 1
-    return [
-        F.struct(
-            F.lit(bi).alias("band"),
-            F.expr(f"shiftright(sig, {bi * bits_per_band})")
-            .bitwiseAND(mask)
-            .alias("key"),
-        )
-        for bi in range(n_bands)
-    ]
 
 
 # Bucket-size cap for the banded self-join. With fixed-width band keys
@@ -686,73 +660,58 @@ _LSH_RESERVE_BITS_PER_BAND = 6
 _LSH_CLAMP_EVENTS: list[str] = []
 
 
+# The fixed band configuration behind the "lsh" candidate route: 16
+# bands of 2 bits plus the per-band reserve slices. lsh_auto_size
+# returns the same keys with census-sized values; both run through the
+# one kernel (hyperplane_band_keys) and the one band builder below.
+FIXED_LSH_SIZING = {
+    "bits_per_band": 2,
+    "n_bands": 16,
+    "rb": _LSH_RESERVE_BITS_PER_BAND,
+}
+
+
 def _lsh_bands(
     emb: DataFrame,
     dim: int,
-    n_planes: int = 32,
-    n_bands: int = 16,
-    seed: int = _PLANE_SEED,
+    sizing: dict = FIXED_LSH_SIZING,
     bucket_cap: int | None = LSH_BUCKET_CAP,
 ) -> DataFrame:
-    """(vec_id, band, key) bucket assignments for the banded self-join,
-    with oversized buckets sub-split on per-band reserve signature bits
-    (see LSH_BUCKET_CAP / _LSH_RESERVE_BITS_PER_BAND). Factored out of
-    lsh_candidate_pairs so the cap's sub-bucket bound is testable."""
+    """(vec_id, band, key) bucket assignments for the banded self-join
+    under a band configuration (FIXED_LSH_SIZING or an
+    :func:`lsh_auto_size` dict), with oversized buckets sub-split on
+    per-band reserve signature bits (see LSH_BUCKET_CAP /
+    _LSH_RESERVE_BITS_PER_BAND). Factored out of lsh_candidate_pairs so
+    the cap's sub-bucket bound is testable."""
+    rb = sizing["rb"] if bucket_cap else 0
     u = emb.select("vec_id", _unit(F.col("embedding")).alias("u"))
-    bits_per_band = n_planes // n_bands
-    rb = _LSH_RESERVE_BITS_PER_BAND if bucket_cap else 0
-    sigs = hyperplane_signatures(
-        u, dim, n_planes=n_planes, seed=seed, reserve_planes=rb * n_bands
-    )
-    per_band = 8 if not rb else _RESERVE_WORD_BITS // rb  # bands per word
-
-    def _rk(bi: int):
-        # band bi's disjoint reserve slice from its packed word
-        w, off = divmod(bi, per_band)
-        return (
-            F.expr(f"shiftright(rk{w}, {off * rb})")
-            .bitwiseAND((1 << rb) - 1)
-            .alias("rkey")
+    kk = hyperplane_band_keys(u, dim, sizing["bits_per_band"], sizing["n_bands"], rb)
+    bands = (
+        kk.select(
+            "vec_id",
+            F.posexplode(F.arrays_zip("keys", "rkeys")).alias("band", "kr"),
         )
-
-    mask = (1 << bits_per_band) - 1
-    bands = sigs.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.expr(f"shiftright(sig, {bi * bits_per_band})")
-                        .bitwiseAND(mask)
-                        .alias("key"),
-                        *([_rk(bi)] if rb else []),
-                    )
-                    for bi in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("vec_id", "bk.*")
-    # Materialize the exploded bands ONCE (lazy local checkpoint,
-    # realized by the first downstream job): the bucket census and BOTH
-    # sides of the candidate self-join read this frame, so without a
-    # barrier the Arrow signature matmul re-runs 3+ times per call
-    # (round-9 ADVICE low; the same frame in _lsh_bands_sized measured
-    # 3.16 s vs 4.21 s plain). Two checkpoint generations — far under this
-    # build's measured ~16-generation localCheckpoint cliff.
-    bands = bands.localCheckpoint(eager=False)
+        .select(
+            "vec_id",
+            "band",
+            F.col("kr.keys").alias("key"),
+            F.col("kr.rkeys").alias("rkey"),
+        )
+        # census + both self-join sides read this: sf0.01
+        # x_sim_join_lsh_auto, 10 A/B pairs, 3.16 s vs 4.21 s plain
+        # (slower in 10 of 10)
+        .localCheckpoint(eager=False)
+    )
     if not bucket_cap:
-        return bands
+        return bands.drop("rkey")
     return _apply_bucket_cap(bands, rb, bucket_cap)
 
 
 def _apply_bucket_cap(bands: DataFrame, rb: int, bucket_cap: int) -> DataFrame:
     """Census + consistent sub-split of oversized (band, key) buckets on
-    each row's ``rkey`` reserve bits. Shared verbatim by the fixed-width
-    `_lsh_bands` path and the auto-sized wide path (`_lsh_bands_sized`),
-    so the clamp warning, fast path, and split-key bijection behave
-    identically however the band keys were packed. ``bands`` must carry
-    (vec_id, band, key, rkey)."""
+    each row's ``rkey`` reserve bits, for every band configuration
+    `_lsh_bands` builds. ``bands`` must carry (vec_id, band, key,
+    rkey)."""
     # bucket census: at most n_bands * 2^bits_per_band rows — AQE
     # broadcasts it back onto the bands frame, no corpus shuffle.
     # extra = floor(log2((cnt-1)/cap)) + 1 (exact-power-robust) so that
@@ -792,7 +751,7 @@ def _apply_bucket_cap(bands: DataFrame, rb: int, bucket_cap: int) -> DataFrame:
     # 2^rb * cap, the reserve width cannot fully split it and the
     # O(n_bands * n * cap) candidate bound quietly degrades toward the
     # residual 2^rb * cap bound — warn with the worst offender so a
-    # deployment at extreme density raises rb / n_planes instead of
+    # deployment at extreme density raises rb / bits_per_band instead of
     # discovering it in wall time. One aggregation job on the <=
     # n_bands * 2^bits_per_band-row census, nothing corpus-sized.
     over = sizes.agg(
@@ -808,8 +767,7 @@ def _apply_bucket_cap(bands: DataFrame, rb: int, bucket_cap: int) -> DataFrame:
             f"LSH bucket cap clamp binds: {over['n_clamped']} bucket(s) "
             f"exceed 2^{rb} * cap = {bucket_cap << rb} rows (max "
             f"{over['max_cnt']}); residual per-sub-bucket bound is "
-            f"2^{rb} * cap. Raise _LSH_RESERVE_BITS_PER_BAND or n_planes "
-            "for this density."
+            f"2^{rb} * cap. Raise rb or bits_per_band for this density."
         )
         _LSH_CLAMP_EVENTS.append(msg)
         warnings.warn(msg)
@@ -848,18 +806,17 @@ def _apply_bucket_cap(bands: DataFrame, rb: int, bucket_cap: int) -> DataFrame:
 # ---------------------------------------------------------------------------
 # LSH constant auto-sizing (round-10 verdict Next #3)
 #
-# At FIXED constants (32 planes / 16 x 2-bit bands / rb=6) the scale
-# probes measured within-copy recall drifting 0.678 @ 10x -> 0.494 @ 30x:
-# as corpus density rises past cap/2^bits, the bucket-cap split spends
-# reserve bits, and every extra bit prices true pairs by p^extra per
-# band. The fix is not a bigger cap (that re-opens the quadratic
-# candidate bound) but LSH's textbook scaling law: bits_per_band must
-# grow with log2(n/cap) so buckets stay under the cap WITHOUT splits,
-# and the band count must grow to hold recall at the design threshold —
-# planes ~ O(log n * bands). The packed-int64 primary signature hard-caps
-# n_planes at 63, which is exactly why the fixed path drifts; the sized
-# path below packs per-band keys in ONE Arrow pass with no 63-plane
-# ceiling (same single matmul, just a wider sign matrix).
+# At FIXED constants (FIXED_LSH_SIZING: 16 x 2-bit bands / rb=6) the
+# scale probes measured within-copy recall drifting 0.678 @ 10x -> 0.494
+# @ 30x: the constants do not grow with density, so as corpus density
+# rises past cap/2^bits the bucket-cap split spends reserve bits, and
+# every extra bit prices true pairs by p^extra per band. The fix is not
+# a bigger cap (that re-opens the quadratic candidate bound) but LSH's
+# textbook scaling law: bits_per_band must grow with log2(n/cap) so
+# buckets stay under the cap WITHOUT splits, and the band count must
+# grow to hold recall at the design threshold — planes ~ O(log n *
+# bands). Both configurations run through the same band-key kernel,
+# whose plane count is unbounded (a wider sign matrix, same matmul).
 # ---------------------------------------------------------------------------
 
 
@@ -884,8 +841,8 @@ def lsh_auto_size(
 
     The census is ``n_vectors`` (a parquet-footer row count — no scan).
     Sizing math, validated against the measured probes (the analytic
-    model reproduces the measured 0.678/0.494 drift of the fixed path
-    within a few points):
+    model reproduces the measured 0.678/0.494 drift of FIXED_LSH_SIZING,
+    whose constants do not grow with density, within a few points):
 
     - per-plane collision prob of a threshold pair
       p = 1 - theta/pi, theta = acos(sim_threshold); of a background
@@ -971,113 +928,17 @@ def lsh_auto_size(
     }
 
 
-def hyperplane_band_keys(
-    emb_u: DataFrame,
-    dim: int,
-    bits_per_band: int,
-    n_bands: int,
-    rb: int,
-    seed: int = _PLANE_SEED,
-) -> DataFrame:
-    """vec_id -> per-band key/reserve-key ARRAYS in one Arrow pass.
-
-    The wide twin of :func:`hyperplane_signatures` for auto-sized
-    configurations whose total plane count exceeds the packed-int64
-    63-plane ceiling: plane layout is [band0 primary bits | band1 ... |
-    then all reserve slices], drawn from the same seeded sign matrix
-    scheme, and each band's key is packed independently — so the plane
-    budget is unbounded while every key still fits an int64
-    (bits_per_band, rb <= 62). Same single ``vecs @ signs.T`` matmul, no
-    shuffle, linear in corpus bytes."""
-    if not 0 < bits_per_band < 63 or not 0 <= rb < 63:
-        raise ValueError(f"bits out of range: {bits_per_band=} {rb=}")
-
-    def batches(it):
-        import numpy as np
-        import pandas as pd
-
-        total = n_bands * (bits_per_band + rb)
-        signs_t = _sign_matrix(dim, total, seed).T  # (dim, total)
-        w_prim = np.int64(1) << np.arange(bits_per_band, dtype=np.int64)
-        w_res = np.int64(1) << np.arange(rb, dtype=np.int64)
-        prim_w = n_bands * bits_per_band
-        for pdf in it:
-            rows = len(pdf)
-            if rows:
-                vecs = np.vstack(pdf["u"].to_numpy())  # (rows, dim)
-                bits = (vecs @ signs_t) > 0  # (rows, total)
-                keys = bits[:, :prim_w].reshape(rows, n_bands, bits_per_band) @ w_prim
-                if rb:
-                    rkeys = bits[:, prim_w:].reshape(rows, n_bands, rb) @ w_res
-                else:
-                    rkeys = np.zeros((rows, n_bands), dtype=np.int64)
-            else:
-                keys = rkeys = np.zeros((0, n_bands), dtype=np.int64)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "keys": list(keys),
-                    "rkeys": list(rkeys),
-                }
-            )
-
-    return emb_u.mapInPandas(
-        batches, "vec_id bigint, keys array<bigint>, rkeys array<bigint>"
-    )
-
-
-def _lsh_bands_sized(
-    emb: DataFrame,
-    dim: int,
-    sizing: dict,
-    seed: int = _PLANE_SEED,
-    bucket_cap: int | None = LSH_BUCKET_CAP,
-) -> DataFrame:
-    """(vec_id, band, key) assignments under an explicit
-    :func:`lsh_auto_size` configuration — wide band keys, then the SAME
-    census/cap/split machinery as the fixed path (splits are expected to
-    be census-rare here since sizing targets density cap/2, but skewed
-    real corpora still get the rb back-stop and the clamp warning)."""
-    rb = sizing["rb"] if bucket_cap else 0
-    u = emb.select("vec_id", _unit(F.col("embedding")).alias("u"))
-    kk = hyperplane_band_keys(
-        u, dim, sizing["bits_per_band"], sizing["n_bands"], rb, seed=seed
-    )
-    bands = (
-        kk.select(
-            "vec_id",
-            F.posexplode(F.arrays_zip("keys", "rkeys")).alias("band", "kr"),
-        )
-        .select(
-            "vec_id",
-            "band",
-            F.col("kr.keys").alias("key"),
-            F.col("kr.rkeys").alias("rkey"),
-        )
-        # census + both self-join sides read this: sf0.01
-        # x_sim_join_lsh_auto, 10 A/B pairs, 3.16 s vs 4.21 s plain
-        # (slower in 10 of 10)
-        .localCheckpoint(eager=False)
-    )
-    if not bucket_cap:
-        return bands.drop("rkey")
-    return _apply_bucket_cap(bands, rb, bucket_cap)
-
-
 def lsh_candidate_pairs(
     emb: DataFrame,
     dim: int,
-    n_planes: int = 32,
-    n_bands: int = 16,
-    seed: int = _PLANE_SEED,
     bucket_cap: int | None = LSH_BUCKET_CAP,
-    sizing: dict | None = None,
+    sizing: dict = FIXED_LSH_SIZING,
 ) -> DataFrame:
     """Distinct (left_id, right_id) candidate pairs via an LSH band-bucket
     SELF-join — the scale-path pair generator for threshold similarity
     joins and semantic dedup (operators/graph.py).
 
-    Plan shape: one zero-shuffle Arrow signature pass, a band explode, a
+    Plan shape: one zero-shuffle Arrow band-key pass, a band explode, a
     tiny bucket-census aggregation (keyspace <= n_bands * 2^bits rows),
     and a bucketed equi-join on (band, key) — every stage hash-partitions
     on bounded keys; NO broadcast of the corpus and NO nested-loop join,
@@ -1093,22 +954,12 @@ def lsh_candidate_pairs(
     buckets are dense. Recall, the candidate-superset property, and the
     cap's sub-bucket bound are pytest-gated on the testdata.
 
-    ``sizing`` (a :func:`lsh_auto_size` dict) switches to the auto-sized
-    wide band path, which holds recall roughly flat as corpus density
-    grows instead of letting the fixed 63-plane budget drift it down."""
-    if sizing is not None:
-        bands = _lsh_bands_sized(
-            emb, dim, sizing, seed=seed, bucket_cap=bucket_cap
-        )
-    else:
-        bands = _lsh_bands(
-            emb,
-            dim,
-            n_planes=n_planes,
-            n_bands=n_bands,
-            seed=seed,
-            bucket_cap=bucket_cap,
-        )
+    ``sizing`` is the band configuration: FIXED_LSH_SIZING by default,
+    or an :func:`lsh_auto_size` dict, whose bits and bands grow with the
+    corpus census so recall holds roughly flat as density grows instead
+    of drifting under constants that do not grow with it. Only a sizing
+    with a census (``n_vectors``) can take the first-collision dedup."""
+    bands = _lsh_bands(emb, dim, sizing, bucket_cap=bucket_cap)
     x, y = bands.alias("x"), bands.alias("y")
     pairs = x.join(
         y,
@@ -1223,12 +1074,9 @@ def x_ann_hyperplane_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     dim = emb.select(F.size("embedding")).first()[0]
     u = emb.select("vec_id", _unit(F.col("embedding")).alias("u"))
-    bits_per_band = N_PLANES // PLANE_BANDS
-    bands = (
-        hyperplane_signatures(u, dim)
-        .select("vec_id", F.explode(F.array(*_band_cols(bits_per_band))).alias("bk"))
-        .select("vec_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    )
+    bands = hyperplane_band_keys(
+        u, dim, N_PLANES // PLANE_BANDS, PLANE_BANDS, 0
+    ).select("vec_id", F.posexplode("keys").alias("band", "key"))
     q_bands = bands.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "band", "key"
     )
@@ -1669,83 +1517,39 @@ KNN_LSH_CAND_BUDGET = 1024
 def x_knn_classify_loo(
     spark: SparkSession, sf_dir: str, candidates: str = "auto"
 ) -> DataFrame:
-    from tutorial_iceberg_spark.operators.graph import ALL_PAIRS_MAX_ROWS
+    from tutorial_iceberg_spark.operators.graph import lsh_route
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", "embedding", norm(F.col("embedding")).alias("nrm")
     )
-    if candidates == "auto":
-        from tutorial_iceberg_spark.sources.parquet_meta import (
-            footer_row_count,
-        )
-
-        # parquet footer row count: driver-side metadata read, no Spark job
-        # Deployment default above the cutoff is the AUTO-SIZED generator
-        # (r12 verdict Next #3): the fixed-constant path's recall drifts
-        # with corpus density (measured 0.998 -> 0.678 -> 0.494 across
-        # 1x/10x/30x), which would silently degrade this label audit at
-        # scale; lsh_auto holds it roughly flat from a footer-count census.
-        n = footer_row_count(sf_dir, "embeddings")
-        candidates = "all_pairs" if n <= ALL_PAIRS_MAX_ROWS else "lsh_auto"
-    if candidates == "all_pairs":
-        b = emb.select(
-            F.col("vec_id").alias("nb_id"),
-            F.col("label").alias("nb_label"),
-            F.col("embedding").alias("nb_emb"),
-            F.col("nrm").alias("nb_nrm"),
-        )
+    b = emb.select(
+        F.col("vec_id").alias("nb_id"),
+        F.col("label").alias("nb_label"),
+        F.col("embedding").alias("nb_emb"),
+        F.col("nrm").alias("nb_nrm"),
+    )
+    # graph.py's routing policy, with "lsh_auto" sized for the top-k
+    # regime (KNN_LSH_SIM_TARGET / KNN_LSH_CAND_BUDGET)
+    route = lsh_route(
+        spark, sf_dir, candidates, KNN_LSH_SIM_TARGET, KNN_LSH_CAND_BUDGET
+    )
+    if route is None:
         scored = emb.join(
             F.broadcast(b), F.col("vec_id") != F.col("nb_id")
         )
     else:
         # scale path: LSH candidates (left<right) symmetrized to both
         # directions, then two equi-joins back to the embeddings — no
-        # nested loop. "lsh_auto" (the deployment default) sizes band
-        # constants from the corpus census FOR THE TOP-K REGIME: a 5-NN
-        # audit needs recall on each vector's NEAREST neighbors (high
-        # cosine), not on every pair at the sim-join's 0.40 threshold —
-        # reusing the sim-join budget (8192 cands/vec) emitted ~1B
-        # symmetrized candidates at the 30x probe and sort-spilled past
-        # local disk. Sizing at KNN_LSH_SIM_TARGET with the tighter
-        # KNN_LSH_CAND_BUDGET keeps the stream linear in the corpus with
-        # a constant the window top-k can sort. "lsh" keeps the fixed
-        # constants for the recall-drift comparison in pytest.
-        from tutorial_iceberg_spark.sources.parquet_meta import (
-            footer_row_count,
-        )
-
-        sizing = None
-        if candidates == "lsh_auto":
-            sizing = lsh_auto_size(
-                footer_row_count(sf_dir, "embeddings"),
-                sim_threshold=KNN_LSH_SIM_TARGET,
-                max_candidates_per_vec=KNN_LSH_CAND_BUDGET,
-            )
-        dim = emb.select(F.size("embedding")).first()[0]
-        cand = lsh_candidate_pairs(
-            load_table(spark, sf_dir, "embeddings"), dim, sizing=sizing
-        )
+        # nested loop
+        cand, pin = route
         cand = cand.unionByName(
             cand.select(
                 F.col("right_id").alias("left_id"),
                 F.col("left_id").alias("right_id"),
             )
         )
-        # pin the embedding sides broadcast when they fit the bytes
-        # budget (the cosine_edges lsh_auto discipline): the candidate
-        # stream then verifies inside one codegen stage instead of
-        # sort-merge-joining rows widened by float arrays — the measured
-        # disk-filling shape at 30x. Above the budget, AQE plans the
-        # shuffles.
-        left_emb, right_emb = emb, emb.select(
-            F.col("vec_id").alias("nb_id"),
-            F.col("label").alias("nb_label"),
-            F.col("embedding").alias("nb_emb"),
-            F.col("nrm").alias("nb_nrm"),
-        )
-        if embedding_broadcast_affordable(
-            footer_row_count(sf_dir, "embeddings"), dim
-        ):
+        left_emb, right_emb = emb, b
+        if pin:
             left_emb, right_emb = F.broadcast(left_emb), F.broadcast(right_emb)
         scored = (
             cand.join(left_emb, cand.left_id == left_emb.vec_id)

@@ -363,23 +363,28 @@ def x_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist() with the cache cleared per call (slower in 10/10 each).
     # Unlike persist(), the checkpoint's blocks go with the returned frame:
     # no cache entry outlives the call for a later identical plan to hit.
-    agg = doc_index(docs).withColumnRenamed("hs", "hset").localCheckpoint(eager=False)
-    sig = agg.select("doc_id", "sig")
-    cand = lsh_candidate_pairs(sig)
-    sets = agg.select("doc_id", "hset")
-    # Verification: plain shuffle equi-joins, NO forced broadcasts. The
-    # candidate-pair table is only "small" when banding parameters are
-    # well-tuned — exactly when a hard broadcast hint is least needed —
-    # and each side-lookup intermediate carries the full per-doc shingle
-    # array, a multi-GB build side at 100 TB. Shuffling on (doc_id) and
-    # then (left_id, right_id) keys partitions both sides evenly; AQE
-    # still converts any join to broadcast at runtime if a side turns
-    # out to actually be small.
+    agg = doc_index(docs).localCheckpoint(eager=False)
+    cand = lsh_candidate_pairs(agg.select("doc_id", "sig"))
+    return _verify_jaccard(agg.select("doc_id", "hs"), cand)
+
+
+def _verify_jaccard(sets: DataFrame, cand: DataFrame) -> DataFrame:
+    """Candidate pairs whose hashed-shingle Jaccard is >= 0.5, from the
+    per-doc (doc_id, hs) sets: (left_id, right_id, jaccard), ordered.
+
+    Plain shuffle equi-joins, NO forced broadcasts. The candidate-pair
+    table is only "small" when banding parameters are well-tuned —
+    exactly when a hard broadcast hint is least needed — and each
+    side-lookup intermediate carries the full per-doc shingle array, a
+    multi-GB build side at 100 TB. Shuffling on (doc_id) and then
+    (left_id, right_id) keys partitions both sides evenly; AQE still
+    converts any join to broadcast at runtime if a side turns out to
+    actually be small."""
     ls_tab = sets.join(cand, sets.doc_id == F.col("left_id")).select(
-        "left_id", "right_id", F.col("hset").alias("ls")
+        "left_id", "right_id", F.col("hs").alias("ls")
     )
     rs_tab = sets.join(cand, sets.doc_id == F.col("right_id")).select(
-        "left_id", "right_id", F.col("hset").alias("rs")
+        "left_id", "right_id", F.col("hs").alias("rs")
     )
     pairs = ls_tab.join(rs_tab, ["left_id", "right_id"])
     jac = (
@@ -483,23 +488,7 @@ def x_dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", spread=True)
     agg = _md5_doc_index(docs)
     cand = lsh_candidate_pairs(agg.select("doc_id", "sig"))
-    sets = agg.select("doc_id", "hs")
-    ls_tab = sets.join(cand, sets.doc_id == F.col("left_id")).select(
-        "left_id", "right_id", F.col("hs").alias("ls")
-    )
-    rs_tab = sets.join(cand, sets.doc_id == F.col("right_id")).select(
-        "left_id", "right_id", F.col("hs").alias("rs")
-    )
-    pairs = ls_tab.join(rs_tab, ["left_id", "right_id"])
-    jac = (
-        F.size(F.array_intersect(F.col("ls"), F.col("rs"))).cast("double")
-        / F.size(F.array_union(F.col("ls"), F.col("rs")))
-    )
-    return (
-        pairs.select("left_id", "right_id", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.5)
-        .orderBy("left_id", "right_id")
-    )
+    return _verify_jaccard(agg.select("doc_id", "hs"), cand)
 
 
 # ---------------------------------------------------------------------------

@@ -17,8 +17,9 @@ Spark-first design:
   (broadcast nested-loop over ``vec_id < vec_id``, bit-checkable against
   the DuckDB oracle) and the scale path — hyperplane-LSH band buckets
   self-joined on (band, key), i.e. plain shuffle equi-joins with no
-  corpus broadcast and no BroadcastNestedLoopJoin (plan-gated). ``auto``
-  picks all-pairs under ALL_PAIRS_MAX_ROWS and LSH above it; the float64
+  corpus broadcast and no BroadcastNestedLoopJoin (plan-gated). One
+  router, ``lsh_route``, picks all-pairs under ALL_PAIRS_MAX_ROWS and
+  LSH above it, for the kNN label audit too; the float64
   verification predicate and everything downstream is identical either
   way. A caller can also hand in any (left_id, right_id) pair frame
   (e.g. IVF probe output).
@@ -81,6 +82,68 @@ _O_EDGES = f"""
 ALL_PAIRS_MAX_ROWS = 10_000
 
 
+def lsh_route(
+    spark: SparkSession,
+    sf_dir: str,
+    candidates: str,
+    sim_threshold: float,
+    max_candidates_per_vec: int = 8192,
+) -> tuple[DataFrame, bool] | None:
+    """The one candidate-routing policy of every embedding-pair consumer
+    (cosine_edges, vector.x_knn_classify_loo). Returns None for the
+    exact all-pairs baseline (the caller's own join), else ``(pairs,
+    pin)``: the (left_id < right_id) LSH candidate frame and whether the
+    caller may pin its embedding verification sides broadcast.
+
+    - ``"lsh"`` — FIXED_LSH_SIZING, the fixed-constant opt-out.
+    - ``"lsh_auto"`` — lsh_auto_size at ``sim_threshold`` within
+      ``max_candidates_per_vec`` background candidates per vector.
+    - ``"auto"`` — all-pairs when the table is under ALL_PAIRS_MAX_ROWS,
+      else ``"lsh_auto"``, whose recall is measured FLAT across density
+      (0.891/0.880/0.891 at 1x/10x/30x, probes/r11) where the fixed
+      constants, which do not grow with density, drift 0.998 -> 0.678
+      -> 0.494.
+    """
+    from tutorial_iceberg_spark.functions.vector import (
+        FIXED_LSH_SIZING,
+        embedding_broadcast_affordable,
+        lsh_auto_size,
+        lsh_candidate_pairs,
+    )
+    from tutorial_iceberg_spark.sources.parquet_meta import footer_row_count
+
+    # parquet footer row count: driver-side metadata read, no Spark job
+    n = footer_row_count(sf_dir, "embeddings")
+    if candidates == "auto":
+        candidates = "all_pairs" if n <= ALL_PAIRS_MAX_ROWS else "lsh_auto"
+    if candidates == "all_pairs":
+        return None
+    if candidates == "lsh":
+        sizing = FIXED_LSH_SIZING
+    elif candidates == "lsh_auto":
+        sizing = lsh_auto_size(
+            n,
+            sim_threshold=sim_threshold,
+            max_candidates_per_vec=max_candidates_per_vec,
+        )
+    else:
+        raise ValueError(f"unknown candidate source: {candidates!r}")
+    emb = load_table(spark, sf_dir, "embeddings")
+    dim = emb.select(F.size("embedding")).first()[0]
+    pairs = lsh_candidate_pairs(emb, dim, sizing=sizing)
+    # The candidate stream is large relative to the corpus (the sized
+    # budget admits up to ~max_candidates_per_vec per vector). Letting it
+    # SHUFFLE into sort-merge verification joins sorts candidate rows
+    # widened by embedding arrays — the 30x probe measured that spill
+    # exceeding local disk. Pinning the embedding sides broadcast lets the
+    # stream verify inside one codegen stage and never shuffle — gated on
+    # ESTIMATED BYTES (n x ~4*dim), not a row cap: embedding rows are
+    # dim-dependent, and 500k x 768-dim float is ~1.5 GB per pinned side
+    # (ADVICE r11 medium). Above the budget the joins are left to AQE's
+    # shuffle planning.
+    return pairs, embedding_broadcast_affordable(n, dim)
+
+
 def cosine_edges(
     spark: SparkSession,
     sf_dir: str,
@@ -97,50 +160,29 @@ def cosine_edges(
     - ``"all_pairs"`` — exact O(n^2) baseline: one side broadcast, nested
       loop with the cosine predicate filtering inside the join. Only sound
       while one side fits the driver; this is the oracle-checkable form.
-    - ``"lsh"`` — the scale path: hyperplane-LSH band buckets self-joined
-      on (band, key) — plain shuffle equi-joins, NO BroadcastNestedLoopJoin
-      and no corpus broadcast (plan-gated in tests/test_graph.py) — then
-      exact cosine verification on candidates only. Recall is the LSH
-      band-parameter dial; candidate-set coverage of every true edge on
-      the testdata is pytest-gated.
-    - ``"lsh_auto"`` — LSH with constants picked per-corpus by
-      lsh_auto_size (footer-count census; recall held roughly flat as
-      density grows instead of drifting with the fixed 63-plane budget).
-    - ``"auto"`` (default) — all-pairs when the table is under
-      ALL_PAIRS_MAX_ROWS (a parquet-metadata count, no scan), else the
-      auto-sized LSH (``"lsh_auto"``): the deployment default is the
-      configuration whose recall is measured FLAT across density
-      (0.891/0.880/0.891 at 1x/10x/30x, probes/r11), not the fixed
-      budget measured drifting to 0.494. ``"lsh"`` is the explicit
-      fixed-constant opt-out.
+    - ``"lsh"`` / ``"lsh_auto"`` / ``"auto"`` — resolved by
+      :func:`lsh_route` (``"auto"`` is all-pairs under
+      ALL_PAIRS_MAX_ROWS, else ``"lsh_auto"`` sized at ``threshold``).
+      The scale path: hyperplane-LSH band buckets self-joined on (band,
+      key) — plain shuffle equi-joins, NO BroadcastNestedLoopJoin and no
+      corpus broadcast in the candidate build (plan-gated in
+      tests/test_graph.py) — then exact cosine verification on
+      candidates only, with the embedding sides pinned broadcast when
+      they fit the bytes budget. Recall is the LSH band-parameter dial;
+      candidate-set coverage of every true edge on the testdata is
+      pytest-gated.
     - a DataFrame of (left_id, right_id) — caller-supplied pairs (e.g. the
       IVF prober in functions/vector.py); verified the same way.
     """
-    from tutorial_iceberg_spark.functions.vector import (
-        dot,
-        lsh_candidate_pairs,
-        norm,
-    )
+    from tutorial_iceberg_spark.functions.vector import dot, norm
 
-    bounded_emb = False
+    pin = False
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
     )
-    if isinstance(candidates, str) and candidates == "auto":
-        from tutorial_iceberg_spark.sources.parquet_meta import (
-            footer_row_count,
-        )
-
-        # parquet footer row count: driver-side metadata read, no Spark job
-        n = footer_row_count(sf_dir, "embeddings")
-        # the scale default is the AUTO-SIZED generator (r11 verdict
-        # Next #1): its recall is measured flat (0.891/0.880/0.891 at
-        # 1x/10x/30x density) where the fixed 63-plane budget drifts
-        # 0.998 -> 0.678 -> 0.494; "lsh" remains the explicit opt-out
-        candidates = "all_pairs" if n <= ALL_PAIRS_MAX_ROWS else "lsh_auto"
-
     if isinstance(candidates, str):
-        if candidates == "all_pairs":
+        route = lsh_route(spark, sf_dir, candidates, threshold)
+        if route is None:
             a, b = emb.alias("a"), emb.alias("b")
             cos = dot(F.col("a.embedding"), F.col("b.embedding")) / (
                 F.col("a.nrm") * F.col("b.nrm")
@@ -154,54 +196,12 @@ def cosine_edges(
                 )
                 .filter(F.col("cosine") >= threshold)
             )
-        if candidates == "lsh":
-            dim = emb.select(F.size("embedding")).first()[0]
-            candidates = lsh_candidate_pairs(
-                load_table(spark, sf_dir, "embeddings"), dim
-            )
-        elif candidates == "lsh_auto":
-            # auto-sized LSH (r10 verdict Next #3): census the corpus
-            # from the parquet footer (driver-side, no scan) and pick
-            # band constants that hold recall at the threshold roughly
-            # flat as density grows, instead of the fixed 63-plane
-            # budget's measured 0.678 -> 0.494 drift across 10x -> 30x
-            from tutorial_iceberg_spark.functions.vector import (
-                lsh_auto_size,
-            )
-            from tutorial_iceberg_spark.sources.parquet_meta import (
-                footer_row_count,
-            )
-
-            n = footer_row_count(sf_dir, "embeddings")
-            sizing = lsh_auto_size(n, sim_threshold=threshold)
-            dim = emb.select(F.size("embedding")).first()[0]
-            candidates = lsh_candidate_pairs(
-                load_table(spark, sf_dir, "embeddings"), dim, sizing=sizing
-            )
-            # The auto-sized candidate stream is huge relative to the
-            # corpus (budget: up to ~max_candidates_per_vec per vector).
-            # Letting it SHUFFLE into sort-merge verification joins
-            # sorts candidate rows widened by embedding arrays — the
-            # 30x probe measured that spill exceeding local disk. Pin
-            # the embedding sides broadcast so the stream verifies fully
-            # inside one codegen stage and never shuffles — gated on
-            # ESTIMATED BYTES (n x ~4*dim), not the key-table row cap
-            # this branch used to reuse: embedding rows are
-            # dim-dependent, and 500k x 768-dim float is ~1.5 GB per
-            # pinned side (ADVICE r11 medium). Above the budget the
-            # joins are left to AQE's shuffle planning.
-            from tutorial_iceberg_spark.functions.vector import (
-                embedding_broadcast_affordable,
-            )
-
-            bounded_emb = embedding_broadcast_affordable(n, dim)
-        else:
-            raise ValueError(f"unknown candidate source: {candidates!r}")
+        candidates, pin = route
 
     # candidate-fed path: equi-join the pair list back to the embeddings
     # (both joins are key-partitioned shuffles — broadcast is AQE's call
-    # unless the gated lsh_auto branch pinned the sides above), then the
-    # same exact verification predicate as the baseline
+    # unless lsh_route allowed the pin), then the same exact verification
+    # predicate as the baseline
     left = emb.select(
         F.col("vec_id").alias("left_id"),
         F.col("embedding").alias("l_emb"),
@@ -212,7 +212,7 @@ def cosine_edges(
         F.col("embedding").alias("r_emb"),
         F.col("nrm").alias("r_nrm"),
     )
-    if bounded_emb:
+    if pin:
         left, right = F.broadcast(left), F.broadcast(right)
     cos = dot(F.col("l_emb"), F.col("r_emb")) / (F.col("l_nrm") * F.col("r_nrm"))
     return (
@@ -252,9 +252,10 @@ def x_sim_join_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     "candidate path (lsh_auto_size: bits_per_band from a footer-count "
     "census so expected bucket density stays under the cap, bands from "
     "the 0.85 recall floor at the join threshold). The fixed-constant "
-    "path's measured recall drifts with corpus density (0.678 @ 10x -> "
-    "0.494 @ 30x); this twin is the deployment-facing configuration "
-    "whose recall holds roughly flat (SCALE_PROBE.md r11)",
+    "path's constants do not grow with density, so its measured recall "
+    "drifts (0.678 @ 10x -> 0.494 @ 30x); this twin is the "
+    "deployment-facing configuration whose recall holds roughly flat "
+    "(SCALE_PROBE.md r11)",
     tags=("vector", "dedup", "extension", "ann"),
 )
 def x_sim_join_lsh_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
