@@ -483,6 +483,55 @@ def test_merge_prunes_disjoint_target_files(cat, spark):
     assert sorted(r["k"] for r in t.read().collect()) == list(range(50))
 
 
+def test_merge_prunes_target_files_by_partition_value(cat, spark):
+    """MERGE prunes with the same file pruner, and the same literal form,
+    as DELETE and UPDATE: on a month(d)-partitioned table a one-row source
+    rewrites only the files of its own month."""
+    import datetime as dt
+
+    ddl = "d date, v string"
+    t = cat.create_table("db.mpart", ddl, partition_by=["month(d)"])
+    days = [dt.date(2024, m, day) for m in (1, 2, 3) for day in (5, 20)]
+    t.append(spark.createDataFrame([(d, "old") for d in days], ddl))
+    by_month = {}
+    for f in t.meta.snapshot().files:
+        by_month.setdefault(f.partition["d_month"], set()).add(f.path)
+    src = spark.createDataFrame([(dt.date(2024, 2, 5), "upd")], ddl)
+    t.merge(src, on="d")
+    snap = t.meta.snapshot()
+    kept = by_month["2024-01"] | by_month["2024-03"]
+    assert kept <= {f.path for f in snap.files}
+    assert snap.summary["untouched-files"] == len(kept)
+    assert not by_month["2024-02"] & {f.path for f in snap.files}
+    rows = {r["d"]: r["v"] for r in t.read().collect()}
+    assert rows == {d: ("upd" if d == dt.date(2024, 2, 5) else "old") for d in days}
+
+
+def test_merge_timestamp_key_pruning_ignores_python_local_zone(cat, spark, monkeypatch):
+    """Partition values of day(ts) are written in the session zone (UTC);
+    the MERGE key hull must be compared in that zone too. Collected as
+    Python datetimes the bounds would shift into the driver process's
+    local zone, prune the matched row's file and turn the update into a
+    second row."""
+    import time
+
+    t = cat.create_table("db.mts", "ts timestamp, v string", partition_by=["day(ts)"])
+    t.append(spark.sql(
+        "SELECT * FROM VALUES (timestamp'2024-01-01 03:00:00', 'old'),"
+        " (timestamp'2024-01-05 03:00:00', 'old') AS s(ts, v)"
+    ))
+    monkeypatch.setenv("TZ", "America/Los_Angeles")
+    time.tzset()
+    try:
+        t.merge(spark.sql("SELECT timestamp'2024-01-01 03:00:00' AS ts, 'upd' AS v"), on="ts")
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert t.meta.snapshot().summary["untouched-files"] == 1
+    rows = sorted(tuple(r) for r in t.read().selectExpr("CAST(ts AS STRING)", "v").collect())
+    assert rows == [("2024-01-01 03:00:00", "upd"), ("2024-01-05 03:00:00", "old")]
+
+
 def test_catalog_listings(cat, spark):
     cat.create_table("db.orders", ORDERS_DDL)
     cat.create_table("db.events", "event_id bigint, payload string")
@@ -575,6 +624,25 @@ def test_incremental_read_returns_only_appended(cat, spark):
     assert inc2 == {3}
     # empty range
     assert t.incremental_read(t.meta.current_snapshot_id).count() == 0
+
+
+def test_incremental_read_plans_only_changed_manifests(cat, spark):
+    """incremental_read diffs each append against its parent by the
+    manifests that CHANGED, so a range of n single-manifest appends reads
+    n manifests however many the head snapshot references."""
+    from tutorial_iceberg_spark.lakehouse import metadata as M
+
+    t = cat.create_table("db.incplan", "k bigint, v string")
+    for i in range(8):
+        t.append(spark.createDataFrame([(i, f"v{i}")], "k bigint, v string"))
+    sids = [s.snapshot_id for s in t.meta.snapshots]
+    assert len(t.manifest_groups()) == 8
+    for n in (1, 5):
+        M._manifest_cache.clear()
+        reads0 = M.manifest_file_reads
+        df = t.incremental_read(sids[-1 - n])
+        assert M.manifest_file_reads - reads0 == n
+        assert sorted(r["k"] for r in df.collect()) == list(range(8 - n, 8))
 
 
 def test_incremental_read_rejects_non_append_range(cat, spark):

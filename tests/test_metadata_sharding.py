@@ -270,13 +270,9 @@ def test_manifest_summaries_prune_equivalently_to_dynamic(cat):
             )
             for i in range(rng.randint(3, 8))
         ]
-        t = LakeTable.__new__(LakeTable)
-        t.spark = None
-        t.location = loc
+        t = LakeTable(None, loc)
         t._new_snapshot(md, "append", base + new)
-    t = LakeTable.__new__(LakeTable)
-    t.spark = None
-    t.location = loc
+    t = LakeTable(None, loc)
     md = t.meta
     snap = md.snapshot()
     recs = t._snapshot_manifest_recs(md, snap)
@@ -412,16 +408,12 @@ def test_pruned_scan_never_loads_pruned_manifest_entries(cat):
             )
             for i in range(4)
         ]
-        t = LakeTable.__new__(LakeTable)
-        t.spark = None
-        t.location = loc
+        t = LakeTable(None, loc)
         t._new_snapshot(md, "append", base + new)
     # drop any cached entries so loads are observable, then scan cold
     M._manifest_cache.clear()
     M.__dict__["_manifest_cache_entries"] = 0
-    t = LakeTable.__new__(LakeTable)
-    t.spark = None
-    t.location = loc
+    t = LakeTable(None, loc)
     md = t.meta
     snap = md.snapshot()
     before = M.manifest_file_reads
@@ -614,9 +606,7 @@ def test_merge_clusters_by_partition_keeps_pruning_without_maintenance(cat):
         )
     ]
     M.commit_metadata(loc, md)
-    t = LakeTable.__new__(LakeTable)
-    t.spark = None
-    t.location = loc
+    t = LakeTable(None, loc)
     for i in range(50):  # single-partition appends, interleaved over 8
         pi = i % 8
         cur_md = M.read_metadata(loc)

@@ -561,7 +561,7 @@ PLANE_BANDS = 4  # 4 bits per band
 _PLANE_SEED = 7
 
 
-def _sign_matrix(dim: int, n_planes: int = N_PLANES, seed: int = _PLANE_SEED):
+def _sign_matrix(dim: int, n_planes: int):
     """(n_planes, dim) Rademacher +-1 matrix, fixed seed — the deterministic
     'model'. Tiny (n_planes x dim scalars): rebuilt per task from the seed,
     so nothing is broadcast or joined."""
@@ -569,7 +569,7 @@ def _sign_matrix(dim: int, n_planes: int = N_PLANES, seed: int = _PLANE_SEED):
 
     import numpy as np
 
-    rng = _r.Random(seed)
+    rng = _r.Random(_PLANE_SEED)
     return np.array(
         [[rng.choice((-1.0, 1.0)) for _ in range(dim)] for _ in range(n_planes)]
     )

@@ -11,7 +11,10 @@ closes that last idiom gap using Spark 4's Python Data Source API
     spark.read.format("tis_lake").load(location)
     spark.read.format("tis_lake").option("snapshot_id", 3).load(location)
 
-Scale stance — the planning mirrors LakeTable.scan exactly:
+Scale stance — planning calls LakeTable's own planners
+(LakeTable._candidates for a batch read, LakeTable._appended_files for a
+stream micro-batch), and one module function, ``_slices``, turns the
+surviving files into worker partitions:
 
 - ``pushFilters`` receives Catalyst's conjuncts, renders the supported
   comparisons back to the engine's predicate form, and ALL filters are
@@ -160,13 +163,9 @@ class _LakeReader(DataSourceReader):
         return filters
 
     def partitions(self) -> list[InputPartition]:
-        import os
-
         from tutorial_iceberg_spark.lakehouse.table import LakeTable
 
-        t = LakeTable.__new__(LakeTable)
-        t.spark = None
-        t.location = self._location
+        t = LakeTable(None, self._location)
         md = t.meta
         if self._pinned is not None:
             # plan against the SAME metadata resolution Spark's schema
@@ -197,51 +196,9 @@ class _LakeReader(DataSourceReader):
                 if self._snapshot_id is not None
                 else md.schema().fields
             )
-        deletes_by_file = self._plan_deletes(snap)
-        if self._pred_sql:
-            cands = t._candidates(md, snap, self._pred_sql)
-        else:
-            cands = list(snap.files)
-        slices = []
-        by_written: dict[int, dict] = {}
-        flt_by_written: dict[int, list] = {}
-        cur_by_name = {fl.name: fl for fl in current}
-        for f in cands:
-            cols = by_written.get(f.schema_id)
-            if cols is None:
-                written = md.schema(f.schema_id).by_id()
-                cols = [
-                    (
-                        fl.name,
-                        written[fl.id].name if fl.id in written else None,
-                        fl.initial_default,
-                    )
-                    for fl in current
-                ]
-                by_written[f.schema_id] = cols
-                # pushed conjuncts resolved to this generation's WRITTEN
-                # names; a filter on a column the file predates (read-time
-                # default) is dropped — Spark re-evaluates every filter
-                flt = []
-                for attr, op, val in self._pushed:
-                    fl = cur_by_name.get(attr)
-                    wname = (
-                        written[fl.id].name
-                        if fl is not None and fl.id in written
-                        else None
-                    )
-                    if wname is not None:
-                        flt.append((wname, op, val))
-                flt_by_written[f.schema_id] = flt
-            slices.append(
-                _FileSlice(
-                    abs_path=os.path.join(self._location, f.path),
-                    columns=cols,
-                    deletes=deletes_by_file.get(f.path) or None,
-                    filters=flt_by_written[f.schema_id] or None,
-                )
-            )
-        return slices
+        deletes = self._plan_deletes(snap)
+        cands = t._candidates(md, snap, self._pred_sql) if self._pred_sql else snap.files
+        return _slices(self._location, md, cands, current, deletes, self._pushed)
 
     def _plan_deletes(self, snap) -> dict:
         """Resolve the snapshot's MoR delete files into per-data-file
@@ -415,81 +372,41 @@ def _no_snapshot(sid):
     raise ValueError(f"tis_lake: no snapshot {sid}")
 
 
-def _appended_files(t, md, from_sid: int, to_sid: int) -> list:
-    """Data files appended by the snapshot range (from_sid, to_sid] —
-    the metadata-only planning core of the streaming source, mirroring
-    LakeTable.incremental_read's semantics exactly (same chain walk,
-    same non-append refusal, same expired-boundary honesty;
-    table.py:828). from_sid == 0 means table genesis.
+def _slices(location, md, files, current, deletes=None, pushed=()) -> list:
+    """One _FileSlice per data file, for the batch reader and the stream
+    source alike. Each written-schema generation resolves once: current
+    fields to written names by FIELD ID, and the pushed conjuncts to
+    written names — a filter on a column the file predates (read-time
+    default) is dropped, since Spark re-evaluates every filter."""
+    import os
 
-    Scale: the per-snapshot diff is REC-driven — only manifests whose
-    (id, ref) CHANGED between parent and child are parsed (an unchanged
-    manifest contributes identical path sets to both sides; a
-    commit-time merge round moves old entries into a fresh manifest,
-    and diffing the changed manifests' paths cancels them out), so a
-    micro-batch plans in O(delta manifests), not O(table)."""
-    to_snap = md.snapshot(to_sid)
-    if to_snap is None:
-        raise ValueError(f"tis_lake: offset snapshot {to_sid} does not exist")
-    if from_sid and md.snapshot(from_sid) is None:
-        raise ValueError(
-            f"tis_lake: start snapshot {from_sid} no longer exists — it "
-            "was expired; the changelog across an expired boundary is "
-            "unrecoverable, restart the stream with a fresh checkpoint"
-        )
-    chain = []
-    cur = to_snap
-    while cur is not None and cur.snapshot_id != from_sid:
-        chain.append(cur)
-        cur = md.snapshot(cur.parent_id) if cur.parent_id is not None else None
-    if cur is None and from_sid:
-        raise ValueError(
-            f"tis_lake: snapshot {from_sid} is not an ancestor of {to_sid}"
-        )
-    bad = [s.snapshot_id for s in chain if s.operation != "append"]
-    if bad:
-        raise ValueError(
-            f"tis_lake: non-append snapshots in stream range: {bad} — "
-            "the append changelog has no row-level diff for rewrites"
-        )
-    from tutorial_iceberg_spark.lakehouse import metadata as M
+    cur_by_name = {fl.name: fl for fl in current}
+    plans: dict[int, tuple] = {}
+    out = []
+    for f in files:
+        plan = plans.get(f.schema_id)
+        if plan is None:
+            written = md.schema(f.schema_id).by_id()
 
-    mdir = M.metadata_dir(t.location)
-    new_files: list = []
-    seen: set[str] = set()
-    for snap in reversed(chain):  # oldest appended first
-        parent = (
-            md.snapshot(snap.parent_id) if snap.parent_id is not None else None
+            def wname(fl):
+                return written[fl.id].name if fl is not None and fl.id in written else None
+
+            cols = [(fl.name, wname(fl), fl.initial_default) for fl in current]
+            flt = [
+                (w, op, val)
+                for attr, op, val in pushed
+                if (w := wname(cur_by_name.get(attr))) is not None
+            ]
+            plan = plans[f.schema_id] = (cols, flt or None)
+        out.append(
+            _FileSlice(
+                abs_path=os.path.join(location, f.path),
+                columns=plan[0],
+                deletes=(deletes or {}).get(f.path) or None,
+                filters=plan[1],
+            )
         )
-        if parent is None:
-            added = list(snap.files)
-        else:
-            srecs = t._snapshot_manifest_recs(md, snap)
-            precs = t._snapshot_manifest_recs(md, parent)
-            changed = [
-                r
-                for mid, r in srecs.items()
-                if precs.get(mid, {}).get("ref") != r["ref"]
-            ]
-            gone = [
-                r
-                for mid, r in precs.items()
-                if srecs.get(mid, {}).get("ref") != r["ref"]
-            ]
-            old_paths = {
-                e.path for r in gone for e in M._load_manifest(mdir, r["ref"])
-            }
-            added = [
-                e
-                for r in changed
-                for e in M._load_manifest(mdir, r["ref"])
-                if e.path not in old_paths
-            ]
-        for f in added:
-            if f.path not in seen:
-                seen.add(f.path)
-                new_files.append(f)
-    return new_files
+    return out
 
 
 try:  # pyspark >= 4.0 streaming source API
@@ -508,11 +425,11 @@ class _LakeStreamReader(_StreamReaderBase):
     partitions(start, end) for an uncommitted batch and resumes past a
     committed one, which is the API's exactly-once contract.
 
-    Semantics mirror LakeTable.incremental_read (the engine's judged
-    changelog surface): appended data files only; a non-append snapshot
-    in range fails loudly (rewrites have no row-level changelog);
-    resuming across an EXPIRED boundary fails loudly — a partial diff
-    would silently report wrong rows. ``option("starting_snapshot_id",
+    Each micro-batch is planned by LakeTable._appended_files, the same
+    call behind LakeTable.incremental_read: appended data files only; a
+    non-append snapshot in range fails loudly (rewrites have no
+    row-level changelog); resuming across an EXPIRED boundary fails
+    loudly — a partial diff would silently report wrong rows. ``option("starting_snapshot_id",
     N)`` starts the changelog after snapshot N (default 0 = genesis).
 
     Column resolution is pinned to the schema generation captured when
@@ -545,41 +462,15 @@ class _LakeStreamReader(_StreamReaderBase):
         return {"snapshot_id": sid if sid is not None else self._start}
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        import os
-
         from tutorial_iceberg_spark.lakehouse.table import LakeTable
 
         a, b = start["snapshot_id"], end["snapshot_id"]
         if a == b:
             return []
-        t = LakeTable.__new__(LakeTable)
-        t.spark = None
-        t.location = self._location
+        t = LakeTable(None, self._location)
         md = t.meta
-        files = _appended_files(t, md, a, b)
-        current = md.schema(self._schema_id).fields
-        slices = []
-        by_written: dict[int, dict] = {}
-        for f in files:
-            cols = by_written.get(f.schema_id)
-            if cols is None:
-                written = md.schema(f.schema_id).by_id()
-                cols = [
-                    (
-                        fl.name,
-                        written[fl.id].name if fl.id in written else None,
-                        fl.initial_default,
-                    )
-                    for fl in current
-                ]
-                by_written[f.schema_id] = cols
-            slices.append(
-                _FileSlice(
-                    abs_path=os.path.join(self._location, f.path),
-                    columns=cols,
-                )
-            )
-        return slices
+        files = t._appended_files(md, a or None, b)
+        return _slices(self._location, md, files, md.schema(self._schema_id).fields)
 
     def read(self, partition: _FileSlice):
         return _read_slice(self._spark_schema, partition)
@@ -783,9 +674,7 @@ class _LakeWriter(DataSourceArrowWriter):
         from tutorial_iceberg_spark.lakehouse import metadata as M
         from tutorial_iceberg_spark.lakehouse.table import LakeTable
 
-        t = LakeTable.__new__(LakeTable)
-        t.spark = None
-        t.location = self._location
+        t = LakeTable(None, self._location)
         md = t.meta
         if skip_if is not None and skip_if(md):
             self._unlink_staged(messages)

@@ -339,9 +339,7 @@ class _Handler(BaseHTTPRequestHandler):
                                 "snapshot update in the same commit"
                             })
                             return
-                        t = LakeTable.__new__(LakeTable)
-                        t.spark = None
-                        t.location = loc
+                        t = LakeTable(None, loc)
                         touched = {int(k): set(v) for k, v in removed_bm.items()}
                         recs = t._snapshot_manifest_recs(md, cur)
                         if not set(touched) <= set(recs):
@@ -415,9 +413,7 @@ class _Handler(BaseHTTPRequestHandler):
                                 {"error": "staged manifest must be unstamped (id 0)"},
                             )
                             return
-                        t = LakeTable.__new__(LakeTable)
-                        t.spark = None  # metadata-only: no Spark on the server
-                        t.location = loc
+                        t = LakeTable(None, loc)  # metadata-only: no Spark on the server
                         cur = md.snapshot()
                         # rec-driven carry (r15): the server-side append
                         # commit is O(staged entries), never O(table)

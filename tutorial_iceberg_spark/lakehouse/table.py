@@ -26,7 +26,7 @@ import shutil
 import uuid
 from datetime import date, datetime
 from decimal import Decimal
-from typing import Any
+from typing import Any, Callable
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -664,15 +664,11 @@ class LakeTable:
         # the branch's historical snapshots inside this same TableMetadata,
         # and the restamp below would otherwise rewrite the branch
         # history's manifest grouping in the committed metadata
-        added: list[M.DataFile] = []
-        for s in delta:
-            parent = md.snapshot(s.parent_id) if s.parent_id else None
-            parent_paths = {f.path for f in (parent.files if parent else [])}
-            added.extend(
-                M.DataFile(**{**f.__dict__, "manifest_id": 0})
-                for f in s.files
-                if f.path not in parent_paths
-            )
+        added = [
+            M.DataFile(**{**f.__dict__, "manifest_id": 0})
+            for s in delta
+            for f in self._added_by(md, s)
+        ]
         last_err: Exception | None = None
         for _ in range(self.APPEND_RETRIES):
             cur_snap = md.snapshot()
@@ -826,45 +822,70 @@ class LakeTable:
                 df = df.join(dels, on=dfi.equality_columns, how="left_anti")
         return df.drop("__fp", "__pos") if has_pos else df
 
-    def incremental_read(
-        self, from_snapshot_id: int, to_snapshot_id: int | None = None
-    ) -> DataFrame:
-        """Changelog read: rows appended after ``from`` up to ``to``.
+    def _added_by(
+        self, md: M.TableMetadata, snap: M.Snapshot
+    ) -> list[M.DataFile]:
+        """The data files ``snap`` added over its parent (all of its
+        files when the parent is gone). Diffs only the manifests whose
+        (id, ref) changed between the two: an unchanged manifest holds
+        the same paths on both sides, and a commit-time merge round's
+        moved entries cancel out against the manifests it consumed, so
+        one append plans in O(changed manifests), not O(table). When
+        either side has no manifest list on disk, the full path sets are
+        diffed instead."""
+        parent = md.snapshot(snap.parent_id) if snap.parent_id is not None else None
+        if parent is None:
+            return list(snap.files)
+        srecs = self._snapshot_manifest_recs(md, snap)
+        precs = self._snapshot_manifest_recs(md, parent)
+        if not (srecs and precs):
+            old = {f.path for f in parent.files}
+            return [f for f in snap.files if f.path not in old]
+        mdir = M.metadata_dir(self.location)
 
-        Mirrors Iceberg's incremental append scan
-        (``spark.read.option("start-snapshot-id", ...)``): walks the
-        parent chain from ``to`` back to ``from`` and unions the data
-        files each append added. Like Iceberg, raises if any snapshot in
-        the range is not a plain append (overwrite/delete/replace
-        rewrites have no row-level changelog without full diffing).
-        Planning cost is metadata-only — no data file is opened until the
-        returned DataFrame executes, and only the appended files are ever
-        scanned (the CDC-feed primitive for downstream incremental ETL).
-        """
-        md = self.meta
-        to_snap = md.snapshot(to_snapshot_id)
+        def moved(a: dict, b: dict) -> list[str]:
+            return [r["ref"] for mid, r in a.items() if b.get(mid, {}).get("ref") != r["ref"]]
+
+        old = {f.path for ref in moved(precs, srecs) for f in M._load_manifest(mdir, ref)}
+        return [
+            f
+            for ref in moved(srecs, precs)
+            for f in M._load_manifest(mdir, ref)
+            if f.path not in old
+        ]
+
+    def _appended_files(
+        self, md: M.TableMetadata, from_sid: int | None, to_sid: int | None
+    ) -> list[M.DataFile]:
+        """Data files appended in the snapshot range (``from_sid``,
+        ``to_sid``], oldest first; ``from_sid=None`` means table genesis
+        and ``to_sid=None`` the current snapshot. The one changelog plan
+        behind incremental_read and the tis_lake stream source.
+
+        Raises when any snapshot in the range is not a plain append
+        (rewrites have no row-level changelog without full diffing), and
+        when ``from_sid`` was expired: the changes between an expired
+        snapshot and the oldest live one are unrecoverable, so a
+        resuming consumer must fail loudly, never get a partial diff
+        (Iceberg's incremental-scan behavior)."""
+        to_snap = md.snapshot(to_sid)
         if to_snap is None:
             raise ValueError("to_snapshot_id does not exist")
-        # CDC failure honesty: a consumer resuming from an EXPIRED
-        # snapshot must fail loudly here, never get a partial diff — the
-        # changes between the expired snapshot and the oldest live one
-        # are unrecoverable, so the only sound continuation is a full
-        # recompute (exactly Iceberg's incremental-scan behavior).
-        if md.snapshot(from_snapshot_id) is None:
+        if from_sid is not None and md.snapshot(from_sid) is None:
             raise ValueError(
-                f"from snapshot {from_snapshot_id} no longer exists — it "
+                f"from snapshot {from_sid} no longer exists — it "
                 "was expired (or never existed); the changelog across an "
                 "expired boundary is unrecoverable, resume with a full "
                 "recompute from a live snapshot"
             )
         chain: list[M.Snapshot] = []
         cur = to_snap
-        while cur is not None and cur.snapshot_id != from_snapshot_id:
+        while cur is not None and cur.snapshot_id != from_sid:
             chain.append(cur)
             cur = md.snapshot(cur.parent_id) if cur.parent_id is not None else None
-        if cur is None:
+        if cur is None and from_sid is not None:
             raise ValueError(
-                f"snapshot {from_snapshot_id} is not an ancestor of "
+                f"snapshot {from_sid} is not an ancestor of "
                 f"{to_snap.snapshot_id}"
             )
         bad = [s.snapshot_id for s in chain if s.operation != "append"]
@@ -872,16 +893,30 @@ class LakeTable:
             raise ValueError(f"non-append snapshots in range: {bad}")
         new_files: list[M.DataFile] = []
         seen: set[str] = set()
-        for snap in reversed(chain):  # oldest appended first
-            parent = md.snapshot(snap.parent_id) if snap.parent_id is not None else None
-            parent_paths = {f.path for f in parent.files} if parent else set()
-            for f in snap.files:
-                if f.path not in parent_paths and f.path not in seen:
+        for snap in reversed(chain):
+            for f in self._added_by(md, snap):
+                if f.path not in seen:
                     seen.add(f.path)
                     new_files.append(f)
-        if not new_files:
-            return self._empty_df(md.schema())
-        return self._read_files(md, new_files)
+        return new_files
+
+    def incremental_read(
+        self, from_snapshot_id: int, to_snapshot_id: int | None = None
+    ) -> DataFrame:
+        """Changelog read: rows appended after ``from`` up to ``to``.
+
+        Mirrors Iceberg's incremental append scan
+        (``spark.read.option("start-snapshot-id", ...)``), with the
+        refusals of _appended_files. Planning is metadata-only and reads
+        only the manifests each append changed (_added_by); no data file
+        is opened until the returned DataFrame executes, and only the
+        appended files are ever scanned (the CDC-feed primitive for
+        downstream incremental ETL).
+        """
+        md = self.meta
+        return self._read_files(
+            md, self._appended_files(md, from_snapshot_id, to_snapshot_id)
+        )
 
     def scan(self, pred_sql: str | None = None) -> DataFrame:
         """Filtered read with manifest pruning: partition values + column
@@ -1007,6 +1042,15 @@ class LakeTable:
         conjuncts = T.parse_conjuncts(pred_sql)
         if conjuncts is None:
             return list(snap.files)
+        return self._prune(md, snap, conjuncts)
+
+    def _prune(
+        self, md: M.TableMetadata, snap: M.Snapshot, conjuncts: list
+    ) -> list[M.DataFile]:
+        """The snapshot's files that may hold rows matching every
+        ``(col, op, value)`` conjunct, by partition values and column
+        min/max — the one file pruner behind scan, DELETE, UPDATE,
+        MERGE and the tis_lake source."""
         # manifest-level short-circuit first (Iceberg's two-tier plan:
         # manifest list summaries -> manifest entries): a pruned manifest
         # skips ALL its per-file checks, and its ENTRIES are never parsed.
@@ -1031,32 +1075,25 @@ class LakeTable:
         # written-time partition-source types per (spec, schema) generation —
         # memoized because files cluster into few generations
         wtypes_cache: dict[tuple[int, int], dict[str, str]] = {}
-        out = []
-        for f in scan_files:
+
+        def may_match(f: M.DataFile) -> bool:
             written = md.schema(f.schema_id).by_id()
-            keep = True
+            spec = md.spec(f.spec_id)
+            gen = (f.spec_id, f.schema_id)
+            if gen not in wtypes_cache:
+                wtypes_cache[gen] = self._written_source_types(md, spec, f.schema_id)
             for col, op, val in conjuncts:
+                if not T.partition_may_match(
+                    spec.fields, f.partition, col, op, val, wtypes_cache[gen]
+                ):
+                    return False
                 fid = current_by_name.get(col)
                 wname = written[fid].name if fid in written else None
-                spec = md.spec(f.spec_id)
-                gen = (f.spec_id, f.schema_id)
-                source_types = wtypes_cache.get(gen)
-                if source_types is None:
-                    source_types = self._written_source_types(
-                        md, spec, f.schema_id
-                    )
-                    wtypes_cache[gen] = source_types
-                if not T.partition_may_match(
-                    spec.fields, f.partition, col, op, val, source_types
-                ):
-                    keep = False
-                    break
                 if wname and not T.stats_may_match(f.stats.get(wname), op, val):
-                    keep = False
-                    break
-            if keep:
-                out.append(f)
-        return out
+                    return False
+            return True
+
+        return [f for f in scan_files if may_match(f)]
 
     # -- D2 UPDATE / D3 DELETE ---------------------------------------------
     def delete(self, pred_sql: str) -> None:
@@ -1074,21 +1111,38 @@ class LakeTable:
             else:
                 self._delete_mor(md, snap, pred_sql)
             return
+        self._rewrite_cow(
+            md, snap, pred_sql, "delete", lambda df: df.filter(~F.expr(pred_sql))
+        )
+
+    def _rewrite_cow(
+        self,
+        md: M.TableMetadata,
+        snap: M.Snapshot,
+        pred_sql: str,
+        operation: str,
+        rewrite: Callable[[DataFrame], DataFrame],
+    ) -> None:
+        """Copy-on-write commit shared by DELETE and UPDATE: files that may
+        hold a ``pred_sql`` match are read, passed through ``rewrite`` and
+        written anew; every other file carries over by reference. Pending
+        MoR delete files force a full materialized rewrite instead
+        (carried-over files would escape the deletes' removal)."""
         if snap.delete_files:
-            # existing MoR deletes: materialize, then full CoW rewrite
-            survivors = self.read().filter(~F.expr(pred_sql))
-            files = self._write_files(self._align(survivors, md.schema()), md)
-            self._new_snapshot(md, "delete", files, [], {"mode": "cow-materialize"})
+            rewritten = rewrite(self._read_snapshot(md, snap, snap.files))
+            files = self._write_files(self._align(rewritten, md.schema()), md)
+            self._new_snapshot(md, operation, files, [], {"mode": "cow-materialize"})
             return
         candidates = self._candidates(md, snap, pred_sql)
         cand_set = {f.path for f in candidates}
         untouched = [f for f in snap.files if f.path not in cand_set]
-        rewritten: list[M.DataFile] = []
-        if candidates:
-            survivors = self._read_files(md, candidates).filter(~F.expr(pred_sql))
-            rewritten = self._write_files(survivors, md)
+        rewritten = (
+            self._write_files(rewrite(self._read_files(md, candidates)), md)
+            if candidates
+            else []
+        )
         self._new_snapshot(
-            md, "delete", untouched + rewritten,
+            md, operation, untouched + rewritten,
             summary={"mode": "copy-on-write", "rewritten-files": len(candidates),
                      "untouched-files": len(untouched)},
         )
@@ -1117,49 +1171,22 @@ class LakeTable:
         self._new_snapshot(md, "delete", list(snap.files), dels, {"mode": "merge-on-read"})
 
     def _matched_coords(
-        self, md: M.TableMetadata, candidates: list[M.DataFile], pred_sql: str
+        self, md: M.TableMetadata, snap: M.Snapshot, pred_sql: str
     ) -> DataFrame | None:
         """(__fp, __pos, *current-schema columns) for rows matching
-        ``pred_sql`` inside the candidate files — the shared first stage of
-        every coordinate-based MoR write path. Coordinates come from
-        Spark's ``_metadata.row_index`` file column, computed executor-side
-        over manifest-PRUNED candidates only; the driver never touches row
-        data. The coordinate columns use the same reserved ``__fp``/
-        ``__pos`` names as the read path so a user column named
-        ``file_path`` or ``pos`` cannot make downstream selects ambiguous
-        (ADVICE r5); they are renamed to the on-disk delete-file schema
-        (file_path, pos) only at write time, after user columns are
-        dropped. Returns None when there are no candidate files."""
-        current = md.schema()
-        by_schema: dict[int, list[M.DataFile]] = {}
-        for f in candidates:
-            by_schema.setdefault(f.schema_id, []).append(f)
-        parts: list[DataFrame] = []
-        for sid, group in by_schema.items():
-            written = md.schema(sid)
-            wnames = written.by_id()
-            raw = self.spark.read.schema(written.ddl()).parquet(
-                *[self._abs(f.path) for f in group]
-            )
-            cols = []
-            for f in current.fields:
-                old = wnames.get(f.id)
-                if old is not None:
-                    cols.append(F.col(old.name).cast(f.type).alias(f.name))
-                else:
-                    cols.append(F.lit(f.initial_default).cast(f.type).alias(f.name))
-            sel = raw.select(
-                self._pos_coord().alias("__fp"),
-                F.col("_metadata.row_index").alias("__pos"),
-                *cols,
-            )
-            parts.append(sel.filter(F.expr(pred_sql)))
-        if not parts:
+        ``pred_sql`` inside the snapshot's pruned candidate files — the
+        shared first stage of every coordinate-based MoR write path.
+        Coordinates come from Spark's ``_metadata.row_index`` file column,
+        computed executor-side; the driver never touches row data. The
+        reserved ``__fp``/``__pos`` names are the read path's, so a user
+        column named ``file_path`` or ``pos`` cannot make downstream
+        selects ambiguous (ADVICE r5); they are renamed to the on-disk
+        delete-file schema (file_path, pos) only at write time, after
+        user columns are dropped. Returns None when no file can match."""
+        candidates = self._candidates(md, snap, pred_sql)
+        if not candidates:
             return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return self._read_files(md, candidates, with_pos=True).filter(F.expr(pred_sql))
 
     def _write_position_delete(self, coords: DataFrame) -> tuple[list[str], int]:
         """Write a coordinate parquet from a (__fp, __pos) frame; returns
@@ -1187,9 +1214,7 @@ class LakeTable:
         delete-file kinds): the delete file stores (file_path, pos) row
         coordinates instead of key values — the right flavor when no stable
         equality key exists or the predicate matches many rows per key."""
-        coords = self._matched_coords(
-            md, self._candidates(md, snap, pred_sql), pred_sql
-        )
+        coords = self._matched_coords(md, snap, pred_sql)
         dfile_paths, nrows = (
             self._write_position_delete(coords.select("__fp", "__pos"))
             if coords is not None
@@ -1228,9 +1253,7 @@ class LakeTable:
         not O(rows/8) (ADVICE r5; real Iceberg V3 goes further with
         roaring compression — word-range trimming keeps the read-side bit
         test branch-free while fixing the dense worst case)."""
-        coords = self._matched_coords(
-            md, self._candidates(md, snap, pred_sql), pred_sql
-        )
+        coords = self._matched_coords(md, snap, pred_sql)
         if coords is None:
             nrows = 0
         else:
@@ -1317,26 +1340,11 @@ class LakeTable:
             self._update_mor(md, snap, pred_sql, set_exprs)
             return
         pred = F.expr(pred_sql)
-
-        def apply_updates(df: DataFrame) -> DataFrame:
-            return df.withColumns(
+        self._rewrite_cow(
+            md, snap, pred_sql, "overwrite",
+            lambda df: df.withColumns(
                 {c: F.when(pred, F.expr(e)).otherwise(F.col(c)) for c, e in set_exprs.items()}
-            )
-
-        if snap.delete_files:
-            updated = apply_updates(self.read())
-            files = self._write_files(self._align(updated, md.schema()), md)
-            self._new_snapshot(md, "overwrite", files, [], {"mode": "cow-materialize"})
-            return
-        candidates = self._candidates(md, snap, pred_sql)
-        cand_set = {f.path for f in candidates}
-        untouched = [f for f in snap.files if f.path not in cand_set]
-        rewritten: list[M.DataFile] = []
-        if candidates:
-            rewritten = self._write_files(apply_updates(self._read_files(md, candidates)), md)
-        self._new_snapshot(
-            md, "overwrite", untouched + rewritten,
-            summary={"mode": "copy-on-write", "rewritten-files": len(candidates)},
+            ),
         )
 
     def _update_mor(
@@ -1351,9 +1359,7 @@ class LakeTable:
         versions as new files. No candidate file is rewritten — the write
         is O(matched rows). Coordinates target only the ORIGINAL files, so
         the appended rows are untouched by the delete at read."""
-        coords = self._matched_coords(
-            md, self._candidates(md, snap, pred_sql), pred_sql
-        )
+        coords = self._matched_coords(md, snap, pred_sql)
         dfile_paths, nrows = (
             self._write_position_delete(coords.select("__fp", "__pos"))
             if coords is not None
@@ -1414,15 +1420,15 @@ class LakeTable:
         Set semantics: matched target rows are replaced by their source row
         (by-name column assignment); unmatched source rows are inserted.
 
-        Scale: target files whose key min/max stats cannot overlap the
-        source's key bounds are NOT rewritten — they carry over by
-        reference, so MERGE cost is O(files overlapping the source keys),
-        not O(table). A file disjoint from the source's key hull can hold
-        no matched row, and its keys cannot collide with inserts, so both
-        arms are unaffected. Pruning is disabled when
-        ``when_not_matched_by_source='delete'`` (every target row must be
-        re-checked) or when MoR delete files are pending (carried-over
-        files would escape the materialization).
+        Scale: target files whose key min/max stats or partition values
+        cannot overlap the source's key bounds (_prune) are NOT
+        rewritten — they carry over by reference, so MERGE cost is
+        O(files overlapping the source keys), not O(table). A file
+        disjoint from the source's key hull can hold no matched row, and
+        its keys cannot collide with inserts, so both arms are unaffected.
+        Pruning is disabled when ``when_not_matched_by_source='delete'``
+        (every target row must be re-checked) or when MoR delete files are
+        pending (carried-over files would escape the materialization).
         """
         keys = [on] if isinstance(on, str) else list(on)
         src = self._align(source, md.schema())
@@ -1456,42 +1462,39 @@ class LakeTable:
         # min/max — before any merge work). count_distinct over a struct
         # matches select(keys).distinct().count() exactly: grouping
         # treats NULL keys as equal, and a struct is never NULL itself.
+        # Date and timestamp bounds leave Spark as strings, the form of a
+        # DATE/TIMESTAMP '...' predicate literal, so _prune compares them as
+        # it does DELETE's. Collected as Python dates they compare with no
+        # footer stat, and as datetimes they would be in the Python
+        # process's local zone, which the partition values (written in the
+        # session zone) need not share.
+        dtypes = dict(src.dtypes)
+
+        def bound(agg, k):
+            return agg(k).cast("string") if dtypes.get(k) in ("date", "timestamp") else agg(k)
+
         bounds = src.agg(
             F.count(F.lit(1)).alias("__n"),
             F.count_distinct(F.struct(*[F.col(k) for k in keys])).alias("__nd"),
-            *[F.min(k).alias(f"mn_{i}") for i, k in enumerate(keys)],
-            *[F.max(k).alias(f"mx_{i}") for i, k in enumerate(keys)],
+            *[bound(F.min, k).alias(f"mn_{i}") for i, k in enumerate(keys)],
+            *[bound(F.max, k).alias(f"mx_{i}") for i, k in enumerate(keys)],
         ).first()
         if bounds["__nd"] != bounds["__n"]:
             raise ValueError("MERGE source has duplicate join keys (ambiguous match)")
         if prunable:
-            current_by_name = {f.name: f.id for f in md.schema().fields}
-            candidates: list[M.DataFile] = []
-            for f in snap.files:
-                written = md.schema(f.schema_id).by_id()
-                may = True
-                for i, k in enumerate(keys):
-                    mn, mx = bounds[f"mn_{i}"], bounds[f"mx_{i}"]
-                    if mn is None:  # empty source: no file can match
-                        may = False
-                        break
-                    fid = current_by_name.get(k)
-                    wname = written[fid].name if fid in written else None
-                    st = f.stats.get(wname) if wname else None
-                    # file range [lo,hi] intersects source hull [mn,mx]
-                    # iff hi >= mn and lo <= mx; unknown stats => candidate
-                    if not (
-                        T.stats_may_match(st, ">=", mn)
-                        and T.stats_may_match(st, "<=", mx)
-                    ):
-                        may = False
-                        break
-                (candidates if may else untouched).append(f)
-            target = (
-                self._read_files(md, candidates)
-                if candidates
-                else self._empty_df(md.schema())
-            )
+            # a file whose key range misses the source's key hull can hold
+            # no matched row; an empty source or all-NULL key matches no file
+            if any(bounds[f"mn_{i}"] is None for i in range(len(keys))):
+                candidates = []
+            else:
+                candidates = self._prune(md, snap, [
+                    c
+                    for i, k in enumerate(keys)
+                    for c in ((k, ">=", bounds[f"mn_{i}"]), (k, "<=", bounds[f"mx_{i}"]))
+                ])
+            cand_set = {f.path for f in candidates}
+            untouched = [f for f in snap.files if f.path not in cand_set]
+            target = self._read_files(md, candidates)
         else:
             target = self.read()
         # ONE full-outer join on the keys, then a per-row arm decision.
