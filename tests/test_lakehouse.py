@@ -2615,3 +2615,63 @@ def test_datasource_writer_rest_409_rebase(cat, spark, monkeypatch):
             raise AssertionError("expected overwrite refusal")
         except ValueError as e:
             assert "rest_merge" in str(e)
+
+
+def test_txn_and_merge_branch_carry_main_by_manifest_record(cat, spark):
+    """A transaction append and a merge_branch commit carry main's files
+    by manifest-list record like append does: the commit parses no
+    carried manifest (the transaction) or only the branch's changed one
+    (merge_branch), however many manifests main references."""
+    from tutorial_iceberg_spark.lakehouse import metadata as M
+
+    def one(k):
+        return spark.createDataFrame([(k, f"v{k}")], "k bigint, v string")
+
+    t = cat.create_table("db.reccarry", "k bigint, v string")
+    for i in range(12):
+        t.append(one(i))
+    assert len(t.manifest_groups()) == 12
+    txn = cat.transaction()
+    txn.append("db.reccarry", one(100))
+    M._manifest_cache.clear()
+    reads0 = M.manifest_file_reads
+    txn.commit()
+    assert M.manifest_file_reads - reads0 == 0
+    assert t.read().count() == 13
+
+    t.create_branch("side")
+    t.append_to_branch("side", one(200))
+    t.append(one(300))  # main moves: the merge cannot fast-forward
+    M._manifest_cache.clear()
+    reads0 = M.manifest_file_reads
+    t.merge_branch("side")
+    assert M.manifest_file_reads - reads0 <= 1  # the branch's new manifest
+    assert t.meta.snapshot().operation == "merge"
+    assert sorted(r["k"] for r in t.read().collect()) == list(range(12)) + [100, 200, 300]
+
+
+def test_datasource_timestamp_stats_prune_keeps_boundary_rows(cat, spark):
+    """The tis_lake writer's pyarrow footer stats store a timestamp
+    column's bounds UTC-aware ('... +00:00'); scan and DELETE on the
+    boundary instant must match the unpruned read."""
+    from tutorial_iceberg_spark.lakehouse.datasource import LakeDataSource
+
+    spark.dataSource.register(LakeDataSource)
+    t = cat.create_table("db.ds_ts_prune", "k bigint, ts timestamp")
+    spark.createDataFrame(
+        [(1, "2024-01-01 03:00:00"), (2, "2024-01-01 05:00:00")],
+        "k bigint, ts string",
+    ).selectExpr("k", "CAST(ts AS timestamp) AS ts").coalesce(1).write.format(
+        "tis_lake"
+    ).mode("append").save(t.location)
+    [f] = t.meta.snapshot().files
+    assert f.stats["ts"][0].endswith("+00:00")  # the aware footer stat
+    for pred in (
+        "ts <= TIMESTAMP '2024-01-01 03:00:00'",
+        "ts = TIMESTAMP '2024-01-01 03:00:00'",
+        "ts >= TIMESTAMP '2024-01-01 05:00:00'",
+    ):
+        want = sorted(r["k"] for r in t.read().filter(pred).collect())
+        assert want and sorted(r["k"] for r in t.scan(pred).collect()) == want, pred
+    t.delete("ts = TIMESTAMP '2024-01-01 03:00:00'")
+    assert [r["k"] for r in t.read().collect()] == [2]

@@ -157,6 +157,38 @@ def test_lakehouse_sink_replay_is_exactly_once(spark, sf_dir):
     assert t.read().count() == 3
 
 
+def test_lakehouse_sink_rival_same_batch_before_first_cas(spark, tmp_path, monkeypatch):
+    """A rival commit of the SAME batch id lands between the batch's file
+    write and its first CAS (a replaying twin of the query): the losing
+    commit rebases, re-checks the batch id and lands nothing — the
+    batch's rows appear once, as with the REST and native sinks."""
+    import os
+
+    from tutorial_iceberg_spark.lakehouse.table import LakeTable
+    from tutorial_iceberg_spark.streaming.events_stream import (
+        BATCH_PROP,
+        make_idempotent_ingest,
+    )
+
+    t = LakeTable.create(spark, os.path.join(str(tmp_path), "t"), "k bigint, v bigint")
+    twin = LakeTable(spark, t.location)
+    ingest = make_idempotent_ingest(t)
+    ingest(spark.createDataFrame([(1, 10)], "k bigint, v bigint"), 0)
+    b1 = spark.createDataFrame([(2, 20), (3, 30)], "k bigint, v bigint")
+    write = t._write_files
+
+    def write_then_rival(df, md):
+        files = write(df, md)
+        twin.append(b1, properties={BATCH_PROP: "1"})  # the twin wins
+        return files
+
+    monkeypatch.setattr(t, "_write_files", write_then_rival)
+    ingest(b1, 1)
+    monkeypatch.undo()
+    assert sorted(r["k"] for r in t.read().collect()) == [1, 2, 3]
+    assert t.meta.properties[BATCH_PROP] == "1"
+
+
 def test_stream_hash_sample_equals_batch_filter(spark, sf_dir):
     """Batch-stream parity: the streaming md5 gate must select exactly the
     rows the same predicate selects from the batch table."""

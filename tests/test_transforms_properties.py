@@ -384,3 +384,17 @@ def test_stats_int_literal_vs_decimal_string_stats_not_truncated():
     assert T.stats_may_match(["99.5", "100.5"], "=", 100)
     # pruning still fires when genuinely disjoint
     assert not T.stats_may_match(["-98.9", "-10.0"], "<", -99)
+
+
+def test_stats_utc_aware_timestamp_bounds_keep_boundary_rows():
+    """pyarrow footer stats of a UTC-adjusted timestamp column read back
+    as aware strings ('... +00:00'); a naive literal at the boundary
+    instant must still match (compared as a string it sorted below the
+    stat and the file holding the row was pruned)."""
+    lo, hi = "2024-01-01 03:00:00+00:00", "2024-01-01 05:00:00+00:00"
+    assert T.stats_may_match([lo, hi], "<=", "2024-01-01 03:00:00")
+    assert T.stats_may_match([lo, lo], "=", "2024-01-01 03:00:00")
+    assert T.stats_may_match([lo, hi], ">=", "2024-01-01 05:00:00")
+    # pruning still fires when genuinely disjoint
+    assert not T.stats_may_match([lo, hi], "<", "2024-01-01 03:00:00")
+    assert not T.stats_may_match([lo, hi], ">", "2024-01-01 05:00:00")

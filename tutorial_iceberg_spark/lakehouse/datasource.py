@@ -65,6 +65,11 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from tutorial_iceberg_spark.lakehouse.metadata import (
+    BATCH_PROP as _BATCH_PROP,
+    batch_committed,
+)
+
 _SQL_OPS = {
     EqualTo: "=",
     GreaterThan: ">",
@@ -530,9 +535,9 @@ class _LakeWriter(DataSourceArrowWriter):
       extracts footer stats locally, and ships only a tiny commit
       message;
     - ``commit()`` is pure metadata: it builds the manifest entries
-      from the messages and runs the SAME optimistic rec-driven commit
-      as LakeTable.append (CAS + rebase-restamp retries), or an
-      "overwrite" snapshot for mode("overwrite");
+      from the messages and commits them through LakeTable._commit_files
+      (an append or, for mode("overwrite"), an "overwrite" snapshot), or
+      through rest_catalog.rest_commit with option("catalog_uri");
     - ``abort()`` unlinks the staged files (best-effort — the orphan
       sweep is the backstop).
 
@@ -540,8 +545,6 @@ class _LakeWriter(DataSourceArrowWriter):
     run in Spark SQL at LakeTable.append; recomputing them task-side in
     Python would fork the transform semantics). Zero-row tasks ship no
     message — the manifest never carries unprunable empty files."""
-
-    RETRIES = 10
 
     def __init__(self, schema, options, overwrite: bool):
         from tutorial_iceberg_spark.lakehouse import metadata as M
@@ -666,19 +669,14 @@ class _LakeWriter(DataSourceArrowWriter):
     def _commit_entries(
         self, messages, summary: dict, properties=None, skip_if=None
     ) -> None:
-        """The shared metadata-only commit: manifest entries from the
-        task messages, optimistic CAS + rebase-restamp retries, the same
-        rec-driven carry as LakeTable.append. ``skip_if(md)`` True means
-        another attempt already landed this logical write (streaming
-        replay) — staged duplicates are unlinked, nothing commits."""
+        """The shared metadata-only commit of the task messages' manifest
+        entries. ``skip_if(md)`` True means another attempt already
+        landed this logical write (streaming replay): the staged
+        duplicates are unlinked and nothing commits."""
         from tutorial_iceberg_spark.lakehouse import metadata as M
         from tutorial_iceberg_spark.lakehouse.table import LakeTable
 
         t = LakeTable(None, self._location)
-        md = t.meta
-        if skip_if is not None and skip_if(md):
-            self._unlink_staged(messages)
-            return
         entries = [
             M.DataFile(
                 path=m.rel_path,
@@ -695,95 +693,38 @@ class _LakeWriter(DataSourceArrowWriter):
             if m is not None and m.rel_path
         ]
         if self._catalog_uri:
-            self._commit_rest(md, entries, messages, properties, skip_if)
-            return
-        last = None
-        for _ in range(self.RETRIES):
+            from tutorial_iceberg_spark.lakehouse.rest_catalog import (
+                RestCatalogClient,
+                rest_commit,
+            )
+
+            # ONE commit-table POST carries append-files (the staged
+            # unstamped manifest) plus any set-properties stamp, so the
+            # streaming batch id rides ATOMICALLY with the snapshot
+            ref = M.write_manifest(M.metadata_dir(self._location), 0, entries)
+            updates: list[dict] = [{"action": "append-files", "manifest": ref}]
             if properties:
-                md.properties.update(properties)
-            try:
-                if self._overwrite:
-                    t._new_snapshot(
-                        md, "overwrite", list(entries), [],
-                        {**summary, "mode": "overwrite"},
-                    )
-                else:
-                    cur = md.snapshot()
-                    t._new_snapshot(
-                        md,
-                        "append",
-                        t._carried_plus(md, cur, entries),
-                        list(cur.delete_files) if cur else [],
-                        summary,
-                    )
-                return
-            except M.CommitConflictError as e:
-                last = e
-                md = t.meta  # rebase; restamp under the winner's counter
-                if skip_if is not None and skip_if(md):
-                    self._unlink_staged(messages)
-                    return  # the winner WAS this logical write (replay)
-                for f in entries:
-                    f.manifest_id = 0
-        raise last  # type: ignore[misc]
-
-    def _commit_rest(self, md, entries, messages, properties, skip_if) -> None:
-        """Commit through the catalog service: ONE commit-table POST
-        carries append-files (the staged unstamped manifest) plus any
-        set-properties stamp (the streaming batch id rides ATOMICALLY
-        with the snapshot, so exactly-once survives the HTTP hop — the
-        same composition make_idempotent_rest_ingest proved). 409 = CAS
-        lost or stale assert: re-read, re-check replay, retry the SAME
-        staged manifest — data files are written exactly once regardless
-        of commit attempts."""
-        import urllib.error
-
-        from tutorial_iceberg_spark.lakehouse import metadata as M
-        from tutorial_iceberg_spark.lakehouse.rest_catalog import (
-            RestCatalogClient,
-        )
-
-        client = RestCatalogClient(self._catalog_uri)
-        ref = M.write_manifest(M.metadata_dir(self._location), 0, entries)
-        updates: list[dict] = [{"action": "append-files", "manifest": ref}]
-        if properties:
-            updates.append({"action": "set-properties", "updates": properties})
-        last: Exception | None = None
-        for _ in range(self.RETRIES):
-            try:
-                client.commit_table(
-                    self._namespace,
-                    self._table,
-                    updates=updates,
-                    requirements=[{
-                        "type": "assert-ref-snapshot-id",
-                        "snapshot-id": md.current_snapshot_id,
-                    }],
-                )
-                return
-            except urllib.error.HTTPError as e:
-                if e.code != 409:
-                    raise
-                last = e
-                md = M.read_metadata(self._location)  # rebase on winner
-                if skip_if is not None and skip_if(md):
-                    self._unlink_staged(messages)
-                    return  # the winner WAS this logical write (replay)
-        raise last  # type: ignore[misc]
+                updates.append({"action": "set-properties", "updates": properties})
+            committed = rest_commit(
+                RestCatalogClient(self._catalog_uri), t, self._namespace,
+                self._table, lambda _md: updates, skip_if=skip_if,
+            ) is not None
+        elif self._overwrite:
+            committed = t._commit_files(
+                t.meta, entries, "overwrite", {**summary, "mode": "overwrite"}
+            )
+        else:
+            committed = t._commit_files(
+                t.meta, entries, summary=summary, properties=properties, skip_if=skip_if
+            )
+        if not committed:
+            self._unlink_staged(messages)
 
     def commit(self, messages):
         self._commit_entries(messages, {"via": "datasource"})
 
     def abort(self, messages):
         self._unlink_staged(messages)
-
-
-# The exactly-once micro-batch marker, atomically committed WITH each
-# snapshot. Same property key as streaming.events_stream.BATCH_PROP
-# (duplicated literal: the streaming module pulls the full engine import
-# graph, which the DataSource planning worker should not pay for;
-# equality is pinned by a pytest).
-_BATCH_PROP = "streaming.last-committed-batch-id"
 
 
 class _LakeStreamWriter(_LakeWriter, DataSourceStreamArrowWriter):
@@ -798,15 +739,11 @@ class _LakeStreamWriter(_LakeWriter, DataSourceStreamArrowWriter):
     re-appended — exactly-once end to end, now without foreachBatch."""
 
     def commit(self, messages, batchId):  # noqa: N803 (API contract)
-        def already_committed(md) -> bool:
-            last = md.properties.get(_BATCH_PROP)
-            return last is not None and int(last) >= batchId
-
         self._commit_entries(
             messages,
             {"via": "datasource-stream", "batch-id": batchId},
             properties={_BATCH_PROP: str(batchId)},
-            skip_if=already_committed,
+            skip_if=lambda md: batch_committed(md, batchId),
         )
 
     def abort(self, messages, batchId):  # noqa: N803 (API contract)

@@ -995,3 +995,18 @@ def new_table_metadata(name: str, location: str, fields: list[Field], properties
 
 def now_ms() -> int:
     return int(time.time() * 1000)
+
+
+# The exactly-once micro-batch ledger shared by the three streaming sinks
+# (foreachBatch, foreachBatch through the REST catalog, and the native
+# tis_lake sink): each commits its batch id in table properties in the
+# SAME atomic metadata commit as the snapshot.
+BATCH_PROP = "streaming.last-committed-batch-id"
+
+
+def batch_committed(md: TableMetadata, batch_id: int) -> bool:
+    """The one replay rule: a batch at or below the last committed id
+    already landed (a replay after a crash between the table commit and
+    the streaming checkpoint) and must not be appended again."""
+    last = md.properties.get(BATCH_PROP)
+    return last is not None and int(last) >= batch_id

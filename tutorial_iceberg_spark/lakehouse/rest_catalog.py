@@ -413,19 +413,11 @@ class _Handler(BaseHTTPRequestHandler):
                                 {"error": "staged manifest must be unstamped (id 0)"},
                             )
                             return
-                        t = LakeTable(None, loc)  # metadata-only: no Spark on the server
-                        cur = md.snapshot()
-                        # rec-driven carry (r15): the server-side append
-                        # commit is O(staged entries), never O(table)
-                        base = t._carried_plus(md, cur, list(entries))
-                        dels = list(cur.delete_files) if cur else []
-                        t._new_snapshot(
-                            md,
-                            "append",
-                            base,
-                            dels,
-                            {"via": "rest-catalog"},
-                            commit=False,
+                        # metadata-only (no Spark on the server), and the
+                        # rec-driven carry (r15) keeps the server-side
+                        # append commit O(staged entries), never O(table)
+                        LakeTable(None, loc)._snapshot_files(
+                            md, list(entries), summary={"via": "rest-catalog"}, commit=False
                         )
                     else:
                         self._send(400, {"error": f"unsupported update {action}"})
@@ -579,6 +571,49 @@ class RestCatalogClient:
         )
 
 
+def rest_commit(
+    client: RestCatalogClient,
+    table,
+    namespace: str,
+    name: str,
+    updates_for,
+    retries: int = 10,
+    skip_if=None,
+) -> dict | None:
+    """The one optimistic commit loop through the catalog service. Each
+    attempt reads ``table.meta`` (the local view over the same storage),
+    returns None when ``skip_if(md)`` says another commit already landed
+    this logical write (a replayed streaming batch), and otherwise POSTs
+    ``updates_for(md)`` guarded by ``assert-ref-snapshot-id`` on that
+    ``md``. A 409 (CAS lost, stale assert, or a removed file a rival
+    already rewrote) goes round again on fresh state; any other error
+    is raised. Returns the server's table metadata."""
+    import urllib.error
+
+    last: Exception | None = None
+    for _ in range(retries):
+        md = table.meta
+        if skip_if is not None and skip_if(md):
+            return None
+        try:
+            return client.commit_table(
+                namespace,
+                name,
+                updates=updates_for(md),
+                requirements=[
+                    {
+                        "type": "assert-ref-snapshot-id",
+                        "snapshot-id": md.current_snapshot_id,
+                    }
+                ],
+            )
+        except urllib.error.HTTPError as e:
+            if e.code != 409:
+                raise
+            last = e
+    raise last  # type: ignore[misc]
+
+
 def rest_append(
     client: RestCatalogClient,
     table,
@@ -586,40 +621,29 @@ def rest_append(
     name: str,
     df,
     retries: int = 10,
-) -> dict:
+    properties: dict[str, str] | None = None,
+    skip_if=None,
+) -> dict | None:
     """Append a DataFrame THROUGH the catalog service (the engine as a
     REST writer — the reference's EP3 topology): data files and one
     unstamped manifest sidecar are staged in shared storage by the
-    engine, then the snapshot commit happens server-side via the
-    ``append-files`` update, guarded by ``assert-ref-snapshot-id`` so a
-    concurrent writer surfaces as 409 and the client rebases — the
-    optimistic protocol every Iceberg REST writer speaks. ``table`` is
-    the local LakeTable view over the same storage (used only to stage
-    files and read fresh state between retries)."""
-    import urllib.error
-
+    engine, once, then the snapshot commit happens server-side via the
+    ``append-files`` update through rest_commit. ``properties`` ride in
+    the SAME commit as a ``set-properties`` update (the exactly-once
+    sink's batch id); ``skip_if`` is rest_commit's replay check.
+    ``table`` is the local LakeTable view over the same storage (used
+    only to stage files and read fresh state between retries)."""
     from tutorial_iceberg_spark.lakehouse import metadata as M
 
     md = table.meta
     files = table._write_files(table._align(df, md.schema()), md)
     ref = M.write_manifest(M.metadata_dir(table.location), 0, files)
-    last: Exception | None = None
-    for _ in range(retries):
-        base = table.meta.current_snapshot_id
-        try:
-            return client.commit_table(
-                namespace,
-                name,
-                updates=[{"action": "append-files", "manifest": ref}],
-                requirements=[
-                    {"type": "assert-ref-snapshot-id", "snapshot-id": base}
-                ],
-            )
-        except urllib.error.HTTPError as e:
-            if e.code != 409:
-                raise
-            last = e  # CAS lost or stale base: re-read and retry
-    raise last  # type: ignore[misc]
+    updates: list[dict] = [{"action": "append-files", "manifest": ref}]
+    if properties:
+        updates.append({"action": "set-properties", "updates": properties})
+    return rest_commit(
+        client, table, namespace, name, lambda _md: updates, retries, skip_if
+    )
 
 
 def rest_merge(
@@ -642,20 +666,14 @@ def rest_merge(
     constructs the snapshot (carried files minus the replaced originals
     plus the staged manifest) and owns the CAS. Any 409 (CAS lost,
     stale assert-ref-snapshot-id, or a replaced file a rival already
-    rewrote) rebases: the merge re-plans against fresh state and
-    retries; a losing attempt's staged files are orphans the sweep
-    collects, exactly like a losing native optimistic writer."""
-    import urllib.error
-
+    rewrote) rebases through rest_commit: the merge re-plans against
+    fresh state and retries; a losing attempt's staged files are orphans
+    the sweep collects, exactly like a losing native optimistic writer."""
     from tutorial_iceberg_spark.lakehouse import metadata as M
 
-    last: Exception | None = None
-    for _ in range(retries):
-        md = table.meta
+    def plan(md) -> list[dict]:
         snap = md.snapshot()
-        untouched, result = table._merge_compute(
-            md, source, on, **merge_kwargs
-        )
+        untouched, result = table._merge_compute(md, source, on, **merge_kwargs)
         files = table._write_files(table._align(result, md.schema()), md)
         ref = M.write_manifest(M.metadata_dir(table.location), 0, files)
         if snap is None:
@@ -666,37 +684,21 @@ def rest_merge(
             # merge computation IS insert-all here). If a rival's first
             # snapshot lands concurrently, the assert fails with 409 and
             # the retry re-plans down the overwrite path.
-            update = {"action": "append-files", "manifest": ref}
-        else:
-            # Name removed files BY MANIFEST (r15 verdict Next #1): the
-            # merge planned from this snapshot's entries, so each removed
-            # file's manifest id is in hand — the server then parses only
-            # the touched manifests and carries the rest by record,
-            # keeping the front-door commit O(touched), not O(table).
-            untouched_paths = {f.path for f in untouched}
-            by_manifest: dict[str, list[str]] = {}
-            for f in snap.files:
-                if f.path not in untouched_paths:
-                    by_manifest.setdefault(str(f.manifest_id), []).append(f.path)
-            update = {
-                "action": "overwrite-files",
-                "manifest": ref,
-                "removed_by_manifest": by_manifest,
-            }
-        try:
-            return client.commit_table(
-                namespace,
-                name,
-                updates=[update],
-                requirements=[
-                    {
-                        "type": "assert-ref-snapshot-id",
-                        "snapshot-id": md.current_snapshot_id,
-                    }
-                ],
-            )
-        except urllib.error.HTTPError as e:
-            if e.code != 409:
-                raise
-            last = e  # rebase: re-plan the merge on fresh state
-    raise last  # type: ignore[misc]
+            return [{"action": "append-files", "manifest": ref}]
+        # Name removed files BY MANIFEST (r15 verdict Next #1): the
+        # merge planned from this snapshot's entries, so each removed
+        # file's manifest id is in hand — the server then parses only
+        # the touched manifests and carries the rest by record,
+        # keeping the front-door commit O(touched), not O(table).
+        untouched_paths = {f.path for f in untouched}
+        by_manifest: dict[str, list[str]] = {}
+        for f in snap.files:
+            if f.path not in untouched_paths:
+                by_manifest.setdefault(str(f.manifest_id), []).append(f.path)
+        return [{
+            "action": "overwrite-files",
+            "manifest": ref,
+            "removed_by_manifest": by_manifest,
+        }]
+
+    return rest_commit(client, table, namespace, name, plan, retries)

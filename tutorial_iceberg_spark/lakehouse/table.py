@@ -453,40 +453,79 @@ class LakeTable:
             )
         return list(parent.files) + list(new_files)
 
-    def append(self, df: DataFrame, properties: dict[str, str] | None = None) -> None:
-        """D16 INSERT INTO ... VALUES / append — README.md:1136-1138.
+    def _snapshot_files(
+        self,
+        md: M.TableMetadata,
+        entries: list[M.DataFile],
+        operation: str = "append",
+        summary: dict | None = None,
+        ref: str | None = None,
+        commit: bool = True,
+    ) -> None:
+        """The one snapshot builder for freshly written files: an
+        ``"overwrite"`` replaces the head of ``ref`` (main when None);
+        any other operation carries the head's files by manifest record
+        (_carried_plus) plus ``entries``, keeping its delete files."""
+        if operation == "overwrite":
+            files, dels = list(entries), []
+        else:
+            head = md.snapshot(md.refs[ref]) if ref is not None else md.snapshot()
+            files = self._carried_plus(md, head, entries)
+            dels = list(head.delete_files) if head else []
+        self._new_snapshot(md, operation, files, dels, summary, ref=ref, commit=commit)
 
-        Optimistic-concurrency retry (Iceberg's fast-append protocol): the
-        data files are written exactly once; on a commit conflict only the
-        metadata step rebases — re-read current state, re-point the new
-        snapshot at the latest parent, retry the CAS commit.
+    def _commit_files(
+        self,
+        md: M.TableMetadata,
+        entries: list[M.DataFile],
+        operation: str = "append",
+        summary: dict | None = None,
+        ref: str | None = None,
+        properties: dict[str, str] | None = None,
+        skip_if=None,
+    ) -> bool:
+        """The one local optimistic commit loop (Iceberg's fast-append
+        protocol): the data files are written exactly once; on a commit
+        conflict only the metadata step rebases — re-read current state,
+        re-point the new snapshot at the latest head, retry the CAS.
 
-        ``properties`` are merged into table properties in the SAME atomic
-        metadata commit as the snapshot — the primitive a streaming sink
-        uses to record its batch id transactionally with the data (exactly
-        -once foreachBatch, see streaming/events_stream.py)."""
-        md = self.meta
-        new_files = self._write_files(self._align(df, md.schema()), md)
+        ``properties`` merge into table properties in the SAME atomic
+        metadata commit as the snapshot — the primitive an exactly-once
+        sink uses to record its batch id with the data. ``skip_if(md)``
+        True, checked before every attempt, means another commit already
+        landed this logical write (a replayed batch): nothing commits and
+        the call returns False."""
         last_err: Exception | None = None
         for _ in range(self.APPEND_RETRIES):
-            cur = md.snapshot()
-            files = self._carried_plus(md, cur, new_files)
-            dels = list(cur.delete_files) if cur else []
+            if skip_if is not None and skip_if(md):
+                return False
             if properties:
                 md.properties.update(properties)
             try:
-                self._new_snapshot(md, "append", files, dels)
-                return
+                self._snapshot_files(md, entries, operation, summary, ref)
+                return True
             except M.CommitConflictError as e:
                 last_err = e
                 md = self.meta  # rebase on the winner's metadata
-                # the failed attempt already stamped new_files with a
+                # the failed attempt already stamped the entries with a
                 # manifest id from the STALE counter — an id the winner may
                 # also have consumed; restamp under the rebased counter or
                 # two commits' entries silently share one manifest group
-                for f in new_files:
+                for f in entries:
                     f.manifest_id = 0
+                if ref is not None and ref not in md.refs:
+                    raise ValueError(f"branch {ref} dropped concurrently") from e
         raise last_err  # type: ignore[misc]
+
+    def append(self, df: DataFrame, properties: dict[str, str] | None = None) -> None:
+        """D16 INSERT INTO ... VALUES / append — README.md:1136-1138.
+        Writes the data files once and commits them through _commit_files,
+        with ``properties`` merged in the same atomic metadata commit
+        (the exactly-once foreachBatch sink's batch id, see
+        streaming/events_stream.py)."""
+        md = self.meta
+        new_files = self._write_files(self._align(df, md.schema()), md)
+        self._commit_files(md, new_files, properties=properties)
 
     def insert_rows(self, rows: list[tuple]) -> None:
         md = self.meta
@@ -531,22 +570,7 @@ class LakeTable:
         if name not in md.refs:
             raise ValueError(f"no branch {name}")
         new_files = self._write_files(self._align(df, md.schema()), md)
-        last_err: Exception | None = None
-        for _ in range(self.APPEND_RETRIES):
-            head = md.snapshot(md.refs[name])
-            files = self._carried_plus(md, head, new_files)
-            dels = list(head.delete_files) if head else []
-            try:
-                self._new_snapshot(md, "append", files, dels, ref=name)
-                return
-            except M.CommitConflictError as e:
-                last_err = e
-                md = self.meta
-                for f in new_files:  # see append(): restamp after rebase
-                    f.manifest_id = 0
-                if name not in md.refs:
-                    raise ValueError(f"branch {name} dropped concurrently") from e
-        raise last_err  # type: ignore[misc]
+        self._commit_files(md, new_files, ref=name)
 
     def read_branch(self, name: str) -> DataFrame:
         md = self.meta
@@ -662,30 +686,17 @@ class LakeTable:
         # new by construction (uuid paths), so the union is duplicate-free.
         # COPIED entries, not aliases (ADVICE r13): the originals live in
         # the branch's historical snapshots inside this same TableMetadata,
-        # and the restamp below would otherwise rewrite the branch
-        # history's manifest grouping in the committed metadata
+        # and the commit's manifest stamping would otherwise rewrite the
+        # branch history's manifest grouping in the committed metadata
         added = [
             M.DataFile(**{**f.__dict__, "manifest_id": 0})
             for s in delta
             for f in self._added_by(md, s)
         ]
-        last_err: Exception | None = None
-        for _ in range(self.APPEND_RETRIES):
-            cur_snap = md.snapshot()
-            base = list(cur_snap.files) if cur_snap else []
-            dels = list(cur_snap.delete_files) if cur_snap else []
-            for f in added:
-                f.manifest_id = 0  # restamp under the rebased counter
-            try:
-                self._new_snapshot(
-                    md, "merge", base + added, dels,
-                    {"merged-branch": name, "merged-snapshots": len(delta)},
-                )
-                return
-            except M.CommitConflictError as e:
-                last_err = e
-                md = self.meta  # rebase on the winner's metadata
-        raise last_err  # type: ignore[misc]
+        self._commit_files(
+            md, added, "merge",
+            {"merged-branch": name, "merged-snapshots": len(delta)},
+        )
 
     # -- read path ---------------------------------------------------------
     def _empty_df(self, schema: M.Schema) -> DataFrame:

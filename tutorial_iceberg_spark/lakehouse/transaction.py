@@ -238,16 +238,10 @@ class LakeTransaction:
         staged = []
         for t, files, props in self._ops.values():
             md = t.meta  # fresh base: rebases automatically on retry
-            cur = md.snapshot()
-            base = list(cur.files) if cur else []
-            dels = list(cur.delete_files) if cur else []
             for f in files:
                 f.manifest_id = 0  # restamp under this attempt's counter
             md.properties.update(props)
-            t._new_snapshot(
-                md, "append", base + files, dels,
-                {"txn": self.txid}, commit=False,
-            )
+            t._snapshot_files(md, files, summary={"txn": self.txid}, commit=False)
             staged.append((t.location, md))
         claimed = []
         try:

@@ -14,7 +14,7 @@ directly. This module provides each transform twice:
 from __future__ import annotations
 
 import re
-from datetime import date, datetime
+from datetime import date, datetime, timezone
 from typing import Any, Callable
 
 from pyspark.sql import Column
@@ -136,6 +136,13 @@ def parse_conjuncts(pred_sql: str) -> list[tuple[str, str, Any]] | None:
 def _cmp_key(value: Any):
     v = _coerce_temporal(value)
     if isinstance(v, datetime):
+        if v.tzinfo is not None:
+            # pyarrow footer stats of a UTC-adjusted timestamp column carry
+            # '+00:00'; predicate literals are naive wall clock in the
+            # session zone, which the engine pins to UTC (session.py) —
+            # compare both as naive UTC or '03:00:00+00:00' sorts after
+            # '03:00:00' and a file holding the boundary row is pruned
+            v = v.astimezone(timezone.utc).replace(tzinfo=None)
         return v.isoformat(sep=" ")
     return v
 
