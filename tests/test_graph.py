@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tutorial_iceberg_spark.operators import graph as G
+from tutorial_iceberg_spark.plans.explain import explain_str
 
 
 def union_find(nodes, edges):
@@ -91,12 +92,6 @@ def test_sim_join_symmetric_bounds(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def test_lsh_candidate_edges_equal_all_pairs_edges(spark):
     """The LSH candidate generator must cover every true edge on the
     testdata: after exact verification, candidate-fed edges == all-pairs
@@ -122,7 +117,7 @@ def test_lsh_candidate_path_has_no_nested_loop_join(spark, sf_dir):
     verification sides may still pin broadcast under lsh_route's bytes
     budget)."""
     df = G.cosine_edges(spark, sf_dir, candidates="lsh")
-    plan = _plan(df)
+    plan = explain_str(df)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 

@@ -29,6 +29,8 @@ from pathlib import Path
 
 import pytest
 
+from tutorial_iceberg_spark.plans.explain import explain_str
+
 PKG = Path(__file__).resolve().parent.parent / "tutorial_iceberg_spark"
 
 # Argument prefixes that are provably bounded, per site. Keys are file
@@ -80,7 +82,7 @@ ALLOWED = {
         r"corpus_stats\b",  # 1-row (N, avgdl) aggregate
         r"term_df\b",  # BM25 df table: |query terms| rows
         r"n$",  # 1-row doc-count aggregate (x_tfidf_terms)
-        r"decr_tot\b",  # 1-row Misra-Gries decrement total (x_topk_sketch)
+        r"decr_tot\b",  # 1-row Misra-Gries decrement total (mg_merge)
     ],
     "operators/dedup.py": [
         r"pos\b",  # shingle-position frame: n_hashes permutation rows
@@ -94,7 +96,6 @@ ALLOWED = {
         r"days\b",  # bounded day grid, RETENTION_BITMAP_DAYS rows
     ],
     "streaming/events_stream.py": [
-        r"err_tot\b",  # 1-row Misra-Gries decrement total (x_stream_heavy_users)
         r"days\b",  # bounded day grid (x_stream_retention_bitmap)
     ],
     "operators/graph.py": [
@@ -245,12 +246,6 @@ def sf_correct():
     return SF_CORRECT
 
 
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def _with_threshold(spark, value):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", value)
@@ -283,7 +278,7 @@ def test_dehinted_joins_degrade_to_shuffle_at_scale(
     fn = getattr({"relational": relational, "tpch_extra": tpch_extra}[module], qname)
     prev = _with_threshold(spark, "-1")
     try:
-        plan = _plan(fn(spark, sf_correct))
+        plan = explain_str(fn(spark, sf_correct))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     # the formatted explain prints each node once in the tree and once in
@@ -303,7 +298,7 @@ def test_dehinted_joins_still_broadcast_at_bench_scale(
     from tutorial_iceberg_spark.operators import relational, tpch_extra
 
     fn = getattr({"relational": relational, "tpch_extra": tpch_extra}[module], qname)
-    plan = _plan(fn(spark, sf_correct))
+    plan = explain_str(fn(spark, sf_correct))
     assert "BroadcastHashJoin" in plan, f"{qname}: expected stats-chosen BHJ"
 
 
@@ -315,7 +310,7 @@ def test_bounded_dim_hints_survive_threshold_off(spark, sf_correct):
 
     prev = _with_threshold(spark, "-1")
     try:
-        plan = _plan(R.j2_star_join_revenue(spark, sf_correct))
+        plan = explain_str(R.j2_star_join_revenue(spark, sf_correct))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     n_bhj = len(re.findall(r"\(\d+\) BroadcastHashJoin", plan))

@@ -11,12 +11,7 @@ from pyspark.sql import functions as F
 
 from tutorial_iceberg_spark.io import load_table
 from tutorial_iceberg_spark.operators import relational as R
-
-
-def plan_of(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+from tutorial_iceberg_spark.plans.explain import explain_str
 
 
 def test_flagship_shape(spark, sf_dir):
@@ -30,14 +25,14 @@ def test_flagship_shape(spark, sf_dir):
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
     df = R.p4_range_filter(spark, sf_dir)
-    plan = plan_of(df)
+    plan = explain_str(df)
     assert "PushedFilters" in plan
     assert "GreaterThan(value,100.0)" in plan
 
 
 def test_projection_prunes_columns(spark, sf_dir):
     df = R.p1_projection(spark, sf_dir)
-    plan = plan_of(df)
+    plan = explain_str(df)
     # ReadSchema must not include untouched wide columns like props
     read_schema = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert read_schema and "props" not in read_schema[0]
@@ -45,7 +40,7 @@ def test_projection_prunes_columns(spark, sf_dir):
 
 def test_star_join_broadcasts_dims(spark, sf_dir):
     df = R.j2_star_join_revenue(spark, sf_dir)
-    plan = plan_of(df)
+    plan = explain_str(df)
     # formatted explain lists each node in tree + detail section
     assert plan.count("BroadcastHashJoin") >= 3
     assert "SortMergeJoin" not in plan
@@ -53,14 +48,14 @@ def test_star_join_broadcasts_dims(spark, sf_dir):
 
 def test_agg_has_partial_step(spark, sf_dir):
     df = R.flagship_event_type_agg(spark, sf_dir)
-    plan = plan_of(df)
+    plan = explain_str(df)
     assert "HashAggregate" in plan
     assert "partial_count" in plan or "Functions [partial" in plan
 
 
 def test_topk_uses_take_ordered(spark, sf_dir):
     df = R.o2_topk_event_types(spark, sf_dir)
-    plan = plan_of(df)
+    plan = explain_str(df)
     assert "TakeOrderedAndProject" in plan
 
 
@@ -91,12 +86,12 @@ def test_q3_customer_join_is_aqe_not_hinted(spark, sf_dir):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        plan = plan_of(R.q3_shipping_priority(spark, sf_dir))
+        plan = explain_str(R.q3_shipping_priority(spark, sf_dir))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
     assert "BroadcastHashJoin" not in plan  # no hard hint on customer
-    plan_small = plan_of(R.q3_shipping_priority(spark, sf_dir))
+    plan_small = explain_str(R.q3_shipping_priority(spark, sf_dir))
     assert "BroadcastHashJoin" in plan_small  # stats-chosen at bench scale
     rows = R.q3_shipping_priority(spark, sf_dir).collect()
     assert len(rows) == 10

@@ -273,3 +273,19 @@ def test_bad_import_time_env_falls_back(var, module, attr, default, raw):
     assert proc.returncode == 0, proc.stderr
     assert proc.stdout.strip().splitlines()[-1] == str(default)
     assert f"ignoring malformed {var}={raw!r}" in proc.stderr
+
+
+@pytest.mark.parametrize("raw", ["0", "abc"])
+def test_bad_cpu_budget_falls_back(raw, monkeypatch):
+    """A zero or non-numeric SPARK_GRAFT_CPUS must not reach the master URL
+    (Spark refuses ``local[0]`` at session start): it warns and uses the
+    core count."""
+    import warnings
+
+    from tutorial_iceberg_spark.session import default_parallelism
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", raw)
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        assert default_parallelism() == (os.cpu_count() or 8)
+    assert any(f"SPARK_GRAFT_CPUS={raw!r}" in str(x.message) for x in w)

@@ -83,9 +83,7 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         df = s10_bucketed_join(spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = explain_str(df)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     tree = plan.split("\n\n")[0]  # the indented tree block

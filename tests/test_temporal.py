@@ -7,12 +7,7 @@ from pyspark.sql import functions as F
 
 from tutorial_iceberg_spark.io import load_table
 from tutorial_iceberg_spark.operators import temporal as T
-
-
-def plan_of(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+from tutorial_iceberg_spark.plans.explain import explain_str
 
 
 def test_asof_attribution_semantics(spark, sf_dir):
@@ -51,7 +46,7 @@ def test_asof_attribution_semantics(spark, sf_dir):
 
 
 def test_asof_is_single_window_pass(spark, sf_dir):
-    plan = plan_of(T.x_asof_attribution(spark, sf_dir))
+    plan = explain_str(T.x_asof_attribution(spark, sf_dir))
     assert "NestedLoop" not in plan
     # one Window operator over user_id does the as-of matching
     assert plan.count("Window") >= 1
@@ -59,7 +54,7 @@ def test_asof_is_single_window_pass(spark, sf_dir):
 
 def test_range_join_avoids_nested_loop(spark, sf_dir):
     df = T.x_range_join_bucketed(spark, sf_dir)
-    plan = plan_of(df)
+    plan = explain_str(df)
     assert "NestedLoop" not in plan, "range join degenerated to BNLJ"
     assert "Join" in plan
     # residual range predicate rides the equi-join, bucket fan-out is 2

@@ -12,12 +12,7 @@ from pyspark.sql import functions as F
 from tutorial_iceberg_spark.io import load_table
 from tutorial_iceberg_spark.operators import dedup as D
 from tutorial_iceberg_spark.functions import text as T
-
-
-def plan_of(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+from tutorial_iceberg_spark.plans.explain import explain_str
 
 
 def test_exact_dedup_partitions_rows(spark, sf_dir):
@@ -95,7 +90,7 @@ def test_no_python_udfs_in_text_or_dedup_plans(spark, sf_dir):
         D.x_dedup_simhash,
         D.x_dedup_minhash_lsh,
     ):
-        plan = plan_of(build(spark, sf_dir))
+        plan = explain_str(build(spark, sf_dir))
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, (
             build.__name__
         )

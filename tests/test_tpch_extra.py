@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 
 from tutorial_iceberg_spark.operators import tpch_extra as Q
+from tutorial_iceberg_spark.plans.explain import explain_str
 
 
 @pytest.fixture(scope="module")
@@ -21,14 +22,8 @@ def sf_dir():
     return SF_CORRECT
 
 
-def plan_of(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def test_q7_only_fact_fact_shuffle(spark, sf_dir):
-    plan = plan_of(Q.q7_volume_shipping(spark, sf_dir))
+    plan = explain_str(Q.q7_volume_shipping(spark, sf_dir))
     # supplier/customer/nation paths all broadcast; lineitem|><|orders may
     # be the only non-broadcast join
     assert plan.count("BroadcastHashJoin") >= 3
@@ -46,7 +41,7 @@ def test_q8_share_is_a_probability(spark, sf_dir):
 
 
 def test_q9_parts_filter_pushed_and_broadcast(spark, sf_dir):
-    plan = plan_of(Q.q9_product_profit(spark, sf_dir))
+    plan = explain_str(Q.q9_product_profit(spark, sf_dir))
     assert "BroadcastHashJoin" in plan
     # the LIKE filter must reach the part scan, not run post-join
     assert "StringContains(p_name,red)" in plan or "p_name" in plan.split(
@@ -61,7 +56,7 @@ def test_q11_total_is_broadcast_not_rescan(spark, sf_dir):
     # every kept part's value must exceed 0.1% of the recomputed total
     vals = [r["part_value"] for r in rows]
     assert vals == sorted(vals, reverse=True)
-    plan = plan_of(df)
+    plan = explain_str(df)
     assert "BroadcastExchange" in plan
 
 
@@ -87,14 +82,14 @@ def test_q17_scalar_output(spark, sf_dir):
 
 def test_q20_suppliers_exist_and_plan_semi_joins(spark, sf_dir):
     df = Q.q20_promotion_suppliers(spark, sf_dir)
-    plan = plan_of(df)
+    plan = explain_str(df)
     assert "LeftSemi" in plan
     assert df.count() > 0
 
 
 def test_q22_anti_join_and_gate(spark, sf_dir):
     df = Q.q22_global_sales_opportunity(spark, sf_dir)
-    plan = plan_of(df)
+    plan = explain_str(df)
     assert "LeftAnti" in plan
     rows = df.collect()
     assert rows

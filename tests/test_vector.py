@@ -8,12 +8,7 @@ from pyspark.sql import functions as F
 
 from tutorial_iceberg_spark.functions import vector as V
 from tutorial_iceberg_spark.io import load_table
-
-
-def plan_of(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+from tutorial_iceberg_spark.plans.explain import explain_str
 
 
 def test_knn_shape_and_bounds(spark, sf_dir):
@@ -51,7 +46,7 @@ def test_ivf_recall_vs_brute_force(spark, sf_dir):
 
 
 def test_knn_broadcasts_queries_and_stays_jvm(spark, sf_dir):
-    plan = plan_of(V.x_knn_brute_cosine(spark, sf_dir))
+    plan = explain_str(V.x_knn_brute_cosine(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "SortMergeJoin" not in plan
@@ -102,7 +97,7 @@ def test_hyperplane_signature_build_is_single_pass(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     dim = emb.select(F.size("embedding")).first()[0]
     u = emb.select("vec_id", V._unit(F.col("embedding")).alias("u"))
-    plan = plan_of(V.hyperplane_band_keys(u, dim, 2, 16, 6))
+    plan = explain_str(V.hyperplane_band_keys(u, dim, 2, 16, 6))
     assert "MapInPandas" in plan
     assert "Generate" not in plan
     assert "Exchange" not in plan
@@ -320,9 +315,7 @@ def test_knn_loo_lsh_path_plan_is_equijoin_only(spark, sf_dir):
     from tutorial_iceberg_spark.functions.vector import x_knn_classify_loo
 
     df = x_knn_classify_loo(spark, sf_dir, candidates="lsh")
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = explain_str(df)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
@@ -380,9 +373,9 @@ def test_embed_fold_gate_scale_path_agrees_and_is_bounded(spark, sf_dir):
     # The UNBOUNDED per-(label,dim) fold over row values must be gone in
     # the scale path (the centroid-assembly collect_list over 64 dims is
     # constant-size per label and allowed to stay).
-    plan = plan_of(merged_df)
+    plan = explain_str(merged_df)
     assert "collect_list(struct(vec_id" not in plan
-    assert "collect_list(struct(vec_id" in plan_of(
+    assert "collect_list(struct(vec_id" in explain_str(
         V.x_embed_outliers(spark, sf_dir, bitexact=True)
     )
 
@@ -399,7 +392,7 @@ def test_embed_fold_gate_scale_path_agrees_and_is_bounded(spark, sf_dir):
         assert abs(ex[label]["total_norm"] - mg[label]["total_norm"]) <= (
             1e-9 * max(1.0, abs(ex[label]["total_norm"]))
         )
-    assert "collect_list" not in plan_of(mg_df)
+    assert "collect_list" not in explain_str(mg_df)
 
 
 def test_embed_fold_gate_auto_resolution(sf_dir):

@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from tutorial_iceberg_spark.io import TABLES, load_table, table_path  # noqa: E402
+from tutorial_iceberg_spark.plans.explain import explain_str  # noqa: E402
 from tutorial_iceberg_spark.registry import all_queries  # noqa: E402
 from tutorial_iceberg_spark.session import get_spark  # noqa: E402
 
@@ -300,12 +301,6 @@ def build_inflated(
             shutil.copyfile(table_path(base_dir, t), dst)
 
 
-def _plan_of(df: DataFrame) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def _probe_callables(specs):
     """name -> builder for every probed row, including the
     algorithm-consistent [lsh] twins that force the scale path at BOTH
@@ -526,7 +521,7 @@ def main() -> None:
         state_base = _stream_state()
 
         df_big = _materialize(b, spark, probe_dir)
-        plan = _plan_of(df_big)
+        plan = explain_str(df_big)
         gates = {
             "bnlj": "BroadcastNestedLoopJoin" in plan,
             "cartesian": "CartesianProduct" in plan,

@@ -655,7 +655,7 @@ def incremental_dedup_verdicts(spark: SparkSession, docs: DataFrame) -> DataFram
     # Same keep set as df <= CAP exactly. The census branch re-derives
     # the tokenize (2 Generate passes total, still not the r15 form's 8)
     # — measured cheaper at every SF than materializing the UNCAPPED
-    # posting list just to share one pass (tools/noop_pair_probe.py).
+    # posting list just to share one pass (OPTIMIZATION_r17.md, change 3).
     # Downstream keeps its bounds: every surviving shingle has <= CAP
     # postings per side, so the b|><|c pair join stays skew-bounded by
     # construction. The sizes groupBy still pays a doc_id exchange over

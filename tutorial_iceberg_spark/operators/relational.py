@@ -1446,7 +1446,7 @@ def q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(order,supplier) level and the order level pipeline in one stage "
     "with zero further exchanges (guide §2.4) — the r16 form paid two "
     "fact-sized exchanges back-to-back and measured 28% slower "
-    "(tools/q21_probe.py). Two-level agg rather than countDistinct, which "
+    "(OPTIMIZATION_r17.md, change 1). Two-level agg rather than countDistinct, which "
     "would Expand the fact table 2x; the second level also carries "
     "max(returning suppkey), which for n_ret_supp == 1 orders IS the "
     "supplier to credit",

@@ -5,7 +5,9 @@ PARQUET_SCAN -> FILTER -> HASH_GROUP_BY and confirming predicate pushdown
 (README.md:654-703). The Spark equivalents are formatted explain output and
 a scan summary extracting exactly the three things that matter at 100 TB:
 PushedFilters (row-group skipping), ReadSchema (column pruning), and
-PartitionFilters (partition pruning).
+PartitionFilters (partition pruning). The ANALYZE half — what each
+operator actually did — is ``operator_metrics`` and ``plan_summary``, both
+read from the executed plan after an action.
 """
 
 from __future__ import annotations
@@ -23,6 +25,98 @@ from tutorial_iceberg_spark.registry import register
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     """df.explain(...) as a string instead of stdout."""
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
+
+
+# Physical operators that run user code in a Python worker (Arrow or
+# pickled batches) all live in this package.
+_PYTHON_EXEC_PKG = "org.apache.spark.sql.execution.python."
+
+
+def _seq(scala_seq) -> list:
+    return [scala_seq.apply(i) for i in range(scala_seq.size())]
+
+
+def _executed_nodes(df: DataFrame):
+    """(depth, JVM SparkPlan node) for every operator of the frame's
+    executed plan, EXPLAIN ANALYZE style: each adaptive plan is read as its
+    final (post-AQE) plan, each query stage as the plan it ran, and every
+    subquery is walked under the node that uses it. A reused exchange or
+    subquery is a leaf, so shared work is counted once. Call after an
+    action on ``df``: before one, reading an adaptive plan's final plan
+    runs its query stages."""
+    todo = [(0, df._jdf.queryExecution().executedPlan())]
+    while todo:
+        depth, node = todo.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            todo.append((depth, node.finalPhysicalPlan()))
+            continue
+        yield depth, node
+        inner = _seq(node.children()) + _seq(node.subqueries())
+        if cls.endswith("QueryStageExec"):
+            inner.insert(0, node.plan())
+        todo.extend((depth + 1, child) for child in reversed(inner))
+
+
+def _metrics(node) -> dict:
+    """Nonzero SQL metrics of one node; nanosecond timings read in ms."""
+    out = {}
+    it = node.metrics().iterator()
+    while it.hasNext():
+        kv = it.next()
+        value = kv._2().value()
+        if value:
+            if kv._2().metricType() == "nsTiming":
+                value = round(value / 1e6, 3)
+            out[kv._1()] = value
+    return out
+
+
+def operator_metrics(df: DataFrame) -> list[dict]:
+    """Every operator of the frame's executed plan, in plan order, with its
+    class, node name, depth and nonzero SQL metrics (row counts, sizes,
+    times in ms). Python-worker nodes (``MapInPandasExec`` and kin) carry
+    ``pythonTotalTime``, ``pythonDataSent`` and ``pythonNumRowsReceived``.
+    Call after an action on ``df``."""
+    return [
+        {
+            "class": node.getClass().getSimpleName(),
+            "node": node.nodeName(),
+            "depth": depth,
+            "metrics": _metrics(node),
+        }
+        for depth, node in _executed_nodes(df)
+    ]
+
+
+def plan_summary(df: DataFrame) -> dict:
+    """Scale-relevant facts of the frame's executed plan: file scans and
+    what reached them (``scan_details``: read columns, PushedFilters), join
+    strategies, shuffle exchanges, whole-stage codegen spans and whether
+    any operator runs in a Python worker. Call after an action on
+    ``df``."""
+    counts: dict[str, int] = {}
+    scans, python = [], False
+    for _depth, node in _executed_nodes(df):
+        cls = node.getClass().getSimpleName()
+        counts[cls] = counts.get(cls, 0) + 1
+        python = python or node.getClass().getName().startswith(_PYTHON_EXEC_PKG)
+        if cls == "FileSourceScanExec":
+            pushed = node.metadata().get("PushedFilters")
+            pushed = pushed.get() if pushed.isDefined() else "[]"
+            scans.append((node.requiredSchema().size(), pushed))
+    return {
+        "scans": len(scans),
+        "pushed_scans": sum(1 for _cols, p in scans if p != "[]"),
+        "scan_details": scans,
+        "bhj": counts.get("BroadcastHashJoinExec", 0),
+        "smj": counts.get("SortMergeJoinExec", 0),
+        "shj": counts.get("ShuffledHashJoinExec", 0),
+        "bnlj": counts.get("BroadcastNestedLoopJoinExec", 0),
+        "exchanges": counts.get("ShuffleExchangeExec", 0),
+        "codegen_spans": counts.get("WholeStageCodegenExec", 0),
+        "python": python,
+    }
 
 
 def describe_select(spark: SparkSession, sql: str) -> DataFrame:

@@ -55,10 +55,9 @@ ENGINE_RUNTIME_CONF: dict[str, str] = {
 
 def default_parallelism() -> int:
     """CPU budget: honours the driver's SPARK_GRAFT_CPUS, else all cores."""
-    env = os.environ.get("SPARK_GRAFT_CPUS")
-    if env and env.isdigit():
-        return int(env)
-    return os.cpu_count() or 8
+    from tutorial_iceberg_spark.scratch import env_number
+
+    return env_number("SPARK_GRAFT_CPUS", os.cpu_count() or 8, int)
 
 
 def apply_engine_conf(spark: SparkSession) -> SparkSession:

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from tutorial_iceberg_spark.functions.numeric import dsum, o_dsum
+from tutorial_iceberg_spark.functions.text import mg_fold, mg_merge
 from tutorial_iceberg_spark.io import (
     load_table, normalize_table, parquet_schema, table_path,
 )
@@ -1217,57 +1218,13 @@ MG_STREAM_TOP = 20
     tags=("streaming", "sketch", "extension"),
 )
 def x_stream_heavy_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = read_events_stream(spark, sf_dir).select(
-        F.col("user_id").cast("string").alias("v")
-    )
+    ev = read_events_stream(spark, sf_dir).select("user_id")
 
     def mg(batches):
-        import pandas as pd
+        yield mg_fold((pdf["user_id"] for pdf in batches), MG_STREAM_CAP, "user_id")
 
-        counters: dict[str, int] = {}
-        decr = 0
-        for pdf in batches:
-            for v in pdf["v"]:
-                if v in counters:
-                    counters[v] += 1
-                elif len(counters) < MG_STREAM_CAP:
-                    counters[v] = 1
-                else:
-                    decr += 1
-                    dead = []
-                    for k in counters:
-                        counters[k] -= 1
-                        if counters[k] == 0:
-                            dead.append(k)
-                    for k in dead:
-                        del counters[k]
-        yield pd.DataFrame(
-            {
-                "k": list(counters) + [None],
-                "cnt": list(counters.values()) + [0],
-                "decr": [0] * len(counters) + [decr],
-            }
-        )
-
-    partials = ev.mapInPandas(mg, "k string, cnt long, decr long")
-    acc = run_stream(partials, mode="append")
-    err_tot = acc.agg(F.sum("decr").alias("err_bound"))
-    merged = (
-        acc.filter(F.col("k").isNotNull())
-        .groupBy("k")
-        .agg(F.sum("cnt").alias("est_min"))
-    )
-    return (
-        merged.crossJoin(F.broadcast(err_tot))
-        .select(
-            F.col("k").cast("long").alias("user_id"),
-            "est_min",
-            (F.col("est_min") + F.col("err_bound")).alias("est_max"),
-            "err_bound",
-        )
-        .orderBy(F.desc("est_min"), "user_id")
-        .limit(MG_STREAM_TOP)
-    )
+    partials = ev.mapInPandas(mg, "user_id long, cnt long, decr long")
+    return mg_merge(run_stream(partials, mode="append"), "user_id", MG_STREAM_TOP)
 
 
 @register(
