@@ -22,9 +22,9 @@ def entry(spark: SparkSession) -> DataFrame:
     The reference's core analytics pattern (README.md:583-592): per
     event_type count / avg / sum over the events table, biggest first.
     """
-    from tutorial_iceberg_spark.operators.relational import flagship_event_type_agg
+    from tutorial_iceberg_spark.registry import all_queries
 
-    return flagship_event_type_agg(spark, "/root/testdata/sf0.001")
+    return all_queries()["flagship_event_type_agg"].builder(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

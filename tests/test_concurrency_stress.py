@@ -279,7 +279,8 @@ def test_hint_flip_storm_has_no_shared_temp_collision(cat, spark):
     must use a UNIQUE temp name per call — with a shared temp path,
     writer B's os.replace consumes the file writer A is about to rename,
     and A raises FileNotFoundError AFTER its commit durably succeeded
-    (caught live by tools/txn_probe.py at 8 committers). No Spark rows:
+    (caught live by the round-12 commit-herd probe at 8 committers;
+    SCALE_PROBE.md, probes/r12/probe_txn_contention.json). No Spark rows:
     this storms the metadata layer alone, so collisions are frequent."""
     t = cat.create_table("db.hint", "k bigint")
     n_threads, per_thread = 16, 15

@@ -37,8 +37,8 @@ SUBSET = [
     "a16_cube_revenue",
     "x_tfidf_terms",
     "w6_distribution_ranks",
-    # round-7 additions (each also passed the one-off full-registry sweep,
-    # tools/pandas_path_sweep.py)
+    # round-7 additions (each also passed a one-off full-registry sweep
+    # of the pandas path; SURVEY.md, round 7)
     "lake_changelog",
     "x_embed_outliers",
     "x_dedup_minhash_md5",

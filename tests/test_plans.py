@@ -64,7 +64,6 @@ ALLOWED = {
         r"q_bands\b",  # per-query LSH bands (n_queries x bands)
         r"cents\b",  # k-means centroids: n_cells x dim, a parameter
         r"cent\b",  # per-label centroids: |labels| rows, bounded domain
-        r"tot\b",  # 1-row (total, n_classes) aggregate (x_class_weights)
         r"probes\b",  # query->cell probe pairs: n_queries x n_probe
         r"b$",  # kNN-LOO all-pairs baseline, gated to ALL_PAIRS_MAX_ROWS
         # first-collision dedup key table: caller-gated to the
@@ -273,9 +272,9 @@ def test_dehinted_joins_degrade_to_shuffle_at_scale(
     the only BroadcastHashJoins that may remain are the schema-bounded
     nation/region hints: every linear-growth-table join must fall back to
     a shuffle join. A surplus BHJ means a hard hint regressed in."""
-    from tutorial_iceberg_spark.operators import relational, tpch_extra
+    from tutorial_iceberg_spark.registry import all_queries
 
-    fn = getattr({"relational": relational, "tpch_extra": tpch_extra}[module], qname)
+    fn = all_queries()[qname].builder
     prev = _with_threshold(spark, "-1")
     try:
         plan = explain_str(fn(spark, sf_correct))
@@ -295,9 +294,9 @@ def test_dehinted_joins_still_broadcast_at_bench_scale(
     """At the default threshold the same queries must still plan
     BroadcastHashJoin on the small dim side — dropping the hints costs
     nothing at sf0.01/sf0.1 because size estimates pick the same plan."""
-    from tutorial_iceberg_spark.operators import relational, tpch_extra
+    from tutorial_iceberg_spark.registry import all_queries
 
-    fn = getattr({"relational": relational, "tpch_extra": tpch_extra}[module], qname)
+    fn = all_queries()[qname].builder
     plan = explain_str(fn(spark, sf_correct))
     assert "BroadcastHashJoin" in plan, f"{qname}: expected stats-chosen BHJ"
 

@@ -11,6 +11,8 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
+
 from tutorial_iceberg_spark.plans.explain import operator_metrics, plan_summary
 from tutorial_iceberg_spark.registry import all_queries
 
@@ -47,6 +49,24 @@ def test_python_worker_metrics_are_read(spark, sf_dir):
     assert pandas_nodes
     assert any(o["metrics"].get("pythonNumRowsReceived", 0) >= n_emb for o in pandas_nodes)
     assert plan_summary(df)["python"]
+
+
+@pytest.mark.parametrize("name", ["x_embed_pca", "x_embed_pq"])
+def test_embedding_kernel_sees_each_row_once(spark, sf_dir, name):
+    # a sort above the kernel plans a RangePartitioner whose sampling job
+    # reruns the scan and the kernel: the node then receives every row twice
+    from tutorial_iceberg_spark.io import load_table
+
+    df = all_queries()[name].builder(spark, sf_dir)
+    ids = [r["vec_id"] for r in df.collect()]
+    n_emb = load_table(spark, sf_dir, "embeddings").count()
+    received = [
+        o["metrics"].get("pythonNumRowsReceived", 0)
+        for o in operator_metrics(df)
+        if o["class"] == "MapInPandasExec"
+    ]
+    assert received == [n_emb]
+    assert len(ids) == n_emb and ids == sorted(ids)
 
 
 def test_profile_reads_stages_and_catalyst(spark, sf_dir):

@@ -12,10 +12,11 @@ from pyspark.sql import functions as F
 from tutorial_iceberg_spark.io import load_table
 from tutorial_iceberg_spark.operators import relational as R
 from tutorial_iceberg_spark.plans.explain import explain_str
+from tutorial_iceberg_spark.registry import all_queries
 
 
 def test_flagship_shape(spark, sf_dir):
-    df = R.flagship_event_type_agg(spark, sf_dir)
+    df = all_queries()["flagship_event_type_agg"].builder(spark, sf_dir)
     rows = df.collect()
     assert len(rows) == 5  # click/view/purchase/signup/error
     assert rows[0]["cnt"] >= rows[-1]["cnt"]
@@ -24,14 +25,14 @@ def test_flagship_shape(spark, sf_dir):
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
-    df = R.p4_range_filter(spark, sf_dir)
+    df = all_queries()["p4_range_filter"].builder(spark, sf_dir)
     plan = explain_str(df)
     assert "PushedFilters" in plan
     assert "GreaterThan(value,100.0)" in plan
 
 
 def test_projection_prunes_columns(spark, sf_dir):
-    df = R.p1_projection(spark, sf_dir)
+    df = all_queries()["p1_projection"].builder(spark, sf_dir)
     plan = explain_str(df)
     # ReadSchema must not include untouched wide columns like props
     read_schema = [l for l in plan.splitlines() if "ReadSchema" in l]
@@ -47,20 +48,20 @@ def test_star_join_broadcasts_dims(spark, sf_dir):
 
 
 def test_agg_has_partial_step(spark, sf_dir):
-    df = R.flagship_event_type_agg(spark, sf_dir)
+    df = all_queries()["flagship_event_type_agg"].builder(spark, sf_dir)
     plan = explain_str(df)
     assert "HashAggregate" in plan
     assert "partial_count" in plan or "Functions [partial" in plan
 
 
 def test_topk_uses_take_ordered(spark, sf_dir):
-    df = R.o2_topk_event_types(spark, sf_dir)
+    df = all_queries()["o2_topk_event_types"].builder(spark, sf_dir)
     plan = explain_str(df)
     assert "TakeOrderedAndProject" in plan
 
 
 def test_running_total_monotone(spark, sf_dir):
-    rows = R.w1_running_total(spark, sf_dir).collect()
+    rows = all_queries()["w1_running_total"].builder(spark, sf_dir).collect()
     cums = [r["cumulative_revenue"] for r in rows]
     assert cums == sorted(cums)
     assert abs(cums[-1] - sum(r["revenue"] for r in rows)) < 1e-6
@@ -86,14 +87,14 @@ def test_q3_customer_join_is_aqe_not_hinted(spark, sf_dir):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        plan = explain_str(R.q3_shipping_priority(spark, sf_dir))
+        plan = explain_str(all_queries()["q3_shipping_priority"].builder(spark, sf_dir))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
     assert "BroadcastHashJoin" not in plan  # no hard hint on customer
-    plan_small = explain_str(R.q3_shipping_priority(spark, sf_dir))
+    plan_small = explain_str(all_queries()["q3_shipping_priority"].builder(spark, sf_dir))
     assert "BroadcastHashJoin" in plan_small  # stats-chosen at bench scale
-    rows = R.q3_shipping_priority(spark, sf_dir).collect()
+    rows = all_queries()["q3_shipping_priority"].builder(spark, sf_dir).collect()
     assert len(rows) == 10
     revs = [r["revenue"] for r in rows]
     assert revs == sorted(revs, reverse=True)
@@ -129,7 +130,7 @@ def test_approx_distinct_within_5pct_of_exact(spark, sf_dir):
     from pyspark.sql import functions as F2
     from tutorial_iceberg_spark.io import load_table as lt
 
-    exact = {r["event_type"]: r["exact_users"] for r in R.a9_distinct_users(spark, sf_dir).collect()}
+    exact = {r["event_type"]: r["exact_users"] for r in all_queries()["a9_distinct_users"].builder(spark, sf_dir).collect()}
     approx = {
         r["event_type"]: r["a"]
         for r in lt(spark, sf_dir, "events")

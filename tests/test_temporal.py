@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from tutorial_iceberg_spark.io import load_table
 from tutorial_iceberg_spark.operators import temporal as T
 from tutorial_iceberg_spark.plans.explain import explain_str
+from tutorial_iceberg_spark.registry import all_queries
 
 
 def test_asof_attribution_semantics(spark, sf_dir):
@@ -53,7 +54,7 @@ def test_asof_is_single_window_pass(spark, sf_dir):
 
 
 def test_range_join_avoids_nested_loop(spark, sf_dir):
-    df = T.x_range_join_bucketed(spark, sf_dir)
+    df = all_queries()["x_range_join_bucketed"].builder(spark, sf_dir)
     plan = explain_str(df)
     assert "NestedLoop" not in plan, "range join degenerated to BNLJ"
     assert "Join" in plan

@@ -11,6 +11,7 @@ import pytest
 
 from tutorial_iceberg_spark.operators import tpch_extra as Q
 from tutorial_iceberg_spark.plans.explain import explain_str
+from tutorial_iceberg_spark.registry import all_queries
 
 
 @pytest.fixture(scope="module")
@@ -23,18 +24,18 @@ def sf_dir():
 
 
 def test_q7_only_fact_fact_shuffle(spark, sf_dir):
-    plan = explain_str(Q.q7_volume_shipping(spark, sf_dir))
+    plan = explain_str(all_queries()["q7_volume_shipping"].builder(spark, sf_dir))
     # supplier/customer/nation paths all broadcast; lineitem|><|orders may
     # be the only non-broadcast join
     assert plan.count("BroadcastHashJoin") >= 3
-    rows = Q.q7_volume_shipping(spark, sf_dir).collect()
+    rows = all_queries()["q7_volume_shipping"].builder(spark, sf_dir).collect()
     assert rows
     pairs = {(r["supp_nation"], r["cust_nation"]) for r in rows}
     assert pairs <= {("NATION_1", "NATION_2"), ("NATION_2", "NATION_1")}
 
 
 def test_q8_share_is_a_probability(spark, sf_dir):
-    rows = Q.q8_market_share(spark, sf_dir).collect()
+    rows = all_queries()["q8_market_share"].builder(spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert 0.0 <= r["mkt_share"] <= 1.0
@@ -61,7 +62,7 @@ def test_q11_total_is_broadcast_not_rescan(spark, sf_dir):
 
 
 def test_q12_conditional_counts_sum_to_join_size(spark, sf_dir):
-    rows = Q.q12_late_lines_by_status(spark, sf_dir).collect()
+    rows = all_queries()["q12_late_lines_by_status"].builder(spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r["high_line_count"] >= 0 and r["low_line_count"] >= 0
@@ -81,14 +82,14 @@ def test_q17_scalar_output(spark, sf_dir):
 
 
 def test_q20_suppliers_exist_and_plan_semi_joins(spark, sf_dir):
-    df = Q.q20_promotion_suppliers(spark, sf_dir)
+    df = all_queries()["q20_promotion_suppliers"].builder(spark, sf_dir)
     plan = explain_str(df)
     assert "LeftSemi" in plan
     assert df.count() > 0
 
 
 def test_q22_anti_join_and_gate(spark, sf_dir):
-    df = Q.q22_global_sales_opportunity(spark, sf_dir)
+    df = all_queries()["q22_global_sales_opportunity"].builder(spark, sf_dir)
     plan = explain_str(df)
     assert "LeftAnti" in plan
     rows = df.collect()

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tutorial_iceberg_spark.io import load_table
-from tutorial_iceberg_spark.registry import register
+from tutorial_iceberg_spark.registry import register, register_sql
 
 TOP_K = 10
 N_QUERIES = 5  # query set = vec_id < 5
@@ -135,9 +135,9 @@ def x_embed_label_stats(
     )
 
 
-@register(
+register_sql(
     "x_class_weights",
-    oracle="""
+    text="""
         WITH tot AS (
             SELECT COUNT(*) AS total, COUNT(DISTINCT label) AS k
             FROM embeddings
@@ -158,25 +158,6 @@ def x_embed_label_stats(
     "hash-matches bit-for-bit",
     tags=("vector", "sampling", "extension"),
 )
-def x_class_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    tot = emb.agg(
-        F.count("*").alias("total"), F.countDistinct("label").alias("k")
-    )
-    return (
-        emb.groupBy("label")
-        .agg(F.count("*").alias("n"))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "label",
-            "n",
-            (
-                F.col("total").cast("double")
-                / (F.col("k").cast("double") * F.col("n"))
-            ).alias("class_weight"),
-        )
-        .orderBy("label")
-    )
 
 
 OUTLIER_K = 5  # reported outliers per label
@@ -1177,8 +1158,8 @@ def fit_pca(spark: SparkSession, emb: DataFrame, k: int = PCA_K):
     "partition-level moment partials (count / sum / outer-product sum) via "
     "one Arrow pass — the treeAggregate pattern, O(partitions * d^2) "
     "driver state independent of corpus size — then a d x d eigh on the "
-    "driver and a second narrow Arrow pass projecting every row. Two "
-    "scans, zero shuffles, model state bounded by embedding width. "
+    "driver and a second Arrow pass projecting every row once, after one "
+    "range sort on vec_id; model state bounded by embedding width. "
     f"Output is flat double columns pc1..pc{PCA_K} (deterministic "
     "component signs), ordered by vec_id",
     tags=("vector", "extension", "pandas-udf"),
@@ -1206,10 +1187,13 @@ def x_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(out)
 
     schema = "vec_id long, " + ", ".join(f"pc{i + 1} double" for i in range(k))
+    # Range-sort the scan, not the kernel's output: the RangePartitioner's
+    # sampling job then re-reads the scan only, the kernel sees each row
+    # once, and it emits every sorted partition in its input order.
     return (
         emb.select("vec_id", "embedding")
-        .mapInPandas(project, schema)
         .orderBy("vec_id")
+        .mapInPandas(project, schema)
     )
 
 
@@ -1297,7 +1281,8 @@ def fit_pq(spark: SparkSession, emb: DataFrame, m: int = PQ_M, k: int = PQ_K):
 def x_embed_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     books = fit_pq(spark, emb)
-    return encode_pq(emb, books).orderBy("vec_id")
+    # sorted before the kernel, as in x_embed_pca: no sampling job reruns it
+    return encode_pq(emb.orderBy("vec_id"), books)
 
 
 def encode_pq(emb: DataFrame, books) -> DataFrame:

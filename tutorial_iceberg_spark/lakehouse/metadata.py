@@ -763,8 +763,9 @@ def flip_hint(location: str, v: int) -> None:
     concurrently (each after winning its own version slot), and a shared
     temp name lets writer B's replace() consume the file writer A is
     about to replace — A's rename then raises FileNotFoundError AFTER
-    its commit durably succeeded (found by tools/txn_probe.py at 8
-    threads). Hint monotonicity doesn't matter for correctness either
+    its commit durably succeeded (found by the round-12 commit-herd
+    probe at 8 threads; SCALE_PROBE.md, probes/r12/
+    probe_txn_contention.json). Hint monotonicity doesn't matter for correctness either
     way: current_version only probes UPWARD from whatever the hint says."""
     tmp = _hint_path(location) + f".{uuid.uuid4().hex}.tmp"
     with open(tmp, "w") as f:

@@ -371,8 +371,8 @@ class LakeTable:
         interleaved-partition appends, summary-pruning efficiency
         depended on an explicit rewrite_manifests. Clustering here keeps
         each output manifest to a contiguous partition range, so
-        plan-time pruning holds WITHOUT maintenance (probes/r15/
-        cluster_probe.json: touched-manifest count after 50 interleaved
+        plan-time pruning holds WITHOUT maintenance (SCALE_PROBE.md
+        round 15, probes/r15/cluster_probe.json: touched-manifest count after 50 interleaved
         appends ~equals the post-rewrite_manifests count).
 
         Output group count is capped at MANIFEST_MERGE_BATCH // 2, so a

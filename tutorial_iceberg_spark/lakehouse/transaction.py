@@ -354,8 +354,9 @@ class LakeTransaction:
                 # txn's since-burned claim: two txns claiming the
                 # same tables in opposite orders abort and retry in
                 # lockstep, a livelock only timing luck breaks.
-                # Measured by tools/txn_probe.py at a 16-way
-                # simultaneous-commit herd: immediate retries exhausted
+                # Measured at a 16-way simultaneous-commit herd
+                # (SCALE_PROBE.md round 12, probes/r12/
+                # probe_txn_contention.json): immediate retries exhausted
                 # for 30/64 txns; randomized waits break the symmetry,
                 # and the cap SCALES with observed conflicts so a herd
                 # spreads out instead of exhausting in lockstep.

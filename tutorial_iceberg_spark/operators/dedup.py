@@ -721,6 +721,7 @@ FUZZY_PREFIX = 80  # normalized-prefix length for the edit-distance verify
 FUZZY_LEV_MAX = 20  # prefix edit distance at or under this = fuzzy dup
 
 
+# Kept over its oracle text: slower as SQL, 1.11 s vs 0.70 s median (IQR 0.13 s), 10 sf0.1 pairs.
 @register(
     "x_fuzzy_verify_lev",
     oracle=rf"""

@@ -846,6 +846,7 @@ def x_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Kept over its oracle text: the text plans 7 SinglePartition exchanges at sf0.1, this builder 4.
 @register(
     "x_data_quality_audit",
     oracle="""
@@ -957,6 +958,7 @@ def x_data_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 FUNNEL = ("view", "click", "purchase")
 
 
+# Kept over its oracle text: the text plans 4 SinglePartition exchanges at sf0.1, this builder 1.
 @register(
     "x_funnel_conversion",
     oracle="""
@@ -1152,6 +1154,7 @@ def x_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Kept over its oracle text: its measured localCheckpoint is a CHECKPOINTS entry in tests/test_plans.py.
 @register(
     "x_crosstab_chi2",
     oracle="""
@@ -1319,6 +1322,7 @@ FUNNEL_STEP1_HOURS = 1  # click must follow the first view within this
 FUNNEL_STEP2_HOURS = 24  # purchase must follow that click within this
 
 
+# Kept over its oracle text: the text plans 4 SinglePartition exchanges at sf0.1, this builder 1.
 @register(
     "x_funnel_windowed",
     oracle=f"""

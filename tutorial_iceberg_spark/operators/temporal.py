@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tutorial_iceberg_spark.io import load_table
-from tutorial_iceberg_spark.registry import register
+from tutorial_iceberg_spark.registry import register, register_sql
 
 
 @register(
@@ -107,6 +107,7 @@ def x_asof_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Kept over its oracle text: the hour bucket is the feature; the text joins a user's clicks on user_id alone.
 @register(
     "x_range_join_bucketed",
     oracle="""
@@ -167,6 +168,7 @@ def x_range_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Kept over its oracle text: its recursive CTE takes 10.2 s vs 0.26 s median, 10 sf0.1 pairs.
 @register(
     "x_ema_daily",
     oracle="""
@@ -295,9 +297,9 @@ def x_rolling_7day(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "x_event_transitions",
-    oracle="""
+    text="""
         WITH seq AS (
             SELECT user_id, event_type AS from_type,
                    lead(event_type) OVER (
@@ -324,30 +326,6 @@ def x_rolling_7day(spark: SparkSession, sf_dir: str) -> DataFrame:
     "under one IEEE divide",
     tags=("temporal", "window", "extension"),
 )
-def x_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = (
-        ev.select(
-            F.col("event_type").alias("from_type"),
-            F.lead("event_type").over(w).alias("to_type"),
-        )
-        .filter(F.col("to_type").isNotNull())
-        .groupBy("from_type", "to_type")
-        .agg(F.count("*").alias("n"))
-    )
-    w_row = Window.partitionBy("from_type")
-    return (
-        pairs.select(
-            "from_type",
-            "to_type",
-            "n",
-            (F.col("n").cast("double") / F.sum("n").over(w_row)).alias("p"),
-        )
-        .orderBy("from_type", "to_type")
-    )
 
 
 @register(

@@ -88,14 +88,6 @@ def read_events_stream(
 # clusters can do exactly that without touching code.
 STREAM_SHUFFLE_PARTITIONS = env_number("TIS_STREAM_SHUFFLE_PARTITIONS", 4, int)
 
-# Observability: run_stream records the completed query's state-store
-# footprint here (max across micro-batches / operators). The 10x scale
-# probe reads it to report measured state growth alongside wall growth —
-# bounded-state ARGUMENTS become bounded-state MEASUREMENTS (r9 verdict
-# Next #4). None when the query exposed no progress (or on API drift).
-LAST_STREAM_STATE: dict | None = None
-
-
 def run_stream(
     stream_df: DataFrame, mode: str = "complete", single_batch: bool = False
 ) -> DataFrame:
@@ -115,8 +107,6 @@ def run_stream(
 
     from tutorial_iceberg_spark import scratch as _scratch
 
-    global LAST_STREAM_STATE
-    LAST_STREAM_STATE = None  # never report a previous stream's state
     spark = stream_df.sparkSession
     # Shared-filesystem scratch (TIS_SCRATCH_DIR on clusters): the sink
     # and checkpoint dirs are read/written by executor tasks across
@@ -155,24 +145,6 @@ def run_stream(
                 .start()
             )
         q.awaitTermination()
-        try:
-            progs = [p for p in (q.recentProgress or []) if p]
-            ops = [
-                op for p in progs for op in (p.get("stateOperators") or [])
-            ]
-            LAST_STREAM_STATE = {
-                "batches": len(progs),
-                "state_rows_max": max(
-                    (int(op.get("numRowsTotal") or 0) for op in ops),
-                    default=0,
-                ),
-                "state_bytes_max": max(
-                    (int(op.get("memoryUsedBytes") or 0) for op in ops),
-                    default=0,
-                ),
-            }
-        except Exception:
-            LAST_STREAM_STATE = None
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     if single_batch:
