@@ -328,9 +328,13 @@ def main() -> None:
     specs = all_queries()
 
     # Warm-up: run every headline query once at the smallest SF. This warms
-    # JVM JIT, whole-stage-codegen caches, and the streaming machinery while
-    # touching none of the benchmark SF's data, so the timed runs measure
-    # steady-state query cost rather than first-compile overhead.
+    # the JVM JIT and the streaming machinery and fills the codegen class
+    # cache while touching none of the benchmark SF's data. The cache holds
+    # every headline plan's classes only because session.py sizes it
+    # (CODEGEN_CACHE_ENTRIES); at Spark's default of 100 entries the 31
+    # queries evicted each other's classes before their timed runs. A timed
+    # run still compiles where AQE plans the bench SF differently from the
+    # warm SF, and the JIT is still compiling through the first timed runs.
     warm_sf = "/root/testdata/sf0.001"
     for t in ("events", "lineitem", "documents"):
         load_table(spark, sf_dir, t).count()

@@ -55,6 +55,20 @@ def test_hostile_session_timezone_is_repinned(spark, sf_dir):
     assert hostile == baseline
 
 
+def test_runtime_confs_are_runtime_settable(spark):
+    """apply_engine_conf skips a key the session refuses, so a static conf
+    in ENGINE_RUNTIME_CONF would silently never reach a session built
+    elsewhere. Static confs go on get_spark's builder, like the codegen
+    class cache size."""
+    from tutorial_iceberg_spark.session import CODEGEN_CACHE_ENTRIES, ENGINE_RUNTIME_CONF
+
+    static = [k for k in ENGINE_RUNTIME_CONF if not spark.conf.isModifiable(k)]
+    assert not static, f"static confs in ENGINE_RUNTIME_CONF: {static}"
+    key = "spark.sql.codegen.cache.maxEntries"
+    assert not spark.conf.isModifiable(key)
+    assert spark.conf.get(key) == str(CODEGEN_CACHE_ENTRIES)
+
+
 def test_builders_are_deterministic_across_reruns(spark, sf_dir):
     """Verify-skill probe as a gate: running a builder twice in one
     session must produce identical results — covers the ops whose

@@ -172,7 +172,6 @@ CHECKPOINTS = {
         "triangle_counts": (1, "measured: edge feed backs three self-joins"),
     },
     "operators/tpch_extra.py": {
-        "q11_important_parts": (1, "measured: per-part agg feeds threshold and mean"),
         "q15_top_supplier": (1, "measured: per-supplier agg feeds filter and max"),
     },
     "operators/pipeline.py": {

@@ -13,7 +13,11 @@ import sys
 
 import pytest
 
-from tutorial_iceberg_spark.plans.explain import operator_metrics, plan_summary
+from tutorial_iceberg_spark.plans.explain import (
+    codegen_compilations,
+    operator_metrics,
+    plan_summary,
+)
 from tutorial_iceberg_spark.registry import all_queries
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
@@ -69,6 +73,40 @@ def test_embedding_kernel_sees_each_row_once(spark, sf_dir, name):
     assert len(ids) == n_emb and ids == sorted(ids)
 
 
+# the ops of perfbench's llm_corpus workload
+LLM_CORPUS = (
+    "x_dedup_exact", "x_dedup_minhash_lsh",
+    "x_keyword_extract", "x_tfidf_terms", "x_embed_pca", "x_knn_brute_cosine",
+)
+
+
+def test_repeated_ops_compile_nothing(spark, sf_dir):
+    # a cycle of these ops generates more classes than Spark's default
+    # codegen cache holds (100), so each repeat recompiled most of them:
+    # the cache must hold the working set. On the smoke tables AQE may turn
+    # a join into a broadcast of whichever side finishes first, a new plan
+    # rather than a repeat, so that runtime conversion is off here.
+    specs = all_queries()
+    key = "spark.sql.adaptive.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key, None)
+
+    def cycle() -> int:
+        before = codegen_compilations(spark)[0]
+        for name in LLM_CORPUS:
+            specs[name].builder(spark, sf_dir).collect()
+        return codegen_compilations(spark)[0] - before
+
+    spark.conf.set(key, "-1")
+    try:
+        first, second = cycle(), cycle()
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert second <= 0.05 * first, (first, second)
+
+
 def test_profile_reads_stages_and_catalyst(spark, sf_dir):
     rec = query_profile.profile(spark, "p3_eq_filter", sf_dir)
     assert len(rec["walls_s"]) == 1
@@ -79,6 +117,7 @@ def test_profile_reads_stages_and_catalyst(spark, sf_dir):
         "catalyst.planning_ms",
     }
     assert any(o["class"] == "FileSourceScanExec" for o in rec["operators"])
+    assert set(rec["codegen"]) == {"compiles", "compile_ms"}
 
 
 def test_plans_writes_one_file_per_name(spark, sf_dir, tmp_path, monkeypatch):

@@ -51,7 +51,7 @@ def test_q9_parts_filter_pushed_and_broadcast(spark, sf_dir):
 
 
 def test_q11_total_is_broadcast_not_rescan(spark, sf_dir):
-    df = Q.q11_important_parts(spark, sf_dir)
+    df = all_queries()["q11_important_parts"].builder(spark, sf_dir)
     rows = df.collect()
     assert rows
     # every kept part's value must exceed 0.1% of the recomputed total

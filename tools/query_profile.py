@@ -10,6 +10,8 @@ then make N timed collects and print one JSON line per query with
 - ``walls_s``: the wall of each timed run;
 - ``stage_totals``: the last run's stage totals and job count;
 - ``catalyst``: its analysis / optimization / planning ms;
+- ``codegen``: the generated classes the timed runs compiled and their
+  compile ms (a warm cache compiles none);
 - ``operators``: its executed plan, every operator's nonzero metrics
   (Python-worker time and rows on ``MapInPandas`` and kin);
 - ``stream``: for a streaming query, the progress of its micro-batches.
@@ -49,6 +51,7 @@ from perfbench.probes import (  # noqa: E402
     stage_totals,
 )
 from tutorial_iceberg_spark.plans.explain import (  # noqa: E402
+    codegen_compilations,
     explain_str,
     operator_metrics,
     plan_summary,
@@ -75,6 +78,7 @@ def profile(spark, name: str, sf_dir: str, runs: int = 1, noop: bool = False) ->
     listener = make_stream_listener(spark)
     try:
         walls = []
+        compiles0, compile_ms0 = codegen_compilations(spark)
         for i in range(runs):
             listener.drain()  # keep the last run's progress only
             sc.setJobDescription(f"profile:{name}:{i}")
@@ -85,6 +89,7 @@ def profile(spark, name: str, sf_dir: str, runs: int = 1, noop: bool = False) ->
             walls.append(round(time.perf_counter() - t0, 4))
             end_job = next_job_id(sc)
             sc.setJobDescription(None)
+        compiles, compile_ms = codegen_compilations(spark)
         out = {
             "query": name,
             "sf": sf_dir,
@@ -93,6 +98,10 @@ def profile(spark, name: str, sf_dir: str, runs: int = 1, noop: bool = False) ->
             "stage_totals": {
                 "exec.jobs": end_job - first_job,
                 **stage_totals(sc, first_job, end_job),
+            },
+            "codegen": {
+                "compiles": compiles - compiles0,
+                "compile_ms": round(compile_ms - compile_ms0, 3),
             },
         }
         if not noop:

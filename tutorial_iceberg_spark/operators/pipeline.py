@@ -1154,7 +1154,7 @@ def x_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Kept over its oracle text: its measured localCheckpoint is a CHECKPOINTS entry in tests/test_plans.py.
+# Kept over its oracle text: the text scans documents twice (its cells feed four consumers), the builder once.
 @register(
     "x_crosstab_chi2",
     oracle="""

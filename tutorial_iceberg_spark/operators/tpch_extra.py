@@ -12,9 +12,9 @@ profit expression over a 6-way join (Q9), HAVING-over-scalar-subquery
 decimal equality (Q15), correlated per-group average (Q17), nested
 grouped-HAVING semi-join (Q20), anti-join + scalar-average gate (Q22).
 
-Q7, Q8, Q12, Q20 and Q22 are one text each (``register_sql``): Spark runs
-the oracle's SQL over the testdata views, DuckDB runs it as the oracle. Q9,
-Q11, Q15 and Q17 keep DataFrame builders, each for the reason stated above
+Q7, Q8, Q11, Q12, Q20 and Q22 are one text each (``register_sql``): Spark
+runs the oracle's SQL over the testdata views, DuckDB runs it as the oracle.
+Q9, Q15 and Q17 keep DataFrame builders, each for the reason stated above
 it.
 
 Scale stance, uniform across the module: ONLY schema-bounded tables (nation
@@ -189,10 +189,9 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Kept over its oracle text: its measured localCheckpoint is a CHECKPOINTS entry in tests/test_plans.py.
-@register(
+register_sql(
     "q11_important_parts",
-    oracle=f"""
+    text=f"""
         WITH pv AS (
             SELECT l.l_partkey,
                    SUM({_O_VOL.replace('l_extendedprice', 'l.l_extendedprice').replace('l_discount', 'l.l_discount')}) AS val
@@ -217,55 +216,14 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mean-relative threshold is the same idea made scale-free (no "
     "external SF knowledge, non-degenerate at every size). No partsupp in "
     "the testdata, so value = lineitem revenue by that region's suppliers. "
-    "Spark plan: one shuffle agg by l_partkey; the global mean re-aggs "
-    "the tiny per-part result and broadcasts ONE row back (no second scan "
-    "of the fact table — the per-part agg is checkpointed once per call). "
+    "Spark plan: one shuffle agg by l_partkey; the scalar SUM and COUNT "
+    "subqueries re-agg the tiny per-part result without a second scan of "
+    "the fact table (one lineitem scan in the executed plan). "
     "Both threshold sides "
     "ROUND to scale 2 before the double cast so the compare is exact on "
     "both engines (scale-12 int128->double casts can drift 1 ulp)",
     tags=("join", "agg", "subquery"),
 )
-def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    supp = (
-        load_table(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(
-                load_table(spark, sf_dir, "nation").join(
-                    F.broadcast(
-                        load_table(spark, sf_dir, "region").filter(
-                            F.col("r_name") == "EUROPE"
-                        )
-                    ),
-                    F.col("n_regionkey") == F.col("r_regionkey"),
-                )
-            ),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_suppkey")
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    pv = (
-        li.join(supp, li.l_suppkey == supp.s_suppkey)
-        .groupBy("l_partkey")
-        .agg(F.sum(_vol()).alias("val"))
-        # feeds the threshold AND the mean: sf0.1, 10 A/B pairs, 1.27 s vs
-        # 1.40 s plain (slower in 10 of 10)
-        .localCheckpoint(eager=False)
-    )
-    mean = pv.agg(
-        (F.round(F.sum("val"), 2).cast("double") / F.count("*")).alias("mean_val")
-    )
-    return (
-        pv.crossJoin(F.broadcast(mean))
-        .filter(
-            F.round("val", 2).cast("double") > F.lit(1.5) * F.col("mean_val")
-        )
-        .select(
-            "l_partkey",
-            F.round("val", 2).cast("double").alias("part_value"),
-        )
-        .orderBy(F.desc("part_value"), "l_partkey")
-    )
 
 
 register_sql(
@@ -296,7 +254,7 @@ register_sql(
 )
 
 
-# Kept over its oracle text: its measured localCheckpoint is a CHECKPOINTS entry in tests/test_plans.py.
+# Kept over its oracle text: the text scans lineitem twice (3 file scans vs 2) and is slower, 0.632 s vs 0.468 s median (IQR 0.039 s), 10 sf0.1 pairs.
 @register(
     "q15_top_supplier",
     oracle=f"""

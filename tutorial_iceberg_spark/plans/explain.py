@@ -7,7 +7,8 @@ a scan summary extracting exactly the three things that matter at 100 TB:
 PushedFilters (row-group skipping), ReadSchema (column pruning), and
 PartitionFilters (partition pruning). The ANALYZE half — what each
 operator actually did — is ``operator_metrics`` and ``plan_summary``, both
-read from the executed plan after an action.
+read from the executed plan after an action; ``codegen_compilations``
+counts the generated classes compiled on the way.
 """
 
 from __future__ import annotations
@@ -87,6 +88,21 @@ def operator_metrics(df: DataFrame) -> list[dict]:
         }
         for depth, node in _executed_nodes(df)
     ]
+
+
+def codegen_compilations(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled, total compile ms) by Janino in this JVM since it
+    started: the count of ``CodegenMetrics.METRIC_COMPILATION_TIME`` and
+    ``CodeGenerator.compileTime``. Each is a miss of the codegen class
+    cache. Diff two readings around the work to measure; under
+    ``local[N]`` the executors' compilations are counted too."""
+    jvm = spark._jvm
+    metrics = getattr(jvm, "org.apache.spark.metrics.source.CodegenMetrics")
+    codegen = getattr(jvm, "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator")
+    return (
+        metrics.METRIC_COMPILATION_TIME().getCount(),
+        round(codegen.compileTime() / 1e6, 3),
+    )
 
 
 def plan_summary(df: DataFrame) -> dict:

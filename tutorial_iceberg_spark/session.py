@@ -4,6 +4,12 @@ Scale stance: these defaults are written for a real multi-executor cluster
 (AQE on, skew-join handling on, sensible shuffle partitioning) and merely
 *tested* on local[N]. Nothing here assumes single-node execution.
 
+Static confs go on the builder only, since a running session rejects them:
+``spark.sql.codegen.cache.maxEntries`` (see ``CODEGEN_CACHE_ENTRIES``) sizes
+the whole-stage-codegen class cache to the engine's working set. Every key
+in ``ENGINE_RUNTIME_CONF`` must be runtime-settable, because
+``apply_engine_conf`` skips a key the session refuses.
+
 Reference parity note: the reference runs its analytics on DuckDB
 (":memory:", README.md:568-579) and its lakehouse on Spark 4 + Iceberg
 (README.md:832-848); this factory is the single entry point replacing both.
@@ -46,11 +52,32 @@ ENGINE_RUNTIME_CONF: dict[str, str] = {
     # and strictly fewer shuffled bytes at scale. Result-identical (the
     # merge is order-insensitive; oracle-gated).
     "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition": "true",
+    # Leave the whole-stage-codegen stage id out of each generated class's
+    # name. The class cache is keyed by the source, so with the id in it
+    # the same stage compiles again wherever it gets another number: in
+    # another query, or in the same query when AQE plans its stages in
+    # another order. Without the id, one pass over all 210 registered
+    # queries at sf0.01 compiles 1,951 classes instead of 2,243.
+    "spark.sql.codegen.useIdInClassName": "false",
     # Scan-side pruning; defaults are on in Spark 4 but pinned here because
     # the engine's 100 TB story depends on them.
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.optimizer.dynamicPartitionPruning.enabled": "true",
 }
+
+
+# Static: Spark's LRU cache of compiled whole-stage-codegen classes, one
+# per JVM (under local[N] every task shares it). At its default of 100
+# entries the six llm_corpus ops (about 126 distinct classes per round)
+# evict every class before it is used again: each benchmark round
+# recompiled 49-66 classes, about 9 ms of Janino time each, and the JIT
+# starts every recompiled class cold. One pass over all 210 registered queries
+# at sf0.01 compiles 2,243 distinct classes (1,951 with the stage id out
+# of the class names; 4-core host); the cap is the next power of two
+# above the larger count, and a second pass compiles 22. Bound: each
+# class costs about 75-80 KB of metaspace (71 -> 230 MB over that pass),
+# so a full cache holds at most about 330 MB.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def default_parallelism() -> int:
@@ -64,7 +91,8 @@ def apply_engine_conf(spark: SparkSession) -> SparkSession:
     """Apply the engine's runtime confs to an existing session (idempotent).
 
     Used when the session is created by someone else (the verify driver);
-    every conf in ENGINE_RUNTIME_CONF is runtime-settable.
+    every conf in ENGINE_RUNTIME_CONF is runtime-settable. Static confs
+    (``CODEGEN_CACHE_ENTRIES``) cannot reach such a session.
     """
     for k, v in ENGINE_RUNTIME_CONF.items():
         try:
@@ -96,6 +124,7 @@ def get_spark(
         # a real cluster would use (executors carry the memory there).
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in ENGINE_RUNTIME_CONF.items():
         builder = builder.config(k, v)
