@@ -86,7 +86,7 @@ def _append_commit(location: str, batch: int) -> None:
             operation="append",
             schema_id=md.current_schema_id,
             spec_id=md.current_spec_id,
-            files=base + new,
+            added=base + new,
         )
     )
     md.current_snapshot_id = md.last_snapshot_id
@@ -337,53 +337,50 @@ def test_summary_survives_rename_and_skips_new_columns(cat, spark):
     assert t.scan("key >= 1000").count() == 10
 
 
-def test_lazy_entry_list_survives_every_list_consumer(cat):
-    """Snapshot.files is lazily materialized (r14): every consumer shape
-    the engine or a test might use must route through the overrides —
-    a silent C-level bypass would read an EMPTY list. Hammer the
-    surface against the ground truth."""
+def test_snapshot_files_is_a_plain_list_of_its_manifests_entries(cat):
+    """A snapshot read from disk carries its manifest-list records, and
+    ``files`` is a plain list of exactly those manifests' entries, in
+    record order — counted from the records without loading them."""
     loc = _mk_meta_table(cat.warehouse, "meta_lazy")
     _append_commit(loc, 5)
     _append_commit(loc, 3)
+    snap = M.read_metadata(loc).snapshot()
+    assert snap.file_count == 8 and snap.row_count == 800
+    mdir = M.metadata_dir(loc)
+    want = [f for r in snap.manifests for f in M._load_manifest(mdir, r["ref"])]
+    assert type(snap.files) is list
+    assert snap.files == want and len(want) == 8
+    assert snap.files is snap.files  # loaded once
 
-    def fresh():
-        return M.read_metadata(loc).snapshot().files
 
-    truth = [f.path for f in list(fresh())]
-    assert len(truth) == 8
-    assert isinstance(fresh(), list)  # quacks as a list everywhere
-    assert len(fresh()) == 8
-    assert bool(fresh()) is True
-    assert [f.path for f in fresh()] == truth
-    assert [f.path for f in list(fresh())] == truth
-    assert [f.path for f in [*fresh()]] == truth
-    assert [f.path for f in tuple(fresh())] == truth
-    assert [f.path for f in fresh()[:100]] == truth
-    assert fresh()[0].path == truth[0]
-    assert [f.path for f in sorted(fresh(), key=lambda f: f.path)] == sorted(truth)
-    assert [f.path for f in reversed(fresh())] == truth[::-1]
-    assert {f.path for f in fresh()} == set(truth)
-    plain: list = []
-    plain.extend(fresh())
-    assert len(plain) == 8
-    assert len([0] + fresh()) == 9 and len(fresh() + [0]) == 9
-    two = fresh()
-    assert len(fresh() + two) == 16  # lazy + lazy
-    assert fresh() == list(fresh()) and list(fresh()) == fresh()
-    assert fresh() == fresh()  # lazy == lazy
-    x = [0]
-    x += fresh()
-    assert len(x) == 9
-    assert sum(1 for _ in fresh()) == 8
-    assert fresh().count(fresh()[0]) == 1
-    assert fresh().index(fresh()[0]) == 0
-    import copy as _copy
+def test_concurrent_first_reads_of_files_share_one_list(cat):
+    """Racing first readers of an unloaded snapshot all get the same
+    complete list (a reader must never see a half-built one)."""
+    import sys
+    import threading
 
-    assert len(_copy.copy(fresh())) == 8
-    assert len(_copy.deepcopy(fresh())) == 8
-    import pickle
-
-    assert len(pickle.loads(pickle.dumps(fresh()))) == 8
+    loc = _mk_meta_table(cat.warehouse, "meta_race")
+    _append_commit(loc, 5)
+    _append_commit(loc, 3)
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for _ in range(20):
+            snap = M.read_metadata(loc).snapshot()
+            got: list = []
+            threads = [
+                threading.Thread(target=lambda: got.append(snap.files))
+                for _ in range(8)
+            ]
+            for th in threads:
+                th.start()
+            for th in threads:
+                th.join(timeout=30)
+            assert not any(th.is_alive() for th in threads)
+            assert len(got) == 8
+            assert all(g is got[0] for g in got) and len(got[0]) == 8
+    finally:
+        sys.setswitchinterval(old)
 
 
 def test_pruned_scan_never_loads_pruned_manifest_entries(cat):
@@ -438,17 +435,17 @@ def test_lazy_load_failure_is_retryable_without_duplication(cat):
     _append_commit(loc, 4)
     M._manifest_cache.clear()
     md = M.read_metadata(loc)
-    files = md.snapshot().files
-    # delete the SECOND manifest out from under the lazy list
+    snap = md.snapshot()
+    # delete the SECOND manifest out from under the unloaded snapshot
     mdir = M.metadata_dir(loc)
-    second_ref = files._recs[1]["ref"]
+    second_ref = snap.manifests[1]["ref"]
     victim = os.path.join(mdir, second_ref)
     os.rename(victim, victim + ".hidden")
     with pytest.raises(OSError):
-        len(files)
+        len(snap.files)
     os.rename(victim + ".hidden", victim)
-    assert len(files) == 8  # retry succeeds with NO duplication
-    assert len({f.path for f in files}) == 8
+    assert len(snap.files) == 8  # retry succeeds with NO duplication
+    assert len({f.path for f in snap.files}) == 8
 
 
 def test_rollback_plus_delete_never_resurrects_via_ref_collision(cat, spark):
@@ -623,7 +620,8 @@ def test_merge_clusters_by_partition_keeps_pruning_without_maintenance(cat):
             )
             for j in range(40)
         ]
-        t._new_snapshot(cur_md, "append", t._carried_plus(cur_md, cur, new))
+        carried, files = t._carried_plus(cur, new)
+        t._new_snapshot(cur_md, "append", files, carried=carried)
     touched, total = t.plan_manifests("p = 3")
     # meaningful pruning with NO maintenance call: at most ~1/8 of the
     # clustered manifests plus the handful of fresh unmerged ones

@@ -1,4 +1,4 @@
-"""Tripwire: each commit decision has one home.
+"""Tripwire: each commit decision, and a snapshot's file set, has one home.
 
 Every writer of freshly written data files commits through one local loop
 (``LakeTable._commit_files`` over the one snapshot builder
@@ -8,6 +8,12 @@ second HTTP 409 check or a second ``_carried_plus`` caller is how the
 copies drifted apart before (two of them read every manifest of main on
 each commit while the others carried main by manifest record), so a new
 one must land here with its reason or not at all.
+
+A snapshot's file set lives on ``metadata.Snapshot`` as its carried
+manifest-list records (``manifests``) plus the entries in none of them
+(``added``): only the metadata layer and the snapshot builder construct
+snapshots or read those two fields; everyone else reads ``files`` or the
+record-derived counts.
 """
 
 from __future__ import annotations
@@ -108,3 +114,34 @@ def test_carried_plus_is_called_only_by_the_snapshot_builder():
         and node.func.attr == "_carried_plus"
     ]
     assert sites == [("lakehouse/table.py", "LakeTable._snapshot_files")], sites
+
+
+def test_snapshots_are_constructed_only_by_the_loader_and_the_builder():
+    sites = {
+        (rel, owner)
+        for rel, tree in _modules()
+        for owner, node in _sites(tree)
+        if isinstance(node, ast.Call)
+        and (
+            (isinstance(node.func, ast.Name) and node.func.id == "Snapshot")
+            or (isinstance(node.func, ast.Attribute) and node.func.attr == "Snapshot")
+        )
+    }
+    assert sites == {
+        ("lakehouse/metadata.py", "_from_json"),
+        ("lakehouse/table.py", "LakeTable._new_snapshot"),
+    }, sites
+
+
+def test_manifest_records_are_read_only_by_metadata_and_the_builder():
+    sites = {
+        (rel, owner)
+        for rel, tree in _modules()
+        for owner, node in _sites(tree)
+        if isinstance(node, ast.Attribute)
+        and isinstance(node.ctx, ast.Load)
+        and node.attr in ("manifests", "added")
+        and rel != "lakehouse/metadata.py"
+    }
+    # the append carry: the parent's records by reference, its added entries
+    assert sites <= {("lakehouse/table.py", "LakeTable._carried_plus")}, sites

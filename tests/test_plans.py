@@ -88,7 +88,7 @@ ALLOWED = {
     ],
     "operators/pipeline.py": [
         r"eval_grams\b",  # eval-benchmark 5-grams: eval set is fixed-size
-        r"tot\b",  # 1-row corpus-total aggregate (x_mixture_plan)
+        r"tot\b",  # 1-row corpus-total aggregate (_mixture_rates)
         r"stats\b",  # 1-row global group-size stats (x_skew_profile)
         r"mn\b",  # 1-row min-day scalar (x_retention_bitmap)
         r"rates\.select\(",  # per-lang rate frame: |langs| rows (x_mixture_sample)
@@ -175,9 +175,8 @@ CHECKPOINTS = {
         "q15_top_supplier": (1, "measured: per-supplier agg feeds filter and max"),
     },
     "operators/pipeline.py": {
-        "x_mixture_plan": (1, "measured: census feeds total and rate frame"),
+        "_mixture_rates": (1, "measured: census feeds total and rate frame"),
         "x_crosstab_chi2": (1, "measured: cells feed four consumers"),
-        "x_mixture_sample": (1, "measured: census feeds total and rate frame"),
     },
 }
 

@@ -854,7 +854,7 @@ def x_cooccur_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", spread=True)
     tok = (
         docs.select(
-            "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("t")
+            "doc_id", F.explode(tokens()).alias("t")
         )
         .filter(F.col("t") != "")
         .select("doc_id", F.lower("t").alias("tok"))

@@ -131,10 +131,6 @@ def load_table(
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
     """Register temp views so spark.sql() queries use the same bare table
     names as the DuckDB oracle (FIXTURES.md 'Oracle registration note')."""

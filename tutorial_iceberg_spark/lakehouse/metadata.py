@@ -125,15 +125,55 @@ class DeleteFile:
 
 @dataclass
 class Snapshot:
+    """One table state. Its file set is what Iceberg's manifest list
+    holds: ``manifests`` are the manifest-list records it carries by
+    reference (each with its entry count, row total and pruning summary,
+    sidecars under ``mdir``), and ``added`` are entries in none of them
+    (a snapshot built in this process and not yet read back; empty for
+    one read from disk). Counting needs no entry IO, and ``files`` loads
+    the manifests' entries only on first access."""
+
     snapshot_id: int
     parent_id: int | None
     timestamp_ms: int
     operation: str  # append | overwrite | delete | replace | rollback
     schema_id: int
     spec_id: int
-    files: list[DataFile]
+    manifests: tuple[dict, ...] = ()
+    added: list[DataFile] = field(default_factory=list)
     delete_files: list[DeleteFile] = field(default_factory=list)
     summary: dict[str, Any] = field(default_factory=dict)
+    mdir: str = ""
+    _files: list[DataFile] | None = field(
+        default=None, init=False, repr=False, compare=False
+    )
+
+    @property
+    def files(self) -> list[DataFile]:
+        """Every entry: the manifests' entries, then ``added``. Loaded
+        once, into a local first, so a failed load (a manifest a racing
+        expiry collected) leaves nothing behind and a retry starts over."""
+        if self._files is None:
+            staged = [
+                f for r in self.manifests for f in _load_manifest(self.mdir, r["ref"])
+            ]
+            staged.extend(self.added)
+            with _snapshot_files_lock:
+                if self._files is None:
+                    self._files = staged
+        return self._files
+
+    @property
+    def file_count(self) -> int:
+        return sum(r["count"] for r in self.manifests) + len(self.added)
+
+    @property
+    def row_count(self) -> int:
+        return sum(r["rows"] for r in self.manifests) + sum(f.rows for f in self.added)
+
+
+# concurrent first readers of one snapshot's ``files`` all get one list
+_snapshot_files_lock = threading.Lock()
 
 
 @dataclass
@@ -452,132 +492,11 @@ def _load_manifest_list(mdir: str, fname: str) -> tuple:
 manifest_file_reads = 0
 
 
-class _LazyEntryList(list):
-    """``Snapshot.files`` for format-2 metadata: materializes manifest
-    entries on first ACCESS instead of at parse, so reading table
-    metadata is O(version JSON + manifest lists) and a summary-pruned
-    scan loads only surviving manifests' entries. Subclasses list and
-    overrides every read/mutation entry point to materialize first;
-    CPython 3.11 routes all C-level consumers of non-exact lists
-    (list(), extend, +, json, tuple, set, sort, ==) through these
-    dunders — verified empirically in tests/test_metadata_sharding.py's
-    bypass hammer. Reflected ops (__radd__, __eq__) take priority over
-    a plain-list left operand because this is a list SUBCLASS."""
-
-    def __init__(self, mdir: str, recs, tail=()):
-        super().__init__()
-        self._mdir = mdir
-        self._recs = recs
-        # ``tail``: in-memory entries appended AFTER the carried manifests
-        # — the rec-driven append path (r15) builds the new snapshot's
-        # files as (parent's manifest recs, fresh entries) so a warm
-        # append never materializes the parent's entry lists. Tail entries
-        # are the same objects the caller holds: restamping their
-        # manifest_id before serialization is visible here by design.
-        self._tail = list(tail)
-        self._materialized = False
-        self._lock = threading.Lock()
-
-    def _load(self) -> None:
-        # double-checked under a per-instance lock: a concurrent first
-        # access must never observe a partially-extended list (the flag
-        # flips only AFTER the storage is complete). Staged into a local
-        # first so a mid-load failure (e.g. a manifest a racing expiry
-        # collected — the documented reader-vs-expiry contract) leaves
-        # the storage EMPTY: a retry re-loads from scratch instead of
-        # duplicating the manifests that had already extended.
-        if not self._materialized:
-            with self._lock:
-                if not self._materialized:
-                    staged: list = []
-                    for rec in self._recs:
-                        staged.extend(
-                            _load_manifest(self._mdir, rec["ref"])
-                        )
-                    staged.extend(self._tail)
-                    list.extend(self, staged)
-                    self._materialized = True
-
-    def _via(name, base=list):  # noqa: N805 — descriptor factory
-        fn = getattr(base, name)
-
-        def wrapper(self, *a, **k):
-            self._load()
-            return fn(self, *a, **k)
-
-        wrapper.__name__ = name
-        return wrapper
-
-    for _name in (
-        "__iter__", "__len__", "__getitem__", "__contains__",
-        "__reversed__", "__mul__", "__rmul__",
-        "index", "count", "copy", "sort", "reverse",
-        "append", "insert", "pop", "remove", "clear",
-        "__setitem__", "__delitem__", "__imul__",
-    ):
-        locals()[_name] = _via(_name)
-
-    def _via2(name, base=list):  # noqa: N805 — binary ops: load BOTH sides
-        fn = getattr(base, name)
-
-        def wrapper(self, other, *a, **k):
-            self._load()
-            if isinstance(other, _LazyEntryList):
-                other._load()
-            return fn(self, other, *a, **k)
-
-        wrapper.__name__ = name
-        return wrapper
-
-    for _name in (
-        "__eq__", "__ne__", "__lt__", "__le__", "__gt__", "__ge__",
-        "__add__", "__iadd__", "extend",
-    ):
-        locals()[_name] = _via2(_name)
-    del _name, _via, _via2
-
-    __hash__ = None  # lists are unhashable; defining __eq__ resets this
-
-    def __bool__(self):
-        self._load()
-        return list.__len__(self) > 0
-
-    def __radd__(self, other):
-        self._load()
-        return other + list(self)
-
-    def __reduce_ex__(self, proto):  # pickle/copy as a plain list
-        self._load()
-        return (list, (list(self),))
-
-    def __repr__(self):
-        if not self._materialized:
-            return (
-                f"<lazy manifest entries: {len(self._recs)} manifests"
-                + (f" + {len(self._tail)} fresh>" if self._tail else ">")
-            )
-        return list.__repr__(self)
-
-
 def entry_count(files) -> int:
-    """len(snapshot.files) WITHOUT materializing a lazy entry list:
-    manifest-list records carry each manifest's entry count, so the
-    total is O(manifests) arithmetic, not O(entries) manifest IO.
-    (ADVICE r14: the serializer's ``len(s.files)`` materialized every
-    retained snapshot on every commit — and turned a racing
-    expire_snapshots into an uncaught FileNotFoundError.)"""
-    if isinstance(files, _LazyEntryList) and not files._materialized:
-        return sum(r["count"] for r in files._recs) + len(files._tail)
+    """Number of entries in a snapshot's file list (``len(snap.files)``);
+    ``Snapshot.file_count`` gives the same from the manifest-list records
+    without loading any manifest."""
     return len(files)
-
-
-def entry_rows(files) -> int:
-    """sum(f.rows) without materializing — same contract as entry_count."""
-    if isinstance(files, _LazyEntryList) and not files._materialized:
-        return sum(r["rows"] for r in files._recs) + sum(
-            f.rows for f in files._tail
-        )
-    return sum(f.rows for f in files)
 
 
 def _group_by_manifest(entries) -> dict[int, list[DataFile]]:
@@ -636,12 +555,7 @@ def _to_json(md: TableMetadata, mdir: str) -> str:
                 "delete_files": [asdict(df) for df in s.delete_files],
                 "summary": s.summary,
                 "manifest_list": list_ref,
-                # entry_count, NOT len(): len() on a lazy list
-                # materializes — O(table) read IO per commit, and a
-                # FileNotFoundError if a racing expire_snapshots
-                # collected a historical manifest since this writer's
-                # load (ADVICE r14 medium).
-                "count": entry_count(s.files),
+                "count": s.file_count,
             }
         )
     d["snapshots"] = snaps_out
@@ -673,37 +587,30 @@ def _write_snapshot_list(md: TableMetadata, mdir: str, s: Snapshot) -> str:
             }
         except OSError:
             parent_recs = {}
-    # Rec-driven fast path (r15): a snapshot built by the O(new-files)
-    # append carries (parent manifest recs, fresh tail) unmaterialized.
-    # Reuse is sound iff every carried rec is IDENTICALLY present in the
-    # parent's own list (same id, ref, count) and no tail entry shares a
-    # carried id — checked against the parent records directly, so
-    # serializing the snapshot costs O(manifests + fresh entries) with
-    # ZERO entry reads. Any mismatch falls through to grouping the
-    # materialized entries.
-    lazy = s.files
-    if (
-        isinstance(lazy, _LazyEntryList)
-        and not lazy._materialized
-        and all(
-            (p := parent_recs.get(r["manifest_id"])) is not None
+    # A carried record is reused as is (no entry read) when the parent
+    # lists the identical record and no added entry shares its id; any
+    # other carried record's entries join the added groups, which reuse
+    # the parent's record for their id when the counts agree.
+    added = list(s.added)
+    added_ids = {f.manifest_id for f in added}
+    carried = []
+    for r in s.manifests:
+        p = parent_recs.get(r["manifest_id"])
+        if (
+            p is not None
             and p["ref"] == r["ref"]
             and p["count"] == r["count"]
-            for r in lazy._recs
-        )
-        and not {f.manifest_id for f in lazy._tail}
-        & {r["manifest_id"] for r in lazy._recs}
-    ):
-        carried = list(lazy._recs)
-        fresh = _group_by_manifest(lazy._tail)
-    else:
-        carried = []
-        fresh = _group_by_manifest(s.files)
-        for mid in list(fresh):
-            prec = parent_recs.get(mid)
-            if prec is not None and prec["count"] == len(fresh[mid]):
-                carried.append(prec)
-                del fresh[mid]
+            and r["manifest_id"] not in added_ids
+        ):
+            carried.append(r)
+        else:
+            added.extend(_load_manifest(mdir, r["ref"]))
+    fresh = _group_by_manifest(added)
+    for mid in list(fresh):
+        prec = parent_recs.get(mid)
+        if prec is not None and prec["count"] == len(fresh[mid]):
+            carried.append(prec)
+            del fresh[mid]
     recs = carried + [
         _manifest_rec(md, mid, write_manifest(mdir, mid, g), g)
         for mid, g in fresh.items()
@@ -729,16 +636,15 @@ def _from_json(text: str, mdir: str) -> TableMetadata:
         list_ref = s.pop("manifest_list")
         s.pop("count")
         loaded_lists[s["snapshot_id"]] = list_ref
-        # LAZY: entries load on first access (counts and summaries come
-        # from the list records, so bookkeeping needs no entry IO) —
-        # reading metadata is O(headers + lists), and a summary-pruned
-        # scan loads only surviving manifests
-        files = _LazyEntryList(mdir, _load_manifest_list(mdir, list_ref))
+        # entries stay on disk until ``files`` is read: counts and
+        # summaries come from the list records, and a summary-pruned scan
+        # loads only the surviving manifests
         snaps.append(
             Snapshot(
                 **{
                     **s,
-                    "files": files,
+                    "manifests": _load_manifest_list(mdir, list_ref),
+                    "mdir": mdir,
                     "delete_files": [DeleteFile(**f) for f in s["delete_files"]],
                 }
             )

@@ -1102,11 +1102,9 @@ def lake_hour_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
         "ts >= TIMESTAMP '2024-01-10 03:00:00' "
         "AND ts < TIMESTAMP '2024-01-10 15:00:00'"
     )
-    from tutorial_iceberg_spark.lakehouse import metadata as _M
-
     snap = md.snapshot()
     cands = t._candidates(md, snap, pred)
-    total = _M.entry_count(snap.files)
+    total = snap.file_count
     if not 0 < len(cands) < total:
         raise AssertionError(
             f"hour-range pruning degenerated: {len(cands)} candidates of "

@@ -42,11 +42,32 @@ two racing POST commits produce exactly one winner and one 409.
 from __future__ import annotations
 
 import json
+import os
+import re
 import threading
 import urllib.request
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from tutorial_iceberg_spark.lakehouse import metadata as M
 from tutorial_iceberg_spark.lakehouse.catalog import LakeCatalog
+from tutorial_iceberg_spark.lakehouse.table import LakeTable
+
+
+def _staged_entries(loc: str, ref: str) -> tuple:
+    """The entries of the one unstamped manifest a REST writer staged
+    under ``loc``'s metadata dir. ``ref`` is name-validated
+    (content-hash shape) so a request cannot path-traverse the metadata
+    dir; any failed check raises ValueError, which the handler answers
+    with 400."""
+    if not re.fullmatch(r"manifest-[0-9a-f]{40}\.json", ref):
+        raise ValueError(f"bad manifest ref {ref!r}")
+    try:
+        entries = M._load_manifest(M.metadata_dir(loc), ref)
+    except OSError:
+        raise ValueError(f"manifest {ref} not staged") from None
+    if any(e.manifest_id != 0 for e in entries):
+        raise ValueError("staged manifest must be unstamped (id 0)")
+    return entries
 
 
 def _safe_name(part: str) -> bool:
@@ -55,9 +76,6 @@ def _safe_name(part: str) -> bool:
     like '..', absolute paths, or separators would escape the warehouse
     and create/commit metadata anywhere the process can write). Allows
     the identifier alphabet every catalog name in this repo uses."""
-    import os
-    import re
-
     if not isinstance(part, str) or not part or part in (".", ".."):
         return False
     if os.sep in part or (os.altsep and os.altsep in part):
@@ -66,8 +84,6 @@ def _safe_name(part: str) -> bool:
 
 
 def _namespaces(cat: LakeCatalog) -> list[str]:
-    import os
-
     return sorted(
         d
         for d in os.listdir(cat.warehouse)
@@ -76,8 +92,6 @@ def _namespaces(cat: LakeCatalog) -> list[str]:
 
 
 def _tables(cat: LakeCatalog, ns: str) -> list[str]:
-    import os
-
     base = os.path.join(cat.warehouse, ns)
     if not os.path.isdir(base):
         return []
@@ -150,10 +164,6 @@ class _Handler(BaseHTTPRequestHandler):
         return json.loads(self.rfile.read(n) or b"{}")
 
     def do_POST(self) -> None:  # noqa: N802 (http.server contract)
-        import os
-
-        from tutorial_iceberg_spark.lakehouse import metadata as M
-
         cat = self.catalog
         parts = [p for p in self.path.split("?")[0].split("/") if p]
         try:
@@ -270,12 +280,6 @@ class _Handler(BaseHTTPRequestHandler):
                         # O(touched manifests + staged entries), never
                         # O(table) — the same cost class the rec-driven
                         # append achieved.
-                        import re
-
-                        from tutorial_iceberg_spark.lakehouse.table import (
-                            LakeTable,
-                        )
-
                         removed_bm = upd.get("removed_by_manifest")
                         if not (
                             isinstance(removed_bm, dict)
@@ -293,29 +297,11 @@ class _Handler(BaseHTTPRequestHandler):
                                 "positive manifest ids to path lists"
                             })
                             return
-                        entries: tuple = ()
-                        if action == "overwrite-files":
-                            ref = upd.get("manifest", "")
-                            if not re.fullmatch(
-                                r"manifest-[0-9a-f]{40}\.json", ref
-                            ):
-                                self._send(400, {"error": f"bad manifest ref {ref!r}"})
-                                return
-                            try:
-                                entries = M._load_manifest(
-                                    M.metadata_dir(loc), ref
-                                )
-                            except OSError:
-                                self._send(
-                                    400, {"error": f"manifest {ref} not staged"}
-                                )
-                                return
-                            if any(e.manifest_id != 0 for e in entries):
-                                self._send(
-                                    400,
-                                    {"error": "staged manifest must be unstamped (id 0)"},
-                                )
-                                return
+                        entries = (
+                            _staged_entries(loc, upd.get("manifest", ""))
+                            if action == "overwrite-files"
+                            else ()
+                        )
                         cur = md.snapshot()
                         if cur is None:
                             self._send(409, {"error": "table has no snapshot"})
@@ -368,18 +354,14 @@ class _Handler(BaseHTTPRequestHandler):
                             kept_tail.extend(
                                 e for e in ment if e.path not in touched[mid]
                             )
-                        files = M._LazyEntryList(
-                            mdir,
-                            tuple(untouched_recs),
-                            tail=kept_tail + list(entries),
-                        )
                         t._new_snapshot(
                             md,
                             "overwrite" if action == "overwrite-files" else "delete",
-                            files,
+                            kept_tail + list(entries),
                             [],
                             {"via": "rest-catalog", "op": action},
                             commit=False,
+                            carried=tuple(untouched_recs),
                         )
                     elif action == "append-files":
                         # the engine-as-REST-writer path (r14 verdict
@@ -392,27 +374,7 @@ class _Handler(BaseHTTPRequestHandler):
                         # add-snapshot update. The sidecar ref is
                         # name-validated (content-hash shape) so the
                         # request cannot path-traverse the metadata dir.
-                        import re
-
-                        ref = upd.get("manifest", "")
-                        if not re.fullmatch(r"manifest-[0-9a-f]{40}\.json", ref):
-                            self._send(400, {"error": f"bad manifest ref {ref!r}"})
-                            return
-                        from tutorial_iceberg_spark.lakehouse.table import (
-                            LakeTable,
-                        )
-
-                        try:
-                            entries = M._load_manifest(M.metadata_dir(loc), ref)
-                        except OSError:
-                            self._send(400, {"error": f"manifest {ref} not staged"})
-                            return
-                        if any(e.manifest_id != 0 for e in entries):
-                            self._send(
-                                400,
-                                {"error": "staged manifest must be unstamped (id 0)"},
-                            )
-                            return
+                        entries = _staged_entries(loc, upd.get("manifest", ""))
                         # metadata-only (no Spark on the server), and the
                         # rec-driven carry (r15) keeps the server-side
                         # append commit O(staged entries), never O(table)
@@ -633,8 +595,6 @@ def rest_append(
     sink's batch id); ``skip_if`` is rest_commit's replay check.
     ``table`` is the local LakeTable view over the same storage (used
     only to stage files and read fresh state between retries)."""
-    from tutorial_iceberg_spark.lakehouse import metadata as M
-
     md = table.meta
     files = table._write_files(table._align(df, md.schema()), md)
     ref = M.write_manifest(M.metadata_dir(table.location), 0, files)
@@ -669,8 +629,6 @@ def rest_merge(
     rewrote) rebases through rest_commit: the merge re-plans against
     fresh state and retries; a losing attempt's staged files are orphans
     the sweep collects, exactly like a losing native optimistic writer."""
-    from tutorial_iceberg_spark.lakehouse import metadata as M
-
     def plan(md) -> list[dict]:
         snap = md.snapshot()
         untouched, result = table._merge_compute(md, source, on, **merge_kwargs)

@@ -23,12 +23,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tutorial_iceberg_spark.functions.text import tokens
 from tutorial_iceberg_spark.io import load_table
 from tutorial_iceberg_spark.registry import register
-
-
-def words(col: str = "text") -> Column:
-    return F.split(F.trim(F.col(col)), r"\s+")
 
 
 def shingles(col: str = "text", n: int = 3) -> Column:
@@ -38,7 +35,7 @@ def shingles(col: str = "text", n: int = 3) -> Column:
     Docs with < n words produce an EMPTY array. The guard matters: Spark's
     ``sequence(1, 0)`` is the DESCENDING [1, 0] (not empty like DuckDB's
     generate_series), and slice(w, 0, n) then errors at runtime."""
-    w = words(col)
+    w = tokens(col)
     return F.when(
         F.size(w) >= n,
         F.array_distinct(
@@ -135,7 +132,7 @@ def simhash_frame(spark: SparkSession, docs: DataFrame) -> DataFrame:
     # repartition before the token-explode fan-out (see minhash_signatures)
     n_part = docs.sparkSession.sparkContext.defaultParallelism
     tok = docs.repartition(n_part, F.col("doc_id")).select(
-        "doc_id", F.explode(F.array_distinct(words())).alias("token")
+        "doc_id", F.explode(F.array_distinct(tokens())).alias("token")
     )
     th = tok.select("doc_id", hash64(F.col("token")).alias("h"))
     pos = spark.range(0, 60).select(F.col("id").cast("int").alias("pos"))

@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tutorial_iceberg_spark.functions.text import tokens
 from tutorial_iceberg_spark.io import load_table
 from tutorial_iceberg_spark.registry import register
 
@@ -616,7 +617,7 @@ def x_semantic_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").alias("doc_id"), F.col("comp").alias("component")
     )
     keep = F.col("doc_id") == F.col("component")
-    ntok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    ntok = F.size(tokens())
     return (
         docs.join(comp, "doc_id")
         .select("lang", keep.alias("keep"), ntok.alias("ntok"))

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from tutorial_iceberg_spark.functions.text import tokens
 from tutorial_iceberg_spark.io import load_table
 from tutorial_iceberg_spark.registry import register
 
@@ -64,7 +65,7 @@ LANG_ALLOW = ("de", "en", "es", "fr")
 )
 def x_pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    ntok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    ntok = F.size(tokens())
     npunct = F.size(F.regexp_extract_all(F.col("text"), F.lit(r"[.,;:!?]"), 0))
     gated = (
         docs.select("doc_id", "lang", "source", "text", ntok.alias("ntok"))
@@ -287,7 +288,7 @@ def x_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized = docs.select(
         "doc_id",
         F.pmod(F.col("doc_id"), F.lit(N_SHARDS)).alias("shard"),
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("ntok"),
+        F.size(tokens()).alias("ntok"),
     )
     w = (
         Window.partitionBy("shard")
@@ -368,6 +369,39 @@ def x_shard_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 MIX_WEIGHTS = {"en": 0.5, "de": 0.15, "es": 0.15, "fr": 0.1, "zh": 0.1}
 
 
+def _mixture_rates(docs: DataFrame) -> DataFrame:
+    """(lang, n_docs, n_tokens, target_weight, target_tokens, sample_rate)
+    per language: its MIX_WEIGHTS share of the corpus token total and the
+    sampling rate that hits it (rate > 1 means oversampling)."""
+    # stats feeds BOTH the total and the rate frame; without
+    # materialization the corpus tokenize census runs twice. |langs|
+    # rows. sf0.1, medians of 3 interleaved runs, executor run time with
+    # vs plain: x_mixture_plan 0.37 s vs 0.72 s, x_mixture_sample 0.52 s
+    # vs 1.08 s (documents records read 10k vs 15k).
+    stats = (
+        docs.select("lang", F.size(tokens()).alias("ntok"))
+        .groupBy("lang")
+        .agg(F.count("*").alias("n_docs"), F.sum("ntok").alias("n_tokens"))
+        .localCheckpoint(eager=False)
+    )
+    tot = stats.agg(F.sum("n_tokens").alias("total_tokens"))
+    (first, first_wt), *middle, (_, last_wt) = MIX_WEIGHTS.items()
+    w = F.when(F.col("lang") == first, F.lit(first_wt))
+    for lang_key, wt in middle:
+        w = w.when(F.col("lang") == lang_key, F.lit(wt))
+    w = w.otherwise(F.lit(last_wt))
+    target = w * F.col("total_tokens").cast("double")
+    rate = target / F.col("n_tokens").cast("double")
+    return stats.crossJoin(F.broadcast(tot)).select(
+        "lang",
+        "n_docs",
+        "n_tokens",
+        w.alias("target_weight"),
+        target.alias("target_tokens"),
+        rate.alias("sample_rate"),
+    )
+
+
 @register(
     "x_mixture_plan",
     oracle=r"""
@@ -420,34 +454,9 @@ MIX_WEIGHTS = {"en": 0.5, "de": 0.15, "es": 0.15, "fr": 0.1, "zh": 0.1}
 )
 def x_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    ntok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
-    # stats feeds BOTH the total and the rate frame; without
-    # materialization the corpus tokenize census runs twice. |langs|
-    # rows: sf0.1, 10 A/B pairs, 0.38 s vs 0.43 s plain (slower in 9/10).
-    stats = (
-        docs.select("lang", ntok.alias("ntok"))
-        .groupBy("lang")
-        .agg(F.count("*").alias("n_docs"), F.sum("ntok").alias("n_tokens"))
-        .localCheckpoint(eager=False)
-    )
-    tot = stats.agg(F.sum("n_tokens").alias("total_tokens"))
-    w = F.when(F.col("lang") == "en", F.lit(0.5))
-    for lang_key, wt in (("de", 0.15), ("es", 0.15), ("fr", 0.1)):
-        w = w.when(F.col("lang") == lang_key, F.lit(wt))
-    w = w.otherwise(F.lit(0.1))
-    target = w * F.col("total_tokens").cast("double")
-    rate = target / F.col("n_tokens").cast("double")
     return (
-        stats.crossJoin(F.broadcast(tot))
-        .select(
-            "lang",
-            "n_docs",
-            "n_tokens",
-            w.alias("target_weight"),
-            target.alias("target_tokens"),
-            rate.alias("sample_rate"),
-            F.ceil(rate).cast("int").alias("epochs"),
-        )
+        _mixture_rates(docs)
+        .withColumn("epochs", F.ceil("sample_rate").cast("int"))
         .orderBy("lang")
     )
 
@@ -493,7 +502,7 @@ CHUNK_STRIDE = 48  # overlap = CHUNK_TOKENS - CHUNK_STRIDE = 16 tokens
 def x_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", spread=True)
     overlap = CHUNK_TOKENS - CHUNK_STRIDE
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens()
     t = docs.select(
         "doc_id", toks.alias("toks"), F.size(toks).alias("n")
     )
@@ -648,7 +657,7 @@ def x_dedup_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     S = SPAN_TOKENS
     spans = docs.select(
         "doc_id",
-        F.split(F.trim(F.col("text")), r"\s+").alias("toks"),
+        tokens().alias("toks"),
     ).select(
         "doc_id",
         F.posexplode(
@@ -1481,28 +1490,10 @@ def x_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    ntok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
-    # stats feeds BOTH the total and the rate frame; without
-    # materialization the corpus tokenize census runs twice. |langs|
-    # rows: sf0.1, 10 A/B pairs, 0.56 s vs 0.67 s plain (slower in 10/10).
-    stats = (
-        docs.select("lang", ntok.alias("ntok"))
-        .groupBy("lang")
-        .agg(F.count("*").alias("n_docs"), F.sum("ntok").alias("n_tokens"))
-        .localCheckpoint(eager=False)
-    )
-    tot = stats.agg(F.sum("n_tokens").alias("total_tokens"))
-    w = F.when(F.col("lang") == "en", F.lit(0.5))
-    for lang_key, wt in (("de", 0.15), ("es", 0.15), ("fr", 0.1)):
-        w = w.when(F.col("lang") == lang_key, F.lit(wt))
-    w = w.otherwise(F.lit(0.1))
-    rate = (w * F.col("total_tokens").cast("double")) / F.col(
-        "n_tokens"
-    ).cast("double")
-    rates = stats.crossJoin(F.broadcast(tot)).select(
+    rates = _mixture_rates(docs).select(
         "lang",
         "n_docs",
-        F.least(rate, F.lit(1.0)).alias("keep_rate"),
+        F.least(F.col("sample_rate"), F.lit(1.0)).alias("keep_rate"),
     )
     num = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
@@ -1560,7 +1551,7 @@ def x_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    ntok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    ntok = F.size(tokens())
     return docs.agg(
         F.count("*").alias("n_docs"),
         F.sum(ntok).cast("bigint").alias("n_tokens"),
